@@ -551,3 +551,79 @@ def test_split_valid_bigint_keys_exact(spark, tmp_path):
     clean, bad = runner.split_valid(df, "t", "k")
     assert {r["k"] for r in bad.collect()} == {big + 1}
     assert {r["k"] for r in clean.collect()} == {big}
+
+
+def test_wide_level_runs_every_stage_and_traps_one(spark, tmp_path):
+    """One dependency level with more stages than cores, one of which
+    raises: every other stage still records 'done' and the failing one
+    'error' (each runnable stage of a level gets its own thread). A short
+    switch interval interleaves the stage threads' updates of the shared
+    result; a lost update would drop a verdict."""
+    import os
+    import sys
+
+    from unify_spark.operators.base import Constraint
+    from unify_spark.operators.constraints import RangeConstraint
+
+    class Boom(Constraint):
+        name = "boom:t"
+        table = "t"
+
+        def violations(self, tables, ctx):
+            raise RuntimeError("kapow")
+
+    n = max(os.cpu_count() or 1, 8) + 2
+    df = spark.createDataFrame(
+        [tuple(float(i) for i in range(n)) + ("p1",)],
+        [f"c{i}" for i in range(n)] + ["part_date"],
+    )
+    ranges = [RangeConstraint("t", f"c{i}", min_value=0.0) for i in range(n)]
+    runner = ValidationRunner(spark, str(tmp_path), ValidationContext(run_id="wide"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        res = runner.run({"t": df}, ranges[: n // 2] + [Boom()] + ranges[n // 2 :])
+    finally:
+        sys.setswitchinterval(interval)
+    assert res.errors == {"boom:t": "RuntimeError: kapow"}
+    assert res.verdicts == {(c.name, "p1"): True for c in ranges}
+    stages = {
+        r["constraint"]: r["status"]
+        for r in runner.audit.read().filter("part IS NULL").collect()
+    }
+    assert stages == {**{c.name: "done" for c in ranges}, "boom:t": "error"}
+
+
+def test_fingerprint_stats_equal_table_stats(spark, audio_tables, tmp_path):
+    """run_incremental's stats read off the fingerprints equal the
+    runners' own (row_count, partition universe) pre-pass, for partitioned
+    (clips, transcript_map) and unpartitioned (codec_domain) tables."""
+    from unify_spark.plans.incremental import collect_fingerprints, fingerprint_stats
+
+    runner = ValidationRunner(spark, str(tmp_path), ValidationContext(run_id="fs"))
+    stats = fingerprint_stats(audio_tables, collect_fingerprints(audio_tables))
+    assert stats == {t: runner._table_stats(audio_tables, t) for t in audio_tables}
+    assert stats["clips"][1] and not stats["codec_domain"][1]
+
+
+@pytest.mark.parametrize("mode", ["run", "run_fused", "run_incremental"])
+def test_null_partition_value_rejected(spark, tmp_path, mode):
+    """Audit rows reserve part=NULL for stage markers, so a table with a
+    NULL partition value is refused with a ValueError naming the table and
+    the partition column (it used to crash sorting the universe)."""
+    from unify_spark.operators.constraints import RangeConstraint
+    from unify_spark.plans.incremental import save_fingerprints
+
+    df = spark.createDataFrame(
+        [("a", 1.0, "p1"), ("b", 2.0, None), ("c", 3.0, "p2")],
+        "clip_id string, val double, part_date string",
+    )
+    runner = ValidationRunner(spark, str(tmp_path / "out"), ValidationContext(run_id="n"))
+    args = ({"t": df}, [RangeConstraint("t", "val", min_value=0.0)])
+    with pytest.raises(ValueError, match=r"'t'.*'part_date'"):
+        if mode == "run_incremental":
+            base = str(tmp_path / "base")
+            save_fingerprints(base, {"t": {}})
+            runner.run_incremental(*args, base, fused=False)
+        else:
+            getattr(runner, mode)(*args)

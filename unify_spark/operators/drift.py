@@ -4,11 +4,12 @@ partitions").
 
 Scale design (SURVEY §4.3): Spark has no built-in two-sample tests, but the
 sufficient statistic is a tiny histogram — ``groupBy(part, bucket).count``
-produces (n_parts × n_bins) rows regardless of input size. Both the
-histogram AND the KS/PSI statistics are computed as one lazy DataFrame plan
-(window cumsums over buckets, per-partition aggregates), so the whole
-constraint fuses into the same Spark job as every other constraint — no
-driver-side collect in the hot path, no raw rows ever leave the executors.
+produces (n_parts × n_bins) rows regardless of input size. The histogram is
+the one distributed aggregation; the KS/PSI statistics are scored from it by
+one vectorized pandas call over a dense parts × bins matrix (histogram →
+one-task matrix score). The whole constraint stays a lazy plan, so it fuses
+into the same Spark job as every other constraint — no driver-side collect
+in the hot path, no raw rows ever leave the executors.
 
 Each partition is compared against the pooled rest-of-table distribution; a
 partition fails if PSI (add-1 smoothed) > psi_threshold or KS > a
@@ -20,9 +21,56 @@ allowed-set results
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from unify_spark.operators.base import Constraint, ValidationContext, make_violations
+
+
+def _score_histogram(
+    pdf,
+    n_bins: int,
+    psi_threshold: float,
+    ks_threshold: float,
+    ks_c_alpha: float,
+    vs_baseline: bool,
+):
+    """Score (part, bucket, n, is_ref) histogram rows: one row of (part,
+    psi, ks, ks_crit, failed) per partition, parts sorted. q is the
+    column total minus the partition, or the pooled ``is_ref`` rows."""
+    import numpy as np
+    import pandas as pd
+
+    cur = pdf[~pdf["is_ref"]]
+    codes, parts = pd.factorize(cur["part"], sort=True, use_na_sentinel=False)
+    m = np.zeros((len(parts), n_bins), dtype=np.int64)
+    np.add.at(m, (codes, cur["bucket"].to_numpy()), cur["n"].to_numpy())
+    if vs_baseline:
+        ref = pdf[pdf["is_ref"]]
+        b = ref["bucket"].to_numpy()
+        keep = (b >= 0) & (b < n_bins)  # bins outside this grid never match
+        pooled = np.zeros(n_bins, dtype=np.int64)
+        np.add.at(pooled, b[keep], ref["n"].to_numpy()[keep])
+        q = np.broadcast_to(pooled, m.shape)
+    else:
+        q = m.sum(axis=0) - m
+    n1 = m.sum(axis=1).astype(np.float64)
+    n2 = q.sum(axis=1).astype(np.float64)
+    # add-1 smoothed densities (empty tail bins otherwise dominate PSI)
+    p_d = (m + 1.0) / (n1 + n_bins)[:, None]
+    q_d = (q + 1.0) / (n2 + n_bins)[:, None]
+    psi = ((p_d - q_d) * np.log(p_d / q_d)).sum(axis=1)
+    cum_p = np.cumsum(m, axis=1) / np.maximum(n1, 1.0)[:, None]
+    cum_q = np.cumsum(q, axis=1) / np.maximum(n2, 1.0)[:, None]
+    ks = np.abs(cum_p - cum_q).max(axis=1, initial=0.0)
+    empty = n2 == 0
+    with np.errstate(divide="ignore"):
+        crit = np.maximum(ks_threshold, ks_c_alpha * np.sqrt(1.0 / n1 + 1.0 / n2))
+    failed = ((psi > psi_threshold) | (ks > crit)) & ~empty
+    # NaN crosses the Arrow boundary as null
+    psi[empty] = ks[empty] = crit[empty] = np.nan
+    return pd.DataFrame(
+        {"part": parts, "psi": psi, "ks": ks, "ks_crit": crit, "failed": failed}
+    )
 
 
 class DriftConstraint(Constraint):
@@ -82,68 +130,61 @@ class DriftConstraint(Constraint):
         )
 
     def scores_plan(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        """Lazy (part, psi, ks, ks_crit, failed) plan over the histogram.
+        """Lazy (part, psi, ks, ks_crit, failed) plan: each partition against
+        the pooled rest of the table, rest_n(bucket) = total_n(bucket) −
+        part_n (see :meth:`_score`)."""
+        return self._score(self.histogram(tables[self.table], ctx.part_col))
 
-        part vs rest-of-table: rest_n(bucket) = total_n(bucket) − part_n.
-        PSI with add-1 smoothing; KS = max |cumdist diff| via window cumsum;
-        KS critical value = c·sqrt((n1+n2)/(n1·n2)) so the verdict is stable
-        from 10^3-row test partitions to 10^9-row production partitions.
+    def _score(self, hist: DataFrame, ref: DataFrame | None = None) -> DataFrame:
+        """(part, psi, ks, ks_crit, failed) from the (part, bucket, n)
+        histogram, scored by ONE pandas call over the whole histogram
+        (n_parts × n_bins rows whatever the table size, so a single task
+        holds it at any scale). q is the rest of the table, or the pooled
+        ``ref`` (bucket, n) rows of a baseline when given.
+
+        PSI with add-1 smoothing; KS = max |cumdist diff|; KS critical value
+        = c·sqrt((n1+n2)/(n1·n2)) so the verdict is stable from 10^3-row test
+        partitions to 10^9-row production partitions. An empty q (a
+        one-partition table, an empty baseline) has nothing to compare
+        against: null psi/ks/ks_crit, not failed.
         """
-        df = tables[self.table]
-        hist = self.histogram(df, ctx.part_col)
-        # densify: every (part, bucket) cell so windows see all bins
-        parts = hist.select("part").distinct()
-        buckets = hist.sparkSession.range(self.n_bins).select(
-            F.col("id").cast("long").alias("bucket")
-        )
-        dense = (
-            parts.crossJoin(F.broadcast(buckets))
-            .join(hist, on=["part", "bucket"], how="left")
-            .fillna(0, subset=["n"])
-        )
-        w_tot = Window.partitionBy("bucket")
-        dense = dense.withColumn("tot_n", F.sum("n").over(w_tot)).withColumn(
-            "rest_n", F.col("tot_n") - F.col("n")
-        )
-        w_part = Window.partitionBy("part")
-        dense = (
-            dense.withColumn("part_total", F.sum("n").over(w_part))
-            .withColumn("rest_total", F.sum("rest_n").over(w_part))
-        )
-        # add-1 smoothed densities (empty tail bins otherwise dominate PSI)
-        p = (F.col("n") + 1.0) / (F.col("part_total") + self.n_bins)
-        q = (F.col("rest_n") + 1.0) / (F.col("rest_total") + self.n_bins)
-        psi_term = (p - q) * F.log(p / q)
-        w_cum = Window.partitionBy("part").orderBy("bucket").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        cum_p = F.sum("n").over(w_cum) / F.greatest(F.col("part_total"), F.lit(1))
-        cum_q = F.sum("rest_n").over(w_cum) / F.greatest(F.col("rest_total"), F.lit(1))
-        ks_term = F.abs(cum_p - cum_q)
-        scored = dense.select(
+        part_type = hist.schema["part"].dataType
+        rows = hist.select(
             "part",
-            "part_total",
-            "rest_total",
-            psi_term.alias("psi_term"),
-            ks_term.alias("ks_term"),
-        ).groupBy("part").agg(
-            F.sum("psi_term").alias("psi"),
-            F.max("ks_term").alias("ks"),
-            F.first("part_total").alias("n1"),
-            F.first("rest_total").alias("n2"),
+            F.col("bucket").cast("long").alias("bucket"),
+            F.col("n").cast("long").alias("n"),
+            F.lit(False).alias("is_ref"),
         )
-        ks_crit = F.greatest(
-            F.lit(self.ks_threshold),
-            F.lit(self.ks_c_alpha)
-            * F.sqrt((F.col("n1") + F.col("n2")) / (F.col("n1") * F.col("n2"))),
+        if ref is not None:
+            rows = rows.unionByName(
+                ref.select(
+                    F.lit(None).cast(part_type).alias("part"),
+                    F.col("bucket").cast("long").alias("bucket"),
+                    F.col("n").cast("long").alias("n"),
+                    F.lit(True).alias("is_ref"),
+                )
+            )
+        schema = T.StructType(
+            [
+                T.StructField("part", part_type, True),
+                T.StructField("psi", T.DoubleType(), True),
+                T.StructField("ks", T.DoubleType(), True),
+                T.StructField("ks_crit", T.DoubleType(), True),
+                T.StructField("failed", T.BooleanType(), False),
+            ]
         )
-        return scored.select(
-            "part",
-            "psi",
-            "ks",
-            ks_crit.alias("ks_crit"),
-            ((F.col("psi") > self.psi_threshold) | (F.col("ks") > ks_crit)).alias("failed"),
+        params = (
+            self.n_bins,
+            self.psi_threshold,
+            self.ks_threshold,
+            self.ks_c_alpha,
+            ref is not None,
         )
+
+        def score(pdf):
+            return _score_histogram(pdf, *params)
+
+        return rows.groupBy().applyInPandas(score, schema)
 
     def partition_scores(
         self, tables: dict[str, DataFrame], ctx: ValidationContext
@@ -186,69 +227,15 @@ class DriftConstraint(Constraint):
     ) -> DataFrame:
         """(part, psi, ks, ks_crit, failed) of each CURRENT partition against
         the pooled BASELINE distribution (a prior run's persisted
-        histogram_rows). Same PSI/KS machinery as the in-run path; the
-        baseline side is a ≤ n_bins-row broadcast."""
+        histogram_rows). Same scorer as the in-run path (:meth:`_score`)
+        with q = the baseline's pooled histogram; the baseline side is
+        metadata-sized (≤ n_parts × n_bins rows)."""
         if self.bounds is None:
             raise ValueError("cross-run drift needs contract bounds (see histogram_rows)")
-        cur = self.histogram(tables[self.table], ctx.part_col)
-        ref = (
-            baseline.filter(
-                (F.col("table") == self.table) & (F.col("column") == self.column)
-            )
-            .groupBy("bucket")
-            .agg(F.sum("n").alias("ref_n"))
+        ref = baseline.filter(
+            (F.col("table") == self.table) & (F.col("column") == self.column)
         )
-        parts = cur.select("part").distinct()
-        buckets = cur.sparkSession.range(self.n_bins).select(
-            F.col("id").cast("long").alias("bucket")
-        )
-        dense = (
-            parts.crossJoin(F.broadcast(buckets))
-            .join(cur, on=["part", "bucket"], how="left")
-            .fillna(0, subset=["n"])
-            .join(F.broadcast(ref), on="bucket", how="left")
-            .fillna(0, subset=["ref_n"])
-        )
-        w_part = Window.partitionBy("part")
-        dense = dense.withColumn("part_total", F.sum("n").over(w_part)).withColumn(
-            "ref_total", F.sum("ref_n").over(w_part)
-        )
-        p = (F.col("n") + 1.0) / (F.col("part_total") + self.n_bins)
-        q = (F.col("ref_n") + 1.0) / (F.col("ref_total") + self.n_bins)
-        psi_term = (p - q) * F.log(p / q)
-        w_cum = Window.partitionBy("part").orderBy("bucket").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        cum_p = F.sum("n").over(w_cum) / F.greatest(F.col("part_total"), F.lit(1))
-        cum_q = F.sum("ref_n").over(w_cum) / F.greatest(F.col("ref_total"), F.lit(1))
-        scored = (
-            dense.select(
-                "part",
-                "part_total",
-                "ref_total",
-                psi_term.alias("psi_term"),
-                F.abs(cum_p - cum_q).alias("ks_term"),
-            )
-            .groupBy("part")
-            .agg(
-                F.sum("psi_term").alias("psi"),
-                F.max("ks_term").alias("ks"),
-                F.first("part_total").alias("n1"),
-                F.first("ref_total").alias("n2"),
-            )
-        )
-        ks_crit = F.greatest(
-            F.lit(self.ks_threshold),
-            F.lit(self.ks_c_alpha)
-            * F.sqrt((F.col("n1") + F.col("n2")) / (F.col("n1") * F.col("n2"))),
-        )
-        return scored.select(
-            "part",
-            "psi",
-            "ks",
-            ks_crit.alias("ks_crit"),
-            ((F.col("psi") > self.psi_threshold) | (F.col("ks") > ks_crit)).alias("failed"),
-        )
+        return self._score(self.histogram(tables[self.table], ctx.part_col), ref)
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         vio = self.scores_plan(tables, ctx).filter(F.col("failed"))

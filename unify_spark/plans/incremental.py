@@ -14,7 +14,11 @@ here is a per-partition CONTENT fingerprint.
 How it works:
 
 1. ``partition_fingerprints`` — one column-pruned scan per table:
-   ``groupBy(part).agg(count, sum(xxhash64(*cols)), bit_xor(xxhash64))``.
+   ``groupBy(part).agg(count, sum(xxhash64(*cols)), bit_xor(xxhash64))``;
+   ``collect_fingerprints`` unions every table's frame, tagged with the
+   table name, and collects them in ONE Spark job. The per-partition
+   ``n_rows`` double as the runners' table stats (``fingerprint_stats``),
+   so an incremental run pays no separate row-count pre-pass.
    xxhash64 is a JVM-side fixed-seed hash (deterministic across sessions
    and partitionings); the (count, sum, xor) triple is order-independent,
    can't be cancelled by duplicate twin rows (sum and count both move), and
@@ -58,6 +62,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,15 +135,56 @@ def collect_fingerprints(
     include_binary: bool = True,
 ) -> dict[str, dict[str, list]]:
     """{table: {part: [n_rows, fp_sum_str, fp_xor]}} — driver-side
-    (partitions are metadata-scale: rows ~ tables x partitions)."""
-    out: dict[str, dict[str, list]] = {}
-    for name, df in tables.items():
-        fps = partition_fingerprints(df, part_col, include_binary=include_binary)
-        out[name] = {
-            r["part"]: [int(r["n_rows"]), str(r["fp_sum"]), int(r["fp_xor"])]
-            for r in fps.collect()
-        }
+    (partitions are metadata-scale: rows ~ tables x partitions). Every
+    table's fingerprint frame, tagged with its name, goes into one union,
+    collected in ONE Spark job. A NULL ``part_col`` value is rejected
+    (:func:`reject_null_partition`)."""
+    out: dict[str, dict[str, list]] = {name: {} for name in tables}
+    frames = [
+        partition_fingerprints(df, part_col, include_binary=include_binary).select(
+            F.lit(name).alias("table"), "*"
+        )
+        for name, df in tables.items()
+    ]
+    if not frames:
+        return out
+    for r in reduce(DataFrame.unionByName, frames).collect():
+        if r["part"] is None:
+            reject_null_partition(r["table"], part_col)
+        out[r["table"]][r["part"]] = [
+            int(r["n_rows"]),
+            str(r["fp_sum"]),
+            int(r["fp_xor"]),
+        ]
     return out
+
+
+def reject_null_partition(table: str, part_col: str) -> None:
+    """Raise for a table with NULL ``part_col`` values: audit rows reserve
+    part=NULL for stage-level markers, so such rows have no partition to
+    record a verdict under."""
+    raise ValueError(
+        f"table {table!r} has rows whose partition column {part_col!r} is "
+        "NULL; audit rows reserve part=NULL for stage-level markers — fill "
+        "or filter the partition column before validating"
+    )
+
+
+def fingerprint_stats(
+    tables: dict[str, DataFrame],
+    fps: dict[str, dict[str, list]],
+    part_col: str = "part_date",
+) -> dict[str, tuple[int, list[str]]]:
+    """{table: (row_count, sorted partition universe)} read off collected
+    fingerprints — the same figures ``ValidationRunner._table_stats``
+    scans for. A table without ``part_col`` is one ``__all__`` row: its
+    universe is empty."""
+    stats = {}
+    for name, df in tables.items():
+        parts = fps.get(name, {})
+        universe = sorted(parts) if part_col in df.columns else []
+        stats[name] = (sum(v[0] for v in parts.values()), universe)
+    return stats
 
 
 def save_fingerprints(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from unify_spark.operators.base import Constraint, ValidationContext, empty_violations
 from unify_spark.plans.audit import AuditLog
+from unify_spark.plans.incremental import reject_null_partition
 from unify_spark.plans.retry import with_retries
 
 
@@ -119,30 +120,45 @@ class ValidationRunner:
 
     # -- helpers -------------------------------------------------------------
 
-    def _partition_universe(self, tables: dict[str, DataFrame], table: str) -> list[str]:
-        df = tables.get(table)
-        if df is None or self.ctx.part_col not in df.columns:
-            return []
-        return [
-            r[0]
-            for r in df.select(self.ctx.part_col).distinct().orderBy(self.ctx.part_col).collect()
-        ]
-
     def _table_stats(
         self, tables: dict[str, DataFrame], table: str
     ) -> tuple[int, list[str]]:
         """(row_count, sorted partition universe) in ONE job — the separate
         count + distinct pre-scans were two passes over each table per run;
         groupBy(part).count() answers both from the same scan (and from
-        column stats alone when the table is hive/Iceberg-partitioned)."""
+        column stats alone when the table is hive/Iceberg-partitioned).
+        Partition values are strings, as in the audit and violation rows; a
+        NULL partition value is rejected (incremental.reject_null_partition)."""
         df = tables.get(table)
         if df is None:
             return 0, []
-        if self.ctx.part_col not in df.columns:
+        part_col = self.ctx.part_col
+        if part_col not in df.columns:
             return df.count(), []
-        rows = df.groupBy(self.ctx.part_col).count().collect()
-        n = sum(r["count"] for r in rows)
-        return n, sorted(r[0] for r in rows)
+        rows = df.groupBy(F.col(part_col).cast("string")).count().collect()
+        if any(r[0] is None for r in rows):
+            reject_null_partition(table, part_col)
+        return sum(r["count"] for r in rows), sorted(r[0] for r in rows)
+
+    def _stage_stats(
+        self,
+        tables: dict[str, DataFrame],
+        todo: list[Constraint],
+        known: dict[str, tuple[int, list[str]]] | None,
+    ) -> tuple[dict[str, int], dict[str, list[str]]]:
+        """({table: row_count}, {table: partition universe}) for the tables
+        the pending stages read, computed once per run (not per stage, not
+        racy). ``known`` stats (run_incremental's fingerprints) are used
+        as-is; only the missing tables are scanned."""
+        known = known or {}
+        table_rows: dict[str, int] = {}
+        universes: dict[str, list[str]] = {}
+        for c in todo:
+            if c.table in tables and c.table not in table_rows:
+                table_rows[c.table], universes[c.table] = known.get(
+                    c.table
+                ) or self._table_stats(tables, c.table)
+        return table_rows, universes
 
     def _apply_severity(self, res: RunResult, constraints: list[Constraint]) -> None:
         """Classify each emitted constraint's total count under its declared
@@ -211,15 +227,18 @@ class ValidationRunner:
         tables: dict[str, DataFrame],
         constraints: list[Constraint],
         resume: bool = True,
-        max_concurrency: int = 8,
+        _stats: dict[str, tuple[int, list[str]]] | None = None,
     ) -> RunResult:
         """Execute the plan. Constraint stages are independent DataFrame
-        jobs, so they run CONCURRENTLY on the Spark scheduler (bounded by
-        ``max_concurrency``) — the Spark restatement of the reference's
-        40-way validation pipeline
+        jobs, so they run CONCURRENTLY on the Spark scheduler: every
+        runnable stage of a dependency level gets its own thread, so no
+        stage queues behind another for a driver slot — the Spark
+        restatement of the reference's 40-way validation pipeline
         (src/com/vendekagonlabs/unify/validation/post_import.clj:26-53).
         ``fail_fast=True`` forces sequential execution to preserve the
-        reference's first-anomaly-kills-the-job semantics."""
+        reference's first-anomaly-kills-the-job semantics. ``_stats``:
+        {table: (row_count, partition universe)} already known to the
+        caller (run_incremental's fingerprints), skipping that pre-pass."""
         import threading
         from concurrent.futures import ThreadPoolExecutor
 
@@ -228,8 +247,6 @@ class ValidationRunner:
         done = self.audit.completed_constraints(self.ctx.run_id) if resume else set()
         parts_done = self.audit.part_results(self.ctx.run_id) if resume else {}
         rows_done = self.audit.stage_rows_checked(self.ctx.run_id) if resume else {}
-        universes: dict[str, list[str]] = {}
-        table_rows: dict[str, int] = {}
         lock = threading.Lock()
 
         def hydrate(c: Constraint) -> None:
@@ -259,12 +276,7 @@ class ValidationRunner:
             else:
                 todo.append(c)
 
-        # precompute shared per-table facts once (not per stage, not racy)
-        for c in todo:
-            if c.table in tables and c.table not in table_rows:
-                table_rows[c.table], universes[c.table] = self._table_stats(
-                    tables, c.table
-                )
+        table_rows, universes = self._stage_stats(tables, todo, _stats)
 
         def run_stage(c: Constraint) -> None:
             t0 = time.time()
@@ -445,18 +457,18 @@ class ValidationRunner:
                         # (src/com/vendekagonlabs/unify/import/engine.clj:166-181)
                         stop = True
         else:
-            with ThreadPoolExecutor(max_workers=max(1, max_concurrency)) as ex:
-                for level in levels:
-                    runnable = []
-                    for c in level:
-                        if c.name not in todo_names:
-                            continue
-                        bad_deps = self._gating_deps(res, c, by_name)
-                        if bad_deps:
-                            self._record_gated(res, c, bad_deps)
-                        else:
-                            runnable.append(c)
-                    if runnable:
+            for level in levels:
+                runnable = []
+                for c in level:
+                    if c.name not in todo_names:
+                        continue
+                    bad_deps = self._gating_deps(res, c, by_name)
+                    if bad_deps:
+                        self._record_gated(res, c, bad_deps)
+                    else:
+                        runnable.append(c)
+                if runnable:
+                    with ThreadPoolExecutor(max_workers=len(runnable)) as ex:
                         list(ex.map(run_stage_trapped, runnable))
 
         res.wall_sec = time.time() - t_run
@@ -532,6 +544,7 @@ class ValidationRunner:
         constraints: list[Constraint],
         resume: bool = True,
         _single_wave: bool = False,
+        _stats: dict[str, tuple[int, list[str]]] | None = None,
     ) -> RunResult:
         """Execute the whole plan as ONE Spark job: the violation DataFrames
         of every pending stage are unioned (they share VIOLATION_SCHEMA) and
@@ -549,6 +562,8 @@ class ValidationRunner:
         level fuses into one job, and the next wave drops (gates) stages
         whose dependencies blocked — the cheap schema wave still saturates
         the cluster while the decode-heavy wave only runs on clean input.
+
+        ``_stats`` as in :meth:`run`.
         """
         from pyspark.sql import Window
 
@@ -570,7 +585,9 @@ class ValidationRunner:
                     else:
                         keep.append(c)
                 if keep:
-                    r = self.run_fused(tables, keep, resume=resume, _single_wave=True)
+                    r = self.run_fused(
+                        tables, keep, resume=resume, _single_wave=True, _stats=_stats
+                    )
                     total.verdicts.update(r.verdicts)
                     for k, v in r.violation_counts.items():
                         total.violation_counts[k] = total.violation_counts.get(k, 0) + v
@@ -625,13 +642,7 @@ class ValidationRunner:
             self._apply_severity(res, constraints)
             return res
 
-        table_rows: dict[str, int] = {}
-        universes: dict[str, list[str]] = {}
-        for c in todo:
-            if c.table in tables and c.table not in table_rows:
-                table_rows[c.table], universes[c.table] = self._table_stats(
-                    tables, c.table
-                )
+        table_rows, universes = self._stage_stats(tables, todo, _stats)
         _mark("table_stats")
 
         # partition-grain resume (mirrors run()): partition-local constraints
@@ -874,6 +885,7 @@ class ValidationRunner:
         Saves this run's fingerprints to out_dir so it can chain as the
         next run's baseline. Returns (RunResult, IncrementalPlan)."""
         from unify_spark.plans.incremental import (
+            fingerprint_stats,
             plan_incremental,
             save_fingerprints,
         )
@@ -891,10 +903,13 @@ class ValidationRunner:
             self.audit.append(
                 [{"run_id": self.ctx.run_id, **r} for r in seed_rows]
             )
+        # the fingerprints already hold every table's per-partition row
+        # counts: the runners' stats pre-pass would re-count the same rows
+        stats = fingerprint_stats(tables, now_fps, self.ctx.part_col)
         res = (
-            self.run_fused(tables, constraints, resume=True)
+            self.run_fused(tables, constraints, resume=True, _stats=stats)
             if fused
-            else self.run(tables, constraints, resume=True)
+            else self.run(tables, constraints, resume=True, _stats=stats)
         )
         if self.ctx.collect_violating_keys and seed_rows:
             # this run's sidecar only carries RECOMPUTED partitions' keys;
@@ -1129,7 +1144,7 @@ class ValidationRunner:
         """Score every bounded DriftConstraint's CURRENT partitions against
         a PRIOR run's persisted histograms (<baseline_dir>/drift_hist):
         (constraint, part, psi, ks, ks_crit, failed) rows. The baseline side
-        is a ≤ n_bins-row broadcast per constraint — cross-run drift costs
+        is a metadata-sized histogram per constraint — cross-run drift costs
         one histogram pass over the new data, never a rescan of the old."""
         from unify_spark.operators.drift import (
             CategoricalDriftConstraint,

@@ -141,7 +141,7 @@ def drift_monitor_foreach_batch(
     (categorical rows carry null ks/ks_crit).
 
     This is the online half of the cross-run drift design: the baseline is
-    a ≤ n_bins-row broadcast per constraint, so each micro-batch costs ONE
+    a metadata-sized histogram per constraint, so each micro-batch costs ONE
     histogram aggregation over its own rows — no state store, no rescan of
     history, and the same bins/PSI/KS semantics as the batch path
     (operators/drift.py scores_vs_baseline). Returns the started query."""
