@@ -289,10 +289,16 @@ def test_cli_incremental_chain(fixture_dir, tmp_path, capsys):
     assert os.path.exists(os.path.join(out2, "part_fingerprints.json"))
 
 
-def test_zero_diff_seeds_global_constraints(spark, audio_tables, baseline_run, tmp_path):
+@pytest.mark.parametrize("fused", [False, True])
+def test_zero_diff_seeds_global_constraints(
+    spark, audio_tables, baseline_run, tmp_path, fused
+):
     """When NO table changed (the daily "did anything change" re-run), even
     global constraints (uniqueness/referential/equality/drift) seed from the
-    baseline — the whole re-validation is metadata-only: every stage skips."""
+    baseline — the whole re-validation is metadata-only: every stage skips,
+    and every stage's 'done' marker and rows_checked equal the baseline's."""
+    from unify_spark.plans.audit import AuditLog
+
     base_out, base_res = baseline_run
     suite = audio_suite()
     plan, _, seed_rows = plan_incremental(spark, audio_tables, suite, base_out)
@@ -310,12 +316,54 @@ def test_zero_diff_seeds_global_constraints(spark, audio_tables, baseline_run, t
     runner = ValidationRunner(
         spark, inc_out, ValidationContext(run_id="zd", payload_cap_ms=50)
     )
-    res, plan2 = runner.run_incremental(audio_tables, suite, base_out, fused=True)
+    res, plan2 = runner.run_incremental(audio_tables, suite, base_out, fused=fused)
     assert plan2.zero_diff
     assert set(res.skipped) == all_names  # nothing recomputed
     assert res.violation_counts == base_res.violation_counts
     assert res.verdicts == base_res.verdicts
+    assert res.rows_checked == base_res.rows_checked
     assert not res.errors and not os.path.exists(os.path.join(inc_out, "violations"))
+
+    def done_counts(out, run_id):
+        rows = AuditLog(spark, os.path.join(out, "audit")).read().filter(
+            (F.col("run_id") == run_id) & (F.col("status") == "done")
+        )
+        return {r["constraint"]: r["violation_count"] for r in rows.collect()}
+
+    assert done_counts(inc_out, "zd") == done_counts(base_out, "base")
+
+
+@pytest.mark.parametrize("kind", ["range", "uniqueness"])
+@pytest.mark.parametrize("fused", [False, True])
+def test_zero_diff_keeps_rate_tolerance(spark, tmp_path, fused, kind):
+    """A dataset that passes only thanks to max_violation_rate still passes
+    on a zero-diff re-run: the seeded stages keep their rows_checked, the
+    rate's denominator."""
+    from unify_spark.operators.constraints import RangeConstraint, UniquenessConstraint
+
+    rows = [(f"k{i}", float(i), f"p{i % 4}") for i in range(100)]
+    rows[7] = ("k7", -1.0, "p3")  # 1 range violation
+    rows[9] = ("k8", 9.0, "p1")  # k8 twice: 2 uniqueness violations
+    tables = {"t": spark.createDataFrame(rows, ["clip_id", "val", "part_date"])}
+    c = (
+        RangeConstraint("t", "val", min_value=0.0)
+        if kind == "range"
+        else UniquenessConstraint("t", ["clip_id"])
+    )
+    c.max_violation_rate = 0.05
+
+    base_out = str(tmp_path / "base")
+    base = ValidationRunner(spark, base_out, ValidationContext(run_id="b")).run(
+        tables, [c], resume=False
+    )
+    save_fingerprints(base_out, collect_fingerprints(tables))
+    assert base.passed and base.total_violations == (1 if kind == "range" else 2)
+
+    runner = ValidationRunner(spark, str(tmp_path / "zd"), ValidationContext(run_id="zd"))
+    res, plan = runner.run_incremental(tables, [c], base_out, fused=fused)
+    assert plan.zero_diff and res.skipped == [c.name]
+    assert res.rows_checked == base.rows_checked == {c.name: 100}
+    assert res.passed and not res.blocking and res.tolerated == base.tolerated
 
 
 def test_zero_diff_gate_requires_completed_baseline_stage(

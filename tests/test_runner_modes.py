@@ -41,9 +41,15 @@ def test_staged_resume_and_fail_fast(spark, audio_tables, tmp_path):
     assert next(iter(res.violation_counts)).startswith("uniqueness:")
 
 
-def test_stage_error_trapped_and_reported(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["run", "run_fused"])
+def test_stage_error_trapped_and_reported(spark, tmp_path, mode):
     """Uncaught-exception trap: a throwing stage becomes an 'error' audit row
-    and res.errors; other stages still run; passed is False."""
+    and res.errors; other stages still run; passed is False. One culprit
+    raises while its plan is built, the other only when its job runs (a
+    Python UDF), in a later dependency level: a fused wave that raises
+    either way re-runs stage by stage."""
+    from pyspark.sql import functions as F
+
     from unify_spark.operators.base import Constraint
     from unify_spark.operators.constraints import RangeConstraint
 
@@ -54,14 +60,54 @@ def test_stage_error_trapped_and_reported(spark, tmp_path):
         def violations(self, tables, ctx):
             raise RuntimeError("kapow")
 
+    class BoomJob(Constraint):
+        name = "boom_job:t"
+        table = "t"
+        depends_on = ["range:t.val"]
+
+        def violations(self, tables, ctx):
+            @F.udf("double")
+            def explode(v):
+                raise RuntimeError("kaboom")
+
+            t = {"t": tables["t"].withColumn("val", explode("val"))}
+            vio = RangeConstraint("t", "val", min_value=0.0).violations(t, ctx)
+            return vio.withColumn("constraint", F.lit(self.name))
+
     df = spark.createDataFrame([("a", 1.0, "p1")], ["clip_id", "val", "part_date"])
     runner = ValidationRunner(spark, str(tmp_path), ValidationContext(run_id="e"))
-    res = runner.run({"t": df}, [Boom(), RangeConstraint("t", "val", min_value=0.0)])
-    assert res.errors == {"boom:t": "RuntimeError: kapow"}
+    res = getattr(runner, mode)(
+        {"t": df}, [Boom(), RangeConstraint("t", "val", min_value=0.0), BoomJob()]
+    )
+    assert res.errors["boom:t"] == "RuntimeError: kapow"
+    assert set(res.errors) == {"boom:t", "boom_job:t"}
+    assert "kaboom" in res.errors["boom_job:t"]
     assert not res.passed and res.total_violations == 0
     assert ("range:t.val", "p1") in res.verdicts  # other stage completed
-    audit = runner.audit.read().filter("status = 'error'").collect()
-    assert [r["constraint"] for r in audit] == ["boom:t"]
+    stages = {
+        r["constraint"]: r["status"]
+        for r in runner.audit.read().filter("part IS NULL").collect()
+    }
+    assert stages == {"boom:t": "error", "boom_job:t": "error", "range:t.val": "done"}
+
+
+@pytest.mark.parametrize("mode", ["run", "run_fused"])
+def test_unknown_dependency_raises_before_any_job(spark, tmp_path, mode):
+    """depends_on config errors surface before any Spark job: the table's
+    partition column raises as soon as anything evaluates it."""
+    from pyspark.sql import functions as F
+
+    from unify_spark.operators.constraints import RangeConstraint
+
+    df = spark.range(3).select(
+        F.col("id").cast("double").alias("val"),
+        F.raise_error(F.lit("frame evaluated")).cast("string").alias("part_date"),
+    )
+    c = RangeConstraint("t", "val", min_value=0.0)
+    c.depends_on = ["nope"]
+    runner = ValidationRunner(spark, str(tmp_path), ValidationContext(run_id="u"))
+    with pytest.raises(ValueError, match="unknown"):
+        getattr(runner, mode)({"t": df}, [c])
 
 
 def test_write_partitioned_batch_rows_contract(spark, tmp_path):

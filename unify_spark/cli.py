@@ -540,7 +540,7 @@ def cmd_list_runs(args) -> int:
         .agg(
             F.count(F.lit(1)).alias("stages"),
             F.sum("violation_count").alias("violations"),
-            # fused mode stamps the whole-run wall on every stage row -> max
+            # fused mode stamps the wave's wall on every stage of the wave -> max
             F.round(F.max("wall_sec"), 2).alias("wall_sec"),
             F.max("ts").alias("last_ts"),
         )

@@ -328,6 +328,10 @@ def plan_incremental(
 
     plan.zero_diff = all(table_fully_unchanged(t) for t in tables)
     base_done = base_audit.completed_constraints(plan.baseline_run_id)
+    # only zero-diff seeding writes global 'done' rows, which carry these
+    base_rows = (
+        base_audit.stage_rows_checked(plan.baseline_run_id) if plan.zero_diff else {}
+    )
     base_cfps = load_constraint_fingerprints(baseline_out_dir)
 
     def config_changed(c) -> bool:
@@ -390,6 +394,10 @@ def plan_incremental(
                     "part": None,
                     "status": "done",
                     "violation_count": total,
+                    # the rate tolerance's denominator: without it the
+                    # resumed run reads allowed_violations(0) and a dataset
+                    # passing via max_violation_rate turns failing
+                    "rows_checked": base_rows.get(c.name),
                 }
             )
             plan.seeded[c.name] = seeded_parts

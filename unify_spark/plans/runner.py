@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import math
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unify_spark.operators.base import Constraint, ValidationContext, empty_violations
@@ -59,6 +61,20 @@ class RunResult:
         if self._severity_applied:
             return not self.blocking
         return self.total_violations == 0
+
+
+@dataclass
+class _Stage:
+    """A runnable constraint stage as the planner prepared it: the
+    partitions this run computes ([None] = the whole table), the tables its
+    plan reads (partition-filtered on a partial resume) and the row count
+    its rate tolerance divides by."""
+
+    c: Constraint
+    pending: list
+    tables: dict[str, DataFrame]
+    rows: int
+    partial: bool = False
 
 
 def _shuffle_partitions(spark: SparkSession, default: int = 200) -> int:
@@ -208,17 +224,18 @@ class ValidationRunner:
         """Audit a gated stage. Deliberately NOT 'done': a resumed run
         retries the stage once the dependency is fixed."""
         res.gated[c.name] = bad_deps
-        self.audit.append(
-            [
-                {
-                    "run_id": self.ctx.run_id,
-                    "constraint": c.name,
-                    "part": None,
-                    "status": "gated",
-                    "violation_count": None,
-                }
-            ]
-        )
+        self.audit.append([self._marker(c.name, "gated")])
+
+    def _marker(self, name: str, status: str, **extra) -> dict:
+        """A stage-level audit row (part=NULL): 'done', 'error' or 'gated'."""
+        return {
+            "run_id": self.ctx.run_id,
+            "constraint": name,
+            "part": None,
+            "status": status,
+            "violation_count": None,
+            **extra,
+        }
 
     # -- main ----------------------------------------------------------------
 
@@ -239,21 +256,68 @@ class ValidationRunner:
         reference's first-anomaly-kills-the-job semantics. ``_stats``:
         {table: (row_count, partition universe)} already known to the
         caller (run_incremental's fingerprints), skipping that pre-pass."""
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
+        return self._execute(tables, constraints, resume, _stats, self._run_level_staged)
 
+    def run_fused(
+        self,
+        tables: dict[str, DataFrame],
+        constraints: list[Constraint],
+        resume: bool = True,
+        _stats: dict[str, tuple[int, list[str]]] | None = None,
+    ) -> RunResult:
+        """Execute the whole plan as ONE Spark job: the violation DataFrames
+        of every pending stage are unioned (they share VIOLATION_SCHEMA) and
+        counted/written in a single pass. Catalyst evaluates the union's
+        branches as independent subtrees of one job, so the cluster stays
+        saturated with zero per-stage scheduling gaps — the fused analogue of
+        the reference's 40-way validation pipeline
+        (src/com/vendekagonlabs/unify/validation/post_import.clj:26-53).
+
+        Trade-off vs ``run``: per-stage wall times and mid-run resumability
+        collapse to one unit per wave (all-or-nothing per wave: every stage
+        of a wave records the wave's wall); use ``run`` when stage-grain
+        checkpointing matters more than throughput. A wave whose job raises
+        re-runs stage by stage through ``run``'s executor, so the culprit
+        lands as an 'error' row and the rest complete (fail-at-end in both
+        modes; ``fail_fast`` applies only to that fallback).
+
+        ``depends_on`` executes as successive fused WAVES: each dependency
+        level fuses into one job, and the next wave drops (gates) stages
+        whose dependencies blocked — the cheap schema wave still saturates
+        the cluster while the decode-heavy wave only runs on clean input.
+
+        ``_stats`` as in :meth:`run`.
+        """
+        return self._execute(tables, constraints, resume, _stats, self._run_level_fused)
+
+    # -- stage planner -------------------------------------------------------
+
+    def _execute(
+        self,
+        tables: dict[str, DataFrame],
+        constraints: list[Constraint],
+        resume: bool,
+        stats: dict[str, tuple[int, list[str]]] | None,
+        run_level,
+    ) -> RunResult:
+        """The stage planner under both runners: validate ``depends_on``,
+        read the resume state once and hydrate finished stages, compute the
+        table stats once, then per dependency level gate the stages and
+        prepare each runnable stage's pending partitions.
+        ``run_level(res, stages)`` executes one level's prepared stages and
+        returns True when fail_fast stops the run."""
         t_run = time.time()
+        # unknown names and cycles are config errors: raise before any job
+        levels = _dep_levels(constraints)
         res = RunResult(run_id=self.ctx.run_id)
         done = self.audit.completed_constraints(self.ctx.run_id) if resume else set()
         parts_done = self.audit.part_results(self.ctx.run_id) if resume else {}
         rows_done = self.audit.stage_rows_checked(self.ctx.run_id) if resume else {}
-        lock = threading.Lock()
 
         def hydrate(c: Constraint) -> None:
             """Fill verdicts/counts for audit-recorded work so a resumed run's
             report (and exit code) reflects prior results instead of silently
-            dropping them. Caller holds no lock (runs before stage threads or
-            inside the stage lock)."""
+            dropping them."""
             for name in getattr(c, "emits", [c.name]):
                 recorded = parts_done.get(name, {})
                 res.violation_counts[name] = res.violation_counts.get(name, 0) + sum(
@@ -268,212 +332,303 @@ class ValidationRunner:
                 for p, (s, _) in recorded.items():
                     res.verdicts[(name, p)] = s == "pass"
 
-        todo = []
         for c in constraints:
             if c.name in done:
                 res.skipped.append(c.name)
                 hydrate(c)
-            else:
-                todo.append(c)
+        todo = [c for c in constraints if c.name not in done]
+        table_rows, universes = self._stage_stats(tables, todo, stats)
 
-        table_rows, universes = self._stage_stats(tables, todo, _stats)
-
-        def run_stage(c: Constraint) -> None:
-            t0 = time.time()
-            universe = universes.get(c.table) or []
-            recorded = parts_done.get(c.name, {}) if resume else {}
-            # partition-grain resume: a partition-local constraint recomputes
-            # ONLY partitions missing from the audit (killed-mid-run recovery
-            # and incremental validation of newly-arrived partitions)
-            partial = bool(getattr(c, "partition_local", False) and recorded and universe)
-            stage_tables = tables
-            if partial:
-                pending = [p for p in universe if p not in recorded]
-                with lock:
+        # dependency-ordered execution: stages run in topological levels,
+        # and a stage whose depends_on dependency blocked (or was gated) is
+        # recorded 'gated' instead of paying its (possibly decode-heavy)
+        # scan. Suites without depends_on collapse to a single level.
+        by_name = {c.name: c for c in constraints}
+        for level in levels:
+            stages = []
+            for c in level:
+                if c.name in done:
+                    continue
+                bad_deps = self._gating_deps(res, c, by_name)
+                if bad_deps:
+                    self._record_gated(res, c, bad_deps)
+                    continue
+                universe = universes.get(c.table) or []
+                recorded = parts_done.get(c.name, {})
+                stage = _Stage(c, universe or [None], tables, table_rows.get(c.table, 0))
+                # partition-grain resume: a partition-local constraint
+                # recomputes ONLY partitions missing from the audit
+                # (killed-mid-run recovery and incremental validation of
+                # newly-arrived partitions)
+                if getattr(c, "partition_local", False) and recorded and universe:
                     hydrate(c)
-                if not pending:
-                    with lock:
+                    stage.pending = [p for p in universe if p not in recorded]
+                    if not stage.pending:
                         res.skipped.append(c.name)
-                    self.audit.append(
-                        [
-                            {
-                                "run_id": self.ctx.run_id,
-                                "constraint": c.name,
-                                "part": None,
-                                "status": "done",
-                                "violation_count": sum(n for _, n in recorded.values()),
-                                "rows_checked": table_rows.get(c.table, 0),
-                                "wall_sec": 0.0,
-                            }
-                        ]
-                    )
-                    return
-                stage_tables = {
-                    **tables,
-                    c.table: tables[c.table].filter(
-                        F.col(self.ctx.part_col).isin(pending)
-                    ),
-                }
-            else:
-                pending = universe or [None]
+                        self.audit.append([self._record(res, stage, {}, 0.0)[1]])
+                        continue
+                    stage.partial = True
+                    stage.tables = {
+                        **tables,
+                        c.table: tables[c.table].filter(
+                            F.col(self.ctx.part_col).isin(stage.pending)
+                        ),
+                    }
+                stages.append(stage)
+            if stages and run_level(res, stages):
+                break
 
-            vio = c.violations(stage_tables, self.ctx)
-            # cache so the count aggregation and the capped write share ONE
-            # computation of the (possibly expensive) constraint plan
-            vio = vio.persist()
-            try:
-                per_part = (
-                    vio.groupBy("constraint", "part")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
-                counts: dict[str, dict] = {}
-                for r in per_part:
-                    counts.setdefault(r["constraint"], {})[r["part"]] = r["n"]
-                total = sum(sum(d.values()) for d in counts.values())
+        res.wall_sec = time.time() - t_run
+        self._apply_severity(res, constraints)
+        return res
 
-                emits = getattr(c, "emits", [c.name])
-                part_rows = []
-                with lock:
-                    for name in emits:
-                        name_counts = counts.get(name, {})
-                        res.violation_counts[name] = res.violation_counts.get(
-                            name, 0
-                        ) + sum(name_counts.values())
-                        res.rows_checked[name] = table_rows.get(c.table, 0)
-                        # include part keys that emitted violations beyond
-                        # the universe (table-level constraints emit
-                        # part=NULL) — see run_fused's audit loop
-                        for p in {*pending, *name_counts}:
-                            n = name_counts.get(p, 0)
-                            res.verdicts[(name, p)] = n == 0
-                            part_rows.append(
-                                {
-                                    "run_id": self.ctx.run_id,
-                                    "constraint": name,
-                                    "part": p,
-                                    "status": "pass" if n == 0 else "fail",
-                                    "violation_count": n,
-                                }
-                            )
-                if total:
-                    # partial reruns append (prior parts' violation files stay);
-                    # fresh stages overwrite. Retried with backoff: a transient
-                    # sink failure must not abort the stage (retry.py taxonomy).
-                    mode = "append" if partial else "overwrite"
-                    with_retries(
-                        lambda: vio.limit(self.ctx.violation_cap)
-                        .coalesce(1)
-                        .write.mode(mode)
-                        .parquet(os.path.join(self.out_dir, "violations", _safe(c.name)))
-                    )
-                    if self.ctx.collect_violating_keys:
-                        # uncapped key set (quarantine input); dynamic
-                        # overwrite scoped to THIS stage's constraint names
-                        with_retries(
-                            lambda: vio.select("constraint", "table", "key", "part")
-                            .distinct()
-                            .write.mode("append" if partial else "overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("constraint")
-                            .parquet(os.path.join(self.out_dir, "violating_keys"))
-                        )
-                # phase 1: part-grain lineage rows land AFTER the violation
-                # write — a kill between the two leaves violations without
-                # lineage (rewritten by the resumed run) rather than 'fail'
-                # lineage whose evidence rows were never persisted (which a
-                # partition-grain resume would skip forever)
-                self.audit.append(part_rows)
-            finally:
-                vio.unpersist()
-
-            wall = time.time() - t0
-            # phase 2: the stage 'done' marker — whole-stage resume key;
-            # count covers every name the stage emits (payload also emits
-            # the bytes-nullness constraint)
-            stage_count = sum(
-                res.violation_counts.get(n, 0) for n in getattr(c, "emits", [c.name])
+    def _record(
+        self, res: RunResult, stage: _Stage, counts: dict[str, dict], wall: float
+    ) -> tuple[list[dict], dict]:
+        """Fold a stage's freshly counted violations ({name: {part: n}})
+        into ``res`` and return its pass/fail lineage rows and its 'done'
+        marker. One rule for both executors and for a stage whose
+        partitions were all recorded already (empty ``counts``): every
+        emitted name gets the stage's rows_checked, and the marker's count
+        covers every name the stage emits (payload also emits the
+        bytes-nullness constraint), hydrated partitions included. Callers
+        that run stages concurrently hold the result lock."""
+        c = stage.c
+        emits = getattr(c, "emits", [c.name])
+        lineage = []
+        for name in emits:
+            name_counts = counts.get(name, {})
+            res.violation_counts[name] = res.violation_counts.get(name, 0) + sum(
+                name_counts.values()
             )
-            self.audit.append(
-                [
+            res.rows_checked[name] = stage.rows
+            # every part key that actually EMITTED violations gets a
+            # lineage row, not just the partition universe: a
+            # table-level constraint (e.g. aggregate consistency) emits
+            # part=NULL rows, and recording only all-pass universe rows
+            # would let a resumed run hydrate the stage back to zero
+            # violations — a failed run silently flipping to passing
+            for p in {*stage.pending, *name_counts}:
+                n = name_counts.get(p, 0)
+                res.verdicts[(name, p)] = n == 0
+                lineage.append(
                     {
                         "run_id": self.ctx.run_id,
-                        "constraint": c.name,
-                        "part": None,
-                        "status": "done",
-                        "violation_count": stage_count,
-                        "rows_checked": res.rows_checked.get(c.name, 0),
-                        "wall_sec": wall,
+                        "constraint": name,
+                        "part": p,
+                        "status": "pass" if n == 0 else "fail",
+                        "violation_count": n,
                     }
-                ]
-            )
+                )
+        done = self._marker(
+            c.name,
+            "done",
+            violation_count=sum(res.violation_counts[n] for n in emits),
+            rows_checked=stage.rows,
+            wall_sec=wall,
+        )
+        return lineage, done
 
-        def run_stage_trapped(c: Constraint) -> None:
+    # -- staged executor -----------------------------------------------------
+
+    def _run_level_staged(self, res: RunResult, stages: list[_Stage]) -> bool:
+        """One job per stage, each on its own thread; sequential under
+        fail_fast, which returns True once a stage emitted violations."""
+        lock = threading.Lock()
+
+        def run_stage_trapped(stage: _Stage) -> None:
             """Uncaught-exception trap (reference validation report +
             engine.clj's anomaly channel): a stage that throws is recorded as
             an 'error' audit row and the run report instead of killing the
             other stages (fail-at-end); fail_fast re-raises."""
             try:
-                run_stage(c)
+                self._run_stage(res, stage, lock)
             except Exception as e:  # noqa: BLE001 — trap IS the contract
                 with lock:
-                    res.errors[c.name] = f"{type(e).__name__}: {e}"
-                self.audit.append(
-                    [
-                        {
-                            "run_id": self.ctx.run_id,
-                            "constraint": c.name,
-                            "part": None,
-                            "status": "error",
-                            "violation_count": None,
-                        }
-                    ]
-                )
+                    res.errors[stage.c.name] = f"{type(e).__name__}: {e}"
+                self.audit.append([self._marker(stage.c.name, "error")])
                 if self.ctx.fail_fast:
                     raise
 
-        # dependency-ordered execution: stages run in topological levels,
-        # and a stage whose depends_on dependency blocked (or was gated) is
-        # recorded 'gated' instead of paying its (possibly decode-heavy)
-        # scan. Suites without depends_on collapse to a single level —
-        # identical behavior to before.
-        by_name = {c.name: c for c in constraints}
-        todo_names = {c.name for c in todo}
-        levels = _dep_levels(constraints)
-
         if self.ctx.fail_fast:
-            stop = False
-            for level in levels:
-                for c in level:
-                    if stop or c.name not in todo_names:
-                        continue
-                    bad_deps = self._gating_deps(res, c, by_name)
-                    if bad_deps:
-                        self._record_gated(res, c, bad_deps)
-                        continue
-                    run_stage_trapped(c)
-                    if any(res.violation_counts.get(n) for n in getattr(c, "emits", [c.name])):
-                        # reference semantics: first anomaly kills the job
-                        # (src/com/vendekagonlabs/unify/import/engine.clj:166-181)
-                        stop = True
-        else:
-            for level in levels:
-                runnable = []
-                for c in level:
-                    if c.name not in todo_names:
-                        continue
-                    bad_deps = self._gating_deps(res, c, by_name)
-                    if bad_deps:
-                        self._record_gated(res, c, bad_deps)
-                    else:
-                        runnable.append(c)
-                if runnable:
-                    with ThreadPoolExecutor(max_workers=len(runnable)) as ex:
-                        list(ex.map(run_stage_trapped, runnable))
+            for stage in stages:
+                run_stage_trapped(stage)
+                if any(
+                    res.violation_counts.get(n)
+                    for n in getattr(stage.c, "emits", [stage.c.name])
+                ):
+                    # reference semantics: first anomaly kills the job
+                    # (src/com/vendekagonlabs/unify/import/engine.clj:166-181)
+                    return True
+            return False
+        with ThreadPoolExecutor(max_workers=len(stages)) as ex:
+            list(ex.map(run_stage_trapped, stages))
+        return False
 
-        res.wall_sec = time.time() - t_run
-        self._apply_severity(res, constraints)
-        return res
+    def _run_stage(self, res: RunResult, stage: _Stage, lock: threading.Lock) -> None:
+        """One stage's job: persist, count, write the evidence, then the
+        lineage rows, then the 'done' row."""
+        t0 = time.time()
+        c = stage.c
+        # cache so the count aggregation and the capped write share ONE
+        # computation of the (possibly expensive) constraint plan
+        vio = c.violations(stage.tables, self.ctx).persist()
+        try:
+            counts = _count_by_part(vio)
+            if counts:
+                # partial reruns append (prior parts' violation files stay);
+                # fresh stages overwrite. Retried with backoff: a transient
+                # sink failure must not abort the stage (retry.py taxonomy).
+                mode = "append" if stage.partial else "overwrite"
+                with_retries(
+                    lambda: vio.limit(self.ctx.violation_cap)
+                    .coalesce(1)
+                    .write.mode(mode)
+                    .parquet(os.path.join(self.out_dir, "violations", _safe(c.name)))
+                )
+                if self.ctx.collect_violating_keys:
+                    # uncapped key set (quarantine input); dynamic
+                    # overwrite scoped to THIS stage's constraint names
+                    with_retries(
+                        lambda: vio.select("constraint", "table", "key", "part")
+                        .distinct()
+                        .write.mode(mode)
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("constraint")
+                        .parquet(os.path.join(self.out_dir, "violating_keys"))
+                    )
+            with lock:
+                lineage, done = self._record(res, stage, counts, time.time() - t0)
+            # phase 1: part-grain lineage rows land AFTER the violation
+            # write — a kill between the two leaves violations without
+            # lineage (rewritten by the resumed run) rather than 'fail'
+            # lineage whose evidence rows were never persisted (which a
+            # partition-grain resume would skip forever)
+            self.audit.append(lineage)
+        finally:
+            vio.unpersist()
+        # phase 2: the stage 'done' marker — whole-stage resume key
+        self.audit.append([done])
+
+    # -- fused executor ------------------------------------------------------
+
+    def _run_level_fused(self, res: RunResult, stages: list[_Stage]) -> bool:
+        """One level's stages as ONE Spark job (a wave), audited in one
+        append. Spark offers no per-branch error trap inside a union, so a
+        wave whose job raises re-runs through the staged executor."""
+        t0 = time.time()
+        try:
+            counts = self._fused_job(stages)
+        except Exception:  # noqa: BLE001 — the staged executor traps per stage
+            return self._run_level_staged(res, stages)
+        wall = time.time() - t0
+        rows = []
+        for stage in stages:
+            lineage, done = self._record(res, stage, counts, wall)
+            rows += lineage + [done]
+        self.audit.append(rows)
+        return False
+
+    def _fused_job(self, stages: list[_Stage]) -> dict[str, dict]:
+        """Union the stages' violation plans, count them and write the
+        evidence; returns {name: {part: n}} for the names with violations."""
+        # Row-local constraints (domain/range/required/composite/mapping)
+        # fuse into ONE scan per table: their predicates become an exploded
+        # violation-struct array, so the table's columns are read once for
+        # the whole family instead of once per constraint. Bundles group by
+        # (table, pending-partition set) so a partially-resumed constraint
+        # fuses only with stages scanning the same partition subset.
+        bundles: dict[tuple, list[_Stage]] = {}
+        rest: list[_Stage] = []
+        for st in stages:
+            preds = getattr(st.c, "row_predicates", None)
+            if preds is not None and st.c.table in st.tables and preds(self.ctx) is not None:
+                bundles.setdefault((st.c.table, tuple(st.pending)), []).append(st)
+            else:
+                rest.append(st)
+
+        plans = [
+            _row_local_bundle_plan(sts[0].tables[t], [st.c for st in sts], t, self.ctx)
+            for (t, _), sts in bundles.items()
+        ] + [st.c.violations(st.tables, self.ctx) for st in rest]
+        fused = plans[0]
+        for p in plans[1:]:
+            fused = fused.unionByName(p)
+
+        # The union of P subtrees would persist as the SUM of their output
+        # partitions (~800 tiny blocks at bench shape); every downstream
+        # pass — count agg, cap window, violating-keys write — then
+        # re-schedules that many tasks, and task scheduling is
+        # driver-serial: the same wall cost at EVERY parallelism level, a
+        # pure scaling-efficiency tax (measured ~2-3s of the local[8]
+        # fused wall). One ROUND-ROBIN exchange collapses the cached frame
+        # to shuffle_partitions balanced blocks; hashing by constraint
+        # here would funnel a large constraint's whole violation set into
+        # one cache task — the exact single-task concentration the salted
+        # cap below exists to avoid. Violation rows are slim (strings + a
+        # long), so the exchange is cheap.
+        fused = fused.repartition(_shuffle_partitions(self.spark)).persist()
+        try:
+            counts = _count_by_part(fused)
+            if self.ctx.collect_violating_keys:
+                # UNCAPPED distinct key set off the persisted frame — the
+                # quarantine split's row-complete input (the evidence write
+                # below is capped and cannot drive one). Same dynamic
+                # overwrite discipline: a partial resume replaces only the
+                # constraints it recomputed.
+                with_retries(
+                    lambda: fused.select("constraint", "table", "key", "part")
+                    .distinct()
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("constraint")
+                    .parquet(os.path.join(self.out_dir, "violating_keys"))
+                )
+            # capped per-constraint violation rows, one partitioned write.
+            # dynamic partition overwrite: only the constraints present in
+            # THIS run's output are replaced — a resumed run must not wipe
+            # the violation files of stages it skipped.
+            #
+            # The per-constraint totals are already on the driver, so the
+            # cap is applied only when some constraint actually exceeds it
+            # — the common all-under-cap run writes the cached frame as-is,
+            # no sort, no window. When a constraint IS over cap, a plain
+            # window by constraint would funnel its entire violation set
+            # (potentially ~1% of 10^12 rows) into ONE sort task; instead
+            # the standard two-phase top-k: a salted pre-window keeps at
+            # most cap rows per (constraint, salt) in parallel, and the
+            # global window ranks only the <= cap * n_salts survivors.
+            cap = self.ctx.violation_cap
+            order = [F.col("key").asc_nulls_last(), F.col("column").asc_nulls_last()]
+            if all(sum(d.values()) <= cap for d in counts.values()):
+                capped = fused
+            else:
+                n_salts = _shuffle_partitions(self.spark)
+                pre_w = Window.partitionBy("constraint", "_salt").orderBy(*order)
+                w = Window.partitionBy("constraint").orderBy(*order)
+                capped = (
+                    fused.withColumn(
+                        "_salt",
+                        F.pmod(F.xxhash64("key", "column"), F.lit(n_salts)),
+                    )
+                    .withColumn("_prn", F.row_number().over(pre_w))
+                    .filter(F.col("_prn") <= cap)
+                    .withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") <= cap)
+                    .drop("_salt", "_prn", "_rn")
+                )
+            # retried with backoff like the staged write (retry.py); the
+            # fused violation write lands BEFORE the wave's audit rows,
+            # preserving violations-before-lineage ordering
+            with_retries(
+                lambda: capped.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("constraint")
+                .parquet(os.path.join(self.out_dir, "violations_fused"))
+            )
+        finally:
+            fused.unpersist()
+        return counts
 
     def profile(
         self,
@@ -538,323 +693,6 @@ class ValidationRunner:
                         "append"
                     ).parquet(os.path.join(self.out_dir, "profile_tdigest"))
 
-    def run_fused(
-        self,
-        tables: dict[str, DataFrame],
-        constraints: list[Constraint],
-        resume: bool = True,
-        _single_wave: bool = False,
-        _stats: dict[str, tuple[int, list[str]]] | None = None,
-    ) -> RunResult:
-        """Execute the whole plan as ONE Spark job: the violation DataFrames
-        of every pending stage are unioned (they share VIOLATION_SCHEMA) and
-        counted/written in a single pass. Catalyst evaluates the union's
-        branches as independent subtrees of one job, so the cluster stays
-        saturated with zero per-stage scheduling gaps — the fused analogue of
-        the reference's 40-way validation pipeline
-        (src/com/vendekagonlabs/unify/validation/post_import.clj:26-53).
-
-        Trade-off vs ``run``: per-stage wall times and mid-run resumability
-        collapse to one unit (all-or-nothing per run); use ``run`` when
-        stage-grain checkpointing matters more than throughput.
-
-        ``depends_on`` executes as successive fused WAVES: each dependency
-        level fuses into one job, and the next wave drops (gates) stages
-        whose dependencies blocked — the cheap schema wave still saturates
-        the cluster while the decode-heavy wave only runs on clean input.
-
-        ``_stats`` as in :meth:`run`.
-        """
-        from pyspark.sql import Window
-
-        # _single_wave: internal recursion from the wave loop below — the
-        # subset's depends_on names live in EARLIER waves, already adjudicated
-        # by the caller, so re-leveling (and its unknown-name check) must not
-        # run on the subset.
-        levels = [constraints] if _single_wave else _dep_levels(constraints)
-        if len(levels) > 1:
-            by_name = {c.name: c for c in constraints}
-            total = RunResult(run_id=self.ctx.run_id)
-            t0 = time.time()
-            for level in levels:
-                keep = []
-                for c in level:
-                    bad_deps = self._gating_deps(total, c, by_name)
-                    if bad_deps:
-                        self._record_gated(total, c, bad_deps)
-                    else:
-                        keep.append(c)
-                if keep:
-                    r = self.run_fused(
-                        tables, keep, resume=resume, _single_wave=True, _stats=_stats
-                    )
-                    total.verdicts.update(r.verdicts)
-                    for k, v in r.violation_counts.items():
-                        total.violation_counts[k] = total.violation_counts.get(k, 0) + v
-                    total.rows_checked.update(r.rows_checked)
-                    total.skipped.extend(r.skipped)
-                    total.errors.update(r.errors)
-                    total.blocking.update(r.blocking)
-                    total.tolerated.update(r.tolerated)
-                    total.warn_counts.update(r.warn_counts)
-                    total.gated.update(r.gated)
-            total.wall_sec = time.time() - t0
-            total._severity_applied = True
-            return total
-
-        t_run = time.time()
-        # UNIFY_TIMING=1 prints a per-phase breakdown to stderr — the tool
-        # for hunting size-independent overhead (phases that do not shrink
-        # with more cores cap scaling efficiency)
-        marks: list[tuple[str, float]] = []
-
-        def _mark(label: str) -> None:
-            marks.append((label, time.time()))
-
-        res = RunResult(run_id=self.ctx.run_id)
-        done = self.audit.completed_constraints(self.ctx.run_id) if resume else set()
-        parts_done = self.audit.part_results(self.ctx.run_id) if resume else {}
-        rows_done = self.audit.stage_rows_checked(self.ctx.run_id) if resume else {}
-        _mark("resume_read")
-
-        def hydrate(c: Constraint) -> None:
-            for name in getattr(c, "emits", [c.name]):
-                recorded = parts_done.get(name, {})
-                res.violation_counts[name] = res.violation_counts.get(name, 0) + sum(
-                    n for _, n in recorded.values()
-                )
-                # see run()'s hydrate: rate tolerances and dependency gating
-                # need the original denominator on resume
-                if c.name in rows_done:
-                    res.rows_checked.setdefault(name, rows_done[c.name])
-                for p, (s, _) in recorded.items():
-                    res.verdicts[(name, p)] = s == "pass"
-
-        todo = []
-        for c in constraints:
-            if c.name in done:
-                res.skipped.append(c.name)
-                hydrate(c)
-            else:
-                todo.append(c)
-        if not todo:
-            res.wall_sec = time.time() - t_run
-            self._apply_severity(res, constraints)
-            return res
-
-        table_rows, universes = self._stage_stats(tables, todo, _stats)
-        _mark("table_stats")
-
-        # partition-grain resume (mirrors run()): partition-local constraints
-        # with recorded parts recompute only the missing partitions
-        stage_pending: dict[str, list[str] | list[None]] = {}
-        stage_tables: dict[str, dict[str, DataFrame]] = {}
-        live: list[Constraint] = []
-        for c in todo:
-            universe = universes.get(c.table) or []
-            recorded = parts_done.get(c.name, {}) if resume else {}
-            if getattr(c, "partition_local", False) and recorded and universe:
-                pending = [p for p in universe if p not in recorded]
-                hydrate(c)
-                if not pending:
-                    res.skipped.append(c.name)
-                    self.audit.append(
-                        [
-                            {
-                                "run_id": self.ctx.run_id,
-                                "constraint": c.name,
-                                "part": None,
-                                "status": "done",
-                                "violation_count": sum(n for _, n in recorded.values()),
-                                "rows_checked": table_rows.get(c.table, 0),
-                                "wall_sec": 0.0,
-                            }
-                        ]
-                    )
-                    continue
-                stage_pending[c.name] = pending
-                stage_tables[c.name] = {
-                    **tables,
-                    c.table: tables[c.table].filter(
-                        F.col(self.ctx.part_col).isin(pending)
-                    ),
-                }
-            else:
-                stage_pending[c.name] = universe or [None]
-                stage_tables[c.name] = tables
-            live.append(c)
-        todo = live
-        if not todo:
-            res.wall_sec = time.time() - t_run
-            self._apply_severity(res, constraints)
-            return res
-
-        # Row-local constraints (domain/range/required/composite/mapping)
-        # fuse into ONE scan per table: their predicates become an exploded
-        # violation-struct array, so the table's columns are read once for
-        # the whole family instead of once per constraint. Bundles group by
-        # (table, pending-partition set) so a partially-resumed constraint
-        # fuses only with stages scanning the same partition subset.
-        bundles: dict[tuple, list[Constraint]] = {}
-        rest: list[Constraint] = []
-        for c in todo:
-            preds = getattr(c, "row_predicates", None)
-            if preds is not None and c.table in tables and preds(self.ctx) is not None:
-                bkey = (c.table, tuple(stage_pending[c.name]))
-                bundles.setdefault(bkey, []).append(c)
-            else:
-                rest.append(c)
-
-        plans = [
-            _row_local_bundle_plan(stage_tables[cs[0].name][t], cs, t, self.ctx)
-            for (t, _), cs in bundles.items()
-        ] + [c.violations(stage_tables[c.name], self.ctx) for c in rest]
-        fused = plans[0]
-        for p in plans[1:]:
-            fused = fused.unionByName(p)
-
-        # The union of P subtrees would persist as the SUM of their output
-        # partitions (~800 tiny blocks at bench shape); every downstream
-        # pass — count agg, cap window, violating-keys write — then
-        # re-schedules that many tasks, and task scheduling is
-        # driver-serial: the same wall cost at EVERY parallelism level, a
-        # pure scaling-efficiency tax (measured ~2-3s of the local[8]
-        # fused wall). One ROUND-ROBIN exchange collapses the cached frame
-        # to shuffle_partitions balanced blocks; hashing by constraint
-        # here would funnel a large constraint's whole violation set into
-        # one cache task — the exact single-task concentration the salted
-        # cap below exists to avoid. Violation rows are slim (strings + a
-        # long), so the exchange is cheap.
-        fused = fused.repartition(_shuffle_partitions(self.spark)).persist()
-        try:
-            counts_rows = (
-                fused.groupBy("constraint", "part")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            _mark("fused_count")
-            if self.ctx.collect_violating_keys:
-                # UNCAPPED distinct key set off the persisted frame — the
-                # quarantine split's row-complete input (the evidence write
-                # below is capped and cannot drive one). Same dynamic
-                # overwrite discipline: a partial resume replaces only the
-                # constraints it recomputed.
-                with_retries(
-                    lambda: fused.select("constraint", "table", "key", "part")
-                    .distinct()
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("constraint")
-                    .parquet(os.path.join(self.out_dir, "violating_keys"))
-                )
-                _mark("violating_keys")
-            counts: dict[str, dict] = {
-                name: {} for c in todo for name in getattr(c, "emits", [c.name])
-            }
-            for r in counts_rows:
-                counts.setdefault(r["constraint"], {})[r["part"]] = r["n"]
-            # capped per-constraint violation rows, one partitioned write.
-            # dynamic partition overwrite: only the constraints present in
-            # THIS run's output are replaced — a resumed run must not wipe
-            # the violation files of stages it skipped.
-            #
-            # The per-constraint totals are already on the driver, so the
-            # cap is applied only when some constraint actually exceeds it
-            # — the common all-under-cap run writes the cached frame as-is,
-            # no sort, no window. When a constraint IS over cap, a plain
-            # window by constraint would funnel its entire violation set
-            # (potentially ~1% of 10^12 rows) into ONE sort task; instead
-            # the standard two-phase top-k: a salted pre-window keeps at
-            # most cap rows per (constraint, salt) in parallel, and the
-            # global window ranks only the <= cap * n_salts survivors.
-            cap = self.ctx.violation_cap
-            order = [F.col("key").asc_nulls_last(), F.col("column").asc_nulls_last()]
-            if all(sum(d.values()) <= cap for d in counts.values()):
-                capped = fused
-            else:
-                n_salts = _shuffle_partitions(self.spark)
-                pre_w = Window.partitionBy("constraint", "_salt").orderBy(*order)
-                w = Window.partitionBy("constraint").orderBy(*order)
-                capped = (
-                    fused.withColumn(
-                        "_salt",
-                        F.pmod(F.xxhash64("key", "column"), F.lit(n_salts)),
-                    )
-                    .withColumn("_prn", F.row_number().over(pre_w))
-                    .filter(F.col("_prn") <= cap)
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") <= cap)
-                    .drop("_salt", "_prn", "_rn")
-                )
-            # retried with backoff like run()'s per-stage write (retry.py);
-            # the fused violation write lands BEFORE the audit rows below,
-            # preserving violations-before-lineage ordering
-            with_retries(
-                lambda: capped.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("constraint")
-                .parquet(os.path.join(self.out_dir, "violations_fused"))
-            )
-            _mark("capped_write")
-        finally:
-            fused.unpersist()
-
-        wall = time.time() - t_run
-        audit_rows = []
-        for c in todo:
-            stage_total = 0
-            for name in getattr(c, "emits", [c.name]):
-                total = sum(counts.get(name, {}).values())
-                stage_total += total
-                res.violation_counts[name] = res.violation_counts.get(name, 0) + total
-                res.rows_checked[name] = table_rows.get(c.table, 0)
-                # every part key that actually EMITTED violations gets a
-                # lineage row, not just the partition universe: a
-                # table-level constraint (e.g. aggregate consistency) emits
-                # part=NULL rows, and recording only all-pass universe rows
-                # would let a resumed run hydrate the stage back to zero
-                # violations — a failed run silently flipping to passing
-                name_counts = counts.get(name, {})
-                for p in {*stage_pending[c.name], *name_counts}:
-                    n = name_counts.get(p, 0)
-                    res.verdicts[(name, p)] = n == 0
-                    audit_rows.append(
-                        {
-                            "run_id": self.ctx.run_id,
-                            "constraint": name,
-                            "part": p,
-                            "status": "pass" if n == 0 else "fail",
-                            "violation_count": n,
-                        }
-                    )
-            audit_rows.append(
-                {
-                    "run_id": self.ctx.run_id,
-                    "constraint": c.name,
-                    "part": None,
-                    "status": "done",
-                    "violation_count": sum(
-                        res.violation_counts.get(n, 0)
-                        for n in getattr(c, "emits", [c.name])
-                    ),
-                    "rows_checked": res.rows_checked[c.name],
-                    "wall_sec": wall,
-                }
-            )
-        self.audit.append(audit_rows)
-        _mark("audit_append")
-        res.wall_sec = time.time() - t_run
-        if os.environ.get("UNIFY_TIMING") == "1":
-            import sys
-
-            prev = t_run
-            parts = []
-            for label, ts in marks:
-                parts.append(f"{label}={ts - prev:.2f}s")
-                prev = ts
-            print(f"[timing] run_fused: {' '.join(parts)}", file=sys.stderr)
-        self._apply_severity(res, constraints)
-        return res
 
     def run_incremental(
         self,
@@ -1235,6 +1073,14 @@ def _row_local_bundle_plan(df, constraints, table, ctx):
         F.lit(None).cast("string").alias("source_file"),
         F.lit(None).cast("long").alias("row_index"),
     )
+
+
+def _count_by_part(vio: DataFrame) -> dict[str, dict]:
+    """{constraint: {part: n}} over a violation frame, one aggregate job."""
+    counts: dict[str, dict] = {}
+    for r in vio.groupBy("constraint", "part").agg(F.count(F.lit(1)).alias("n")).collect():
+        counts.setdefault(r["constraint"], {})[r["part"]] = r["n"]
+    return counts
 
 
 def _safe(name: str) -> str:
