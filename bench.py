@@ -368,17 +368,18 @@ other direction in the same round.
 
 ### Round-5 serial-overhead fix measured in this table
 
-The fused frame hash-repartitions on `constraint` before its persist
-(plans/runner.py): previously the cached union held ~800 tiny partitions
-(the sum of all subtree outputs) and every downstream pass — count
-aggregate, cap window, violating-keys write — re-scheduled that many
-tasks, a driver-serial cost that is the SAME wall at every parallelism
-level, i.e. a pure scaling-efficiency tax. Profiled at local[8]:
-capped_write 2.76s -> 0.4s, fused wall -5s; official pairs moved from
-0.75-0.87 before the fix to 0.83-0.90 after, with the best-ever 4N walls
-(32.8-36.0s vs prior-best 34.7s). The cap window itself now only runs
-when a constraint's driver-side total exceeds the evidence cap, via a
-salted two-phase top-k (no single-task sort of one constraint's full
+The fused frame round-robin repartitions to the shuffle partition count
+before its persist (plans/runner.py): previously the cached union held
+~800 tiny partitions (the sum of all subtree outputs) and every downstream
+pass — count aggregate, capped write, violating-keys write — re-scheduled
+that many tasks, a driver-serial cost that is the SAME wall at every
+parallelism level, i.e. a pure scaling-efficiency tax. Profiled at
+local[8]: capped_write 2.76s -> 0.4s, fused wall -5s; official pairs
+moved from 0.75-0.87 before the fix to 0.83-0.90 after, with the
+best-ever 4N walls (32.8-36.0s vs prior-best 34.7s). The cap itself only
+runs for a constraint whose driver-side total exceeds the evidence cap,
+as an ordered limit Spark plans as its two-phase top-k
+(TakeOrderedAndProject: no single-task sort of one constraint's full
 violation set).
 
 ## Headline queries at {SF_DIR} (local[{CPUS}])

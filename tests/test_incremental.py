@@ -196,19 +196,18 @@ def test_run_incremental_matches_full_recompute(
     # files under the incremental out dir hold ONLY the changed partition
     # (the baseline has domain violations in several partitions — those
     # verdicts were seeded, their evidence stays in the baseline out dir)
-    vio_dir = os.path.join(inc_out, "violations", "domain_clips.codec")
-    vio_parts = {
-        r["part"] for r in spark.read.parquet(vio_dir).select("part").collect()
-    }
+    def domain_parts(out):
+        vio = spark.read.parquet(os.path.join(out, "violations"))
+        return {
+            r["part"]
+            for r in vio.filter(vio.constraint == "domain:clips.codec")
+            .select("part")
+            .collect()
+        }
+
+    vio_parts = domain_parts(inc_out)
     assert vio_parts == {target}
-    base_vio_parts = {
-        r["part"]
-        for r in spark.read.parquet(
-            os.path.join(base_out, "violations", "domain_clips.codec")
-        )
-        .select("part")
-        .collect()
-    }
+    base_vio_parts = domain_parts(base_out)
     assert len(base_vio_parts) > 1  # the skip actually skipped real work
 
     # chaining: the incremental run saved its own fingerprints

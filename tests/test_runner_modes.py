@@ -213,8 +213,8 @@ def test_violation_write_retries_transient_failures(spark, tmp_path, monkeypatch
     )
     assert calls["n"] >= 2  # first attempt failed, retry succeeded
     assert res.violation_counts and sum(res.violation_counts.values()) == 1
-    vio = spark.read.parquet(str(tmp_path / "out" / "violations" / "range_t.v"))
-    assert vio.count() == 1
+    vio = spark.read.parquet(str(tmp_path / "out" / "violations"))
+    assert vio.filter(vio.constraint == "range:t.v").count() == 1
 
 
 def test_retry_taxonomy_fatal_not_retried():
@@ -278,6 +278,37 @@ def test_violating_keys_sidecar_is_uncapped(spark, audio_tables, tmp_path):
     b = {(r["constraint"], r["table"], r["key"]) for r in runner2.violating_keys().collect()}
     assert a == b
 
+
+
+def test_fused_row_local_keys_match_staged(spark, tmp_path):
+    """A fused row-local bundle keys each constraint's violations by the
+    column its own plan keys by: composite-id rows by their id column, not
+    the table's first column. Both modes then quarantine the same rows."""
+    from unify_spark.operators.constraints import CompositeIdConstraint, RangeConstraint
+
+    df = spark.createDataFrame(
+        [("r1", "a-1", "a", 1, 0.5, "p1"), ("r2", "b-9", "b", 2, 0.5, "p1")],
+        ["row", "sample_id", "x", "y", "v", "part_date"],
+    )
+    suite = [
+        CompositeIdConstraint("t", "sample_id", ["x", "y"]),
+        RangeConstraint("t", "v", min_value=0.0),
+    ]
+    keys, quarantined = {}, {}
+    for mode in ("run", "run_fused"):
+        runner = ValidationRunner(
+            spark, str(tmp_path / mode),
+            ValidationContext(run_id=mode, collect_violating_keys=True),
+        )
+        getattr(runner, mode)({"t": df}, suite, resume=False)
+        keys[mode] = {
+            (r["constraint"], r["key"]) for r in runner.violating_keys().collect()
+        }
+        _, q = runner.split_valid(df, "t", "sample_id")
+        quarantined[mode] = sorted(r["sample_id"] for r in q.collect())
+    assert keys["run"] == {("composite_id:t.sample_id", "b-9")}
+    assert keys["run_fused"] == keys["run"]
+    assert quarantined["run"] == quarantined["run_fused"] == ["b-9"]
 
 def test_split_valid_partitions_table_exactly(spark, audio_tables, tmp_path):
     """clean + quarantined partition the table; quarantined == rows whose
@@ -526,17 +557,19 @@ def test_depends_on_config_key(tmp_path):
     assert c.depends_on == ["uniqueness:clips.clip_id"]
 
 
-def test_fused_cap_two_phase_topk(spark, audio_tables, tmp_path):
-    """Over-cap constraints write EXACTLY the global top-cap rows by
-    (key, column) through the salted two-phase window (the all-under-cap
-    fast path skips the sort entirely); under-cap constraints keep every
-    row. Pinned against a driver-side sort of the uncapped key set."""
+@pytest.mark.parametrize("mode", ["run", "run_fused"])
+def test_fused_cap_two_phase_topk(spark, audio_tables, tmp_path, mode):
+    """Both executors write one evidence layout with one cap: over-cap
+    constraints write EXACTLY the global top-cap rows by (key, column)
+    through Spark's two-phase top-k (TakeOrderedAndProject); under-cap
+    constraints keep every row. Pinned against a driver-side sort of the
+    uncapped key set."""
     ctx = ValidationContext(run_id="tp", payload_cap_ms=50, violation_cap=5)
     runner = ValidationRunner(spark, str(tmp_path), ctx)
-    res = runner.run_fused(audio_tables, audio_suite(), resume=False)
+    res = getattr(runner, mode)(audio_tables, audio_suite(), resume=False)
     import os as _os
 
-    ev = spark.read.parquet(_os.path.join(str(tmp_path), "violations_fused"))
+    ev = spark.read.parquet(_os.path.join(str(tmp_path), "violations"))
     per = {
         r["constraint"]: r["n"]
         for r in ev.groupBy("constraint").count().withColumnRenamed("count", "n").collect()

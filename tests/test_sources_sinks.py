@@ -58,15 +58,24 @@ def test_retract_run(spark, audio_tables, tmp_path):
 
     out = str(tmp_path / "run_out")
     runner = ValidationRunner(
-        spark, out, ValidationContext(run_id="to-retract", payload_cap_ms=50)
+        spark,
+        out,
+        ValidationContext(
+            run_id="to-retract", payload_cap_ms=50, collect_violating_keys=True
+        ),
     )
     runner.run_fused(audio_tables, audio_suite(), resume=False)
     assert runner.audit.completed_constraints("to-retract")
+    assert os.path.exists(os.path.join(out, "violations"))
+    assert os.path.exists(os.path.join(out, "violating_keys"))
     removed = retract_run(spark, out, "to-retract")
     assert removed > 0
     # retraction makes the run resumable-from-scratch again
     assert runner.audit.completed_constraints("to-retract") == set()
-    assert not os.path.exists(os.path.join(out, "violations_fused"))
+    # and its evidence and violating keys are gone: a retracted run's keys
+    # must not drive split_valid
+    assert not os.path.exists(os.path.join(out, "violations"))
+    assert not os.path.exists(os.path.join(out, "violating_keys"))
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):

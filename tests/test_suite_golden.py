@@ -20,15 +20,14 @@ def run(spark, audio_tables, manifest, tmp_path_factory):
 
 
 def _violation_keys(spark, out, constraint_name):
-    import glob
     import os
 
     # stages can emit several constraint names (e.g. payload also emits the
     # bytes-nullness rows), so scan all written violations and filter
-    dirs = glob.glob(os.path.join(out, "violations", "*"))
-    if not dirs:
+    path = os.path.join(out, "violations")
+    if not os.path.exists(path):
         return set()
-    df = spark.read.parquet(*dirs)
+    df = spark.read.parquet(path)
     return {
         r["key"]
         for r in df.filter(df["constraint"] == constraint_name)

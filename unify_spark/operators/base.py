@@ -160,6 +160,12 @@ class Constraint:
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         raise NotImplementedError
 
+    def row_key(self, df: DataFrame) -> str:
+        """The column a row-local violation is keyed by: ``clip_id`` when the
+        table has one, else its first column. The fused row-local bundle
+        keys each constraint's rows by the same column."""
+        return "clip_id" if "clip_id" in df.columns else df.columns[0]
+
     def config_fingerprint(self) -> str:
         """Stable hash of this constraint's CONFIGURATION — every public
         attribute that shapes its verdict (thresholds, allowed sets, sample

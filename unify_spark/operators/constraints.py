@@ -172,7 +172,7 @@ class DomainConstraint(Constraint):
                 dim, on=self.column, how="left_anti"
             )
             expected = f"in {self.dim_table}.{self.dim_key}"
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         return make_violations(
             bad,
             constraint=self.name,
@@ -236,7 +236,7 @@ class RangeConstraint(Constraint):
             ok = ok & (c <= self.max_value)
             desc.append("<=" + str(self.max_value))
         bad = df.filter(c.isNotNull() & ~ok)
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         return make_violations(
             bad,
             constraint=self.name,
@@ -320,7 +320,7 @@ class DerivedRangeConstraint(Constraint):
         df = tables[self.table]
         e, ok, desc = self._ok_expr()
         bad = df.filter(e.isNotNull() & ~ok)
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         return make_violations(
             bad,
             constraint=self.name,
@@ -357,7 +357,7 @@ class RequiredConstraint(Constraint):
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         parts = []
         for col in self.columns:
             c = F.col(col)
@@ -417,6 +417,9 @@ class CompositeIdConstraint(Constraint):
         self.sep = sep
         self.name = f"composite_id:{table}.{id_col}"
 
+    def row_key(self, df: DataFrame) -> str:
+        return self.id_col
+
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
         expected = F.concat_ws(self.sep, *[F.col(c).cast("string") for c in self.components])
@@ -425,7 +428,7 @@ class CompositeIdConstraint(Constraint):
             bad,
             constraint=self.name,
             table=self.table,
-            key=self.id_col,
+            key=self.row_key(df),
             column=self.id_col,
             observed=self.id_col,
             expected=f"concat_ws('{self.sep}', {', '.join(self.components)})",
@@ -460,7 +463,7 @@ class EnumMappingConstraint(Constraint):
         df = tables[self.table]
         keys = list(self.mapping.keys())
         bad = df.filter(F.col(self.column).isNotNull() & ~F.col(self.column).isin(keys))
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         return make_violations(
             bad,
             constraint=self.name,
@@ -521,7 +524,7 @@ class RegexConstraint(Constraint):
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         return make_violations(
             df.filter(self._fail()),
             constraint=self.name,
@@ -568,7 +571,7 @@ class LengthConstraint(Constraint):
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         return make_violations(
             df.filter(self._fail()),
             constraint=self.name,
@@ -606,7 +609,7 @@ class AnyPresentConstraint(Constraint):
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         return make_violations(
             df.filter(self._fail()),
             constraint=self.name,
@@ -652,7 +655,7 @@ class ConditionalConstraint(Constraint):
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         parts = [
             make_violations(
                 df.filter(fail),
@@ -1033,7 +1036,7 @@ class VectorConstraint(Constraint):
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
-        key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+        key = self.row_key(df)
         reason = self._reason()
         return make_violations(
             df.withColumn("_vr", reason).filter(F.col("_vr").isNotNull()),

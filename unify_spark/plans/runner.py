@@ -18,7 +18,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unify_spark.operators.base import Constraint, ValidationContext, empty_violations
@@ -74,14 +74,12 @@ class _Stage:
     pending: list
     tables: dict[str, DataFrame]
     rows: int
-    partial: bool = False
 
 
 def _shuffle_partitions(spark: SparkSession, default: int = 200) -> int:
     """spark.sql.shuffle.partitions as an int, tolerating non-numeric
-    values like 'auto' (AQE-managed deployments) — used only to size the
-    fused cache layout and the cap salt, where any sane positive count
-    works."""
+    values like 'auto' (AQE-managed deployments) — used only to size a
+    multi-plan job's cache layout, where any sane positive count works."""
     try:
         return max(1, int(spark.conf.get("spark.sql.shuffle.partitions", str(default))))
     except (TypeError, ValueError):
@@ -365,9 +363,8 @@ class ValidationRunner:
                     stage.pending = [p for p in universe if p not in recorded]
                     if not stage.pending:
                         res.skipped.append(c.name)
-                        self.audit.append([self._record(res, stage, {}, 0.0)[1]])
+                        self.audit.append(self._record(res, [stage], {}, 0.0))
                         continue
-                    stage.partial = True
                     stage.tables = {
                         **tables,
                         c.table: tables[c.table].filter(
@@ -383,53 +380,64 @@ class ValidationRunner:
         return res
 
     def _record(
-        self, res: RunResult, stage: _Stage, counts: dict[str, dict], wall: float
-    ) -> tuple[list[dict], dict]:
-        """Fold a stage's freshly counted violations ({name: {part: n}})
-        into ``res`` and return its pass/fail lineage rows and its 'done'
-        marker. One rule for both executors and for a stage whose
-        partitions were all recorded already (empty ``counts``): every
-        emitted name gets the stage's rows_checked, and the marker's count
-        covers every name the stage emits (payload also emits the
-        bytes-nullness constraint), hydrated partitions included. Callers
-        that run stages concurrently hold the result lock."""
-        c = stage.c
-        emits = getattr(c, "emits", [c.name])
-        lineage = []
-        for name in emits:
-            name_counts = counts.get(name, {})
-            res.violation_counts[name] = res.violation_counts.get(name, 0) + sum(
-                name_counts.values()
-            )
-            res.rows_checked[name] = stage.rows
-            # every part key that actually EMITTED violations gets a
-            # lineage row, not just the partition universe: a
-            # table-level constraint (e.g. aggregate consistency) emits
-            # part=NULL rows, and recording only all-pass universe rows
-            # would let a resumed run hydrate the stage back to zero
-            # violations — a failed run silently flipping to passing
-            for p in {*stage.pending, *name_counts}:
-                n = name_counts.get(p, 0)
-                res.verdicts[(name, p)] = n == 0
-                lineage.append(
-                    {
-                        "run_id": self.ctx.run_id,
-                        "constraint": name,
-                        "part": p,
-                        "status": "pass" if n == 0 else "fail",
-                        "violation_count": n,
-                    }
+        self, res: RunResult, stages: list[_Stage], counts: dict[str, dict], wall: float
+    ) -> list[dict]:
+        """Fold a job's freshly counted violations ({name: {part: n}}) into
+        ``res`` and return the job's audit rows: every stage's pass/fail
+        lineage rows first, then the 'done' markers. One rule for both
+        executors and for a stage whose partitions were all recorded already
+        (empty ``counts``): every emitted name gets the stage's rows_checked,
+        and the marker's count covers every name the stage emits (payload
+        also emits the bytes-nullness constraint), hydrated partitions
+        included. Callers that run jobs concurrently hold the result lock."""
+        lineage, done = [], []
+        for stage in stages:
+            c = stage.c
+            emits = getattr(c, "emits", [c.name])
+            for name in emits:
+                name_counts = counts.get(name, {})
+                res.violation_counts[name] = res.violation_counts.get(name, 0) + sum(
+                    name_counts.values()
                 )
-        done = self._marker(
-            c.name,
-            "done",
-            violation_count=sum(res.violation_counts[n] for n in emits),
-            rows_checked=stage.rows,
-            wall_sec=wall,
-        )
-        return lineage, done
+                res.rows_checked[name] = stage.rows
+                # every part key that actually EMITTED violations gets a
+                # lineage row, not just the partition universe: a
+                # table-level constraint (e.g. aggregate consistency) emits
+                # part=NULL rows, and recording only all-pass universe rows
+                # would let a resumed run hydrate the stage back to zero
+                # violations — a failed run silently flipping to passing
+                for p in {*stage.pending, *name_counts}:
+                    n = name_counts.get(p, 0)
+                    res.verdicts[(name, p)] = n == 0
+                    lineage.append(
+                        {
+                            "run_id": self.ctx.run_id,
+                            "constraint": name,
+                            "part": p,
+                            "status": "pass" if n == 0 else "fail",
+                            "violation_count": n,
+                        }
+                    )
+            done.append(
+                self._marker(
+                    c.name,
+                    "done",
+                    violation_count=sum(res.violation_counts[n] for n in emits),
+                    rows_checked=stage.rows,
+                    wall_sec=wall,
+                )
+            )
+        return lineage + done
 
-    # -- staged executor -----------------------------------------------------
+    # -- executors -----------------------------------------------------------
+    #
+    # Both executors run every job through _job and append its audit rows
+    # ONCE, after the evidence write: a kill between the two leaves evidence
+    # without lineage (rewritten by the resumed run) rather than 'fail'
+    # lineage whose evidence rows were never persisted (which a
+    # partition-grain resume would skip forever). Lineage and the 'done'
+    # marker share that one append, so a stage is either wholly recorded or
+    # not at all. The executors differ only in how stages group into jobs.
 
     def _run_level_staged(self, res: RunResult, stages: list[_Stage]) -> bool:
         """One job per stage, each on its own thread; sequential under
@@ -442,7 +450,11 @@ class ValidationRunner:
             an 'error' audit row and the run report instead of killing the
             other stages (fail-at-end); fail_fast re-raises."""
             try:
-                self._run_stage(res, stage, lock)
+                t0 = time.time()
+                counts = self._job([stage])
+                with lock:
+                    rows = self._record(res, [stage], counts, time.time() - t0)
+                self.audit.append(rows)
             except Exception as e:  # noqa: BLE001 — trap IS the contract
                 with lock:
                     res.errors[stage.c.name] = f"{type(e).__name__}: {e}"
@@ -465,169 +477,110 @@ class ValidationRunner:
             list(ex.map(run_stage_trapped, stages))
         return False
 
-    def _run_stage(self, res: RunResult, stage: _Stage, lock: threading.Lock) -> None:
-        """One stage's job: persist, count, write the evidence, then the
-        lineage rows, then the 'done' row."""
-        t0 = time.time()
-        c = stage.c
-        # cache so the count aggregation and the capped write share ONE
-        # computation of the (possibly expensive) constraint plan
-        vio = c.violations(stage.tables, self.ctx).persist()
-        try:
-            counts = _count_by_part(vio)
-            if counts:
-                # partial reruns append (prior parts' violation files stay);
-                # fresh stages overwrite. Retried with backoff: a transient
-                # sink failure must not abort the stage (retry.py taxonomy).
-                mode = "append" if stage.partial else "overwrite"
-                with_retries(
-                    lambda: vio.limit(self.ctx.violation_cap)
-                    .coalesce(1)
-                    .write.mode(mode)
-                    .parquet(os.path.join(self.out_dir, "violations", _safe(c.name)))
-                )
-                if self.ctx.collect_violating_keys:
-                    # uncapped key set (quarantine input); dynamic
-                    # overwrite scoped to THIS stage's constraint names
-                    with_retries(
-                        lambda: vio.select("constraint", "table", "key", "part")
-                        .distinct()
-                        .write.mode(mode)
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("constraint")
-                        .parquet(os.path.join(self.out_dir, "violating_keys"))
-                    )
-            with lock:
-                lineage, done = self._record(res, stage, counts, time.time() - t0)
-            # phase 1: part-grain lineage rows land AFTER the violation
-            # write — a kill between the two leaves violations without
-            # lineage (rewritten by the resumed run) rather than 'fail'
-            # lineage whose evidence rows were never persisted (which a
-            # partition-grain resume would skip forever)
-            self.audit.append(lineage)
-        finally:
-            vio.unpersist()
-        # phase 2: the stage 'done' marker — whole-stage resume key
-        self.audit.append([done])
-
-    # -- fused executor ------------------------------------------------------
-
     def _run_level_fused(self, res: RunResult, stages: list[_Stage]) -> bool:
-        """One level's stages as ONE Spark job (a wave), audited in one
-        append. Spark offers no per-branch error trap inside a union, so a
-        wave whose job raises re-runs through the staged executor."""
+        """One level's stages as ONE Spark job (a wave). Spark offers no
+        per-branch error trap inside a union, so a wave whose job raises
+        re-runs through the staged executor."""
         t0 = time.time()
         try:
-            counts = self._fused_job(stages)
+            counts = self._job(stages)
         except Exception:  # noqa: BLE001 — the staged executor traps per stage
             return self._run_level_staged(res, stages)
-        wall = time.time() - t0
-        rows = []
-        for stage in stages:
-            lineage, done = self._record(res, stage, counts, wall)
-            rows += lineage + [done]
-        self.audit.append(rows)
+        self.audit.append(self._record(res, stages, counts, time.time() - t0))
         return False
 
-    def _fused_job(self, stages: list[_Stage]) -> dict[str, dict]:
-        """Union the stages' violation plans, count them and write the
-        evidence; returns {name: {part: n}} for the names with violations."""
+    def _job(self, stages: list[_Stage]) -> dict[str, dict]:
+        """One Spark job over the stages' violation plans, the same steps
+        under both executors: build and union the plans, persist, count,
+        write the uncapped violating-keys sidecar and the capped evidence,
+        unpersist. Returns {name: {part: n}} for the names with violations."""
         # Row-local constraints (domain/range/required/composite/mapping)
         # fuse into ONE scan per table: their predicates become an exploded
         # violation-struct array, so the table's columns are read once for
         # the whole family instead of once per constraint. Bundles group by
         # (table, pending-partition set) so a partially-resumed constraint
-        # fuses only with stages scanning the same partition subset.
-        bundles: dict[tuple, list[_Stage]] = {}
-        rest: list[_Stage] = []
+        # fuses only with stages scanning the same partition subset. A
+        # bundle of one runs the constraint's own plan, so a one-stage job
+        # stays the reference the fused bundles are checked against.
+        groups: dict = {}
         for st in stages:
             preds = getattr(st.c, "row_predicates", None)
-            if preds is not None and st.c.table in st.tables and preds(self.ctx) is not None:
-                bundles.setdefault((st.c.table, tuple(st.pending)), []).append(st)
-            else:
-                rest.append(st)
-
+            fusable = preds is not None and st.c.table in st.tables and preds(self.ctx) is not None
+            groups.setdefault((st.c.table, tuple(st.pending)) if fusable else id(st), []).append(st)
         plans = [
-            _row_local_bundle_plan(sts[0].tables[t], [st.c for st in sts], t, self.ctx)
-            for (t, _), sts in bundles.items()
-        ] + [st.c.violations(st.tables, self.ctx) for st in rest]
-        fused = plans[0]
+            _row_local_bundle_plan(
+                sts[0].tables[sts[0].c.table], [st.c for st in sts], sts[0].c.table, self.ctx
+            )
+            if len(sts) > 1
+            else sts[0].c.violations(sts[0].tables, self.ctx)
+            for sts in groups.values()
+        ]
+        vio = plans[0]
         for p in plans[1:]:
-            fused = fused.unionByName(p)
-
-        # The union of P subtrees would persist as the SUM of their output
-        # partitions (~800 tiny blocks at bench shape); every downstream
-        # pass — count agg, cap window, violating-keys write — then
-        # re-schedules that many tasks, and task scheduling is
-        # driver-serial: the same wall cost at EVERY parallelism level, a
-        # pure scaling-efficiency tax (measured ~2-3s of the local[8]
-        # fused wall). One ROUND-ROBIN exchange collapses the cached frame
-        # to shuffle_partitions balanced blocks; hashing by constraint
-        # here would funnel a large constraint's whole violation set into
-        # one cache task — the exact single-task concentration the salted
-        # cap below exists to avoid. Violation rows are slim (strings + a
-        # long), so the exchange is cheap.
-        fused = fused.repartition(_shuffle_partitions(self.spark)).persist()
+            vio = vio.unionByName(p)
+        if len(plans) > 1:
+            # The union of P subtrees would persist as the SUM of their
+            # output partitions (~800 tiny blocks at bench shape); every
+            # downstream pass — count agg, evidence and violating-keys
+            # writes — then re-schedules that many tasks, and task
+            # scheduling is driver-serial: the same wall cost at EVERY
+            # parallelism level, a pure scaling-efficiency tax (measured
+            # ~2-3s of the local[8] fused wall). One ROUND-ROBIN exchange
+            # collapses the cached frame to shuffle_partitions balanced
+            # blocks; hashing by constraint here would funnel a large
+            # constraint's whole violation set into one cache task.
+            # Violation rows are slim (strings + a long), so the exchange
+            # is cheap.
+            vio = vio.repartition(_shuffle_partitions(self.spark))
+        # cache so the count aggregation and the writes share ONE
+        # computation of the (possibly expensive) constraint plans
+        vio = vio.persist()
         try:
-            counts = _count_by_part(fused)
-            if self.ctx.collect_violating_keys:
-                # UNCAPPED distinct key set off the persisted frame — the
-                # quarantine split's row-complete input (the evidence write
-                # below is capped and cannot drive one). Same dynamic
-                # overwrite discipline: a partial resume replaces only the
-                # constraints it recomputed.
+            counts = _count_by_part(vio)
+            if counts:
+                # Both writes are retried with backoff: a transient sink
+                # failure must not abort the job (retry.py taxonomy). Both
+                # use dynamic partition overwrite, so only the constraints
+                # present in THIS job's output are replaced — concurrent
+                # jobs and a resumed run's skipped stages keep their files.
+                if self.ctx.collect_violating_keys:
+                    # UNCAPPED distinct key set off the persisted frame —
+                    # the quarantine split's row-complete input (the capped
+                    # evidence below cannot drive one)
+                    with_retries(
+                        lambda: vio.select("constraint", "table", "key", "part")
+                        .distinct()
+                        .write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("constraint")
+                        .parquet(os.path.join(self.out_dir, "violating_keys"))
+                    )
+                # The per-constraint totals are already on the driver, so
+                # the cap touches only names over it: each keeps its global
+                # top-cap rows by (key, column). Spark plans the ordered
+                # limit as TakeOrderedAndProject, a two-phase top-k — each
+                # task keeps at most cap rows and one task merges them — so
+                # no task sorts a constraint's full violation set. The
+                # capped frame holds at most cap rows per name: one file
+                # per constraint.
+                cap = self.ctx.violation_cap
+                over = [n for n, d in counts.items() if sum(d.values()) > cap]
+                capped = vio.filter(~F.col("constraint").isin(over)) if over else vio
+                for n in over:
+                    capped = capped.unionByName(
+                        vio.filter(F.col("constraint") == n)
+                        .orderBy(F.col("key").asc_nulls_last(), F.col("column").asc_nulls_last())
+                        .limit(cap)
+                    )
                 with_retries(
-                    lambda: fused.select("constraint", "table", "key", "part")
-                    .distinct()
+                    lambda: capped.coalesce(1)
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("constraint")
-                    .parquet(os.path.join(self.out_dir, "violating_keys"))
+                    .parquet(os.path.join(self.out_dir, "violations"))
                 )
-            # capped per-constraint violation rows, one partitioned write.
-            # dynamic partition overwrite: only the constraints present in
-            # THIS run's output are replaced — a resumed run must not wipe
-            # the violation files of stages it skipped.
-            #
-            # The per-constraint totals are already on the driver, so the
-            # cap is applied only when some constraint actually exceeds it
-            # — the common all-under-cap run writes the cached frame as-is,
-            # no sort, no window. When a constraint IS over cap, a plain
-            # window by constraint would funnel its entire violation set
-            # (potentially ~1% of 10^12 rows) into ONE sort task; instead
-            # the standard two-phase top-k: a salted pre-window keeps at
-            # most cap rows per (constraint, salt) in parallel, and the
-            # global window ranks only the <= cap * n_salts survivors.
-            cap = self.ctx.violation_cap
-            order = [F.col("key").asc_nulls_last(), F.col("column").asc_nulls_last()]
-            if all(sum(d.values()) <= cap for d in counts.values()):
-                capped = fused
-            else:
-                n_salts = _shuffle_partitions(self.spark)
-                pre_w = Window.partitionBy("constraint", "_salt").orderBy(*order)
-                w = Window.partitionBy("constraint").orderBy(*order)
-                capped = (
-                    fused.withColumn(
-                        "_salt",
-                        F.pmod(F.xxhash64("key", "column"), F.lit(n_salts)),
-                    )
-                    .withColumn("_prn", F.row_number().over(pre_w))
-                    .filter(F.col("_prn") <= cap)
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") <= cap)
-                    .drop("_salt", "_prn", "_rn")
-                )
-            # retried with backoff like the staged write (retry.py); the
-            # fused violation write lands BEFORE the wave's audit rows,
-            # preserving violations-before-lineage ordering
-            with_retries(
-                lambda: capped.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("constraint")
-                .parquet(os.path.join(self.out_dir, "violations_fused"))
-            )
         finally:
-            fused.unpersist()
+            vio.unpersist()
         return counts
 
     def profile(
@@ -858,20 +811,22 @@ class ValidationRunner:
     def violating_keys(self) -> DataFrame:
         """The run's UNCAPPED distinct (constraint, table, key) sidecar —
         written when ``ctx.collect_violating_keys`` is set. A FULLY CLEAN
-        per-stage run writes no files (run() guards its sink behind
-        ``if total:``, and an empty partitioned parquet would not even be
-        schema-readable), so when this runner collects violating keys and
-        the sidecar is absent/empty the honest answer is an empty key set —
-        every row routes to clean — not an error (advisor round-5 fix).
-        The error remains for runners that never collected keys at all."""
+        run writes no files in either mode (every job guards its sinks
+        behind ``if counts:``, and an empty partitioned parquet would not
+        even be schema-readable), so when this runner collects violating
+        keys and the sidecar is absent/empty the honest answer is an empty
+        key set — every row routes to clean — not an error (advisor round-5
+        fix). The error remains for runners that never collected keys at
+        all."""
         path = os.path.join(self.out_dir, "violating_keys")
         schema = "constraint string, table string, key string, part string"
         if os.path.exists(path):
             try:
                 return self.spark.read.parquet(path)
             except Exception:
-                # directory exists but holds no readable files (clean run
-                # under the fused path writes at least the _SUCCESS marker)
+                # directory exists but holds no readable files (an
+                # incremental run composing an empty seeded key set leaves
+                # only the _SUCCESS marker)
                 if self.ctx.collect_violating_keys:
                     return self.spark.createDataFrame([], schema)
                 raise
@@ -1040,8 +995,8 @@ class ValidationRunner:
 def _row_local_bundle_plan(df, constraints, table, ctx):
     """One-scan fused plan for a table's row-local constraints: per row, an
     array of violation structs (one slot per failing predicate), compacted
-    and exploded into canonical VIOLATION_SCHEMA rows."""
-    key = "clip_id" if "clip_id" in df.columns else df.columns[0]
+    and exploded into canonical VIOLATION_SCHEMA rows. Each struct carries
+    its constraint's own row key, the one its ``violations()`` keys by."""
     part_col = ctx.part_col if ctx.part_col in df.columns else None
     structs = []
     for c in constraints:
@@ -1051,6 +1006,7 @@ def _row_local_bundle_plan(df, constraints, table, ctx):
                     fail,
                     F.struct(
                         F.lit(c.name).alias("constraint"),
+                        F.col(c.row_key(df)).cast("string").alias("key"),
                         F.lit(column).alias("column"),
                         observed.cast("string").alias("observed"),
                         F.lit(expected).alias("expected"),
@@ -1058,14 +1014,13 @@ def _row_local_bundle_plan(df, constraints, table, ctx):
                 )
             )
     exploded = df.select(
-        F.col(key).cast("string").alias("key"),
         (F.col(part_col) if part_col else F.lit(None)).cast("string").alias("part"),
         F.explode(F.array_compact(F.array(*structs))).alias("v"),
     )
     return exploded.select(
         F.col("v.constraint").alias("constraint"),
         F.lit(table).alias("table"),
-        F.col("key"),
+        F.col("v.key").alias("key"),
         F.col("v.column").alias("column"),
         F.col("v.observed").alias("observed"),
         F.col("v.expected").alias("expected"),
@@ -1081,7 +1036,3 @@ def _count_by_part(vio: DataFrame) -> dict[str, dict]:
     for r in vio.groupBy("constraint", "part").agg(F.count(F.lit(1)).alias("n")).collect():
         counts.setdefault(r["constraint"], {})[r["part"]] = r["n"]
     return counts
-
-
-def _safe(name: str) -> str:
-    return "".join(ch if ch.isalnum() or ch in "._-" else "_" for ch in name)

@@ -73,8 +73,9 @@ def upsert_dim(
 
 
 def retract_run(spark: SparkSession, out_dir: str, run_id: str) -> int:
-    """Undo a run: remove its audit rows and violation outputs. Returns the
-    number of audit rows retracted. (Iceberg: DELETE WHERE run_id = ...)"""
+    """Undo a run: remove its audit rows, violation evidence and violating
+    keys. Returns the number of audit rows retracted. (Iceberg: DELETE
+    WHERE run_id = ...)"""
     audit_path = os.path.join(out_dir, "audit")
     removed = 0
     if os.path.exists(audit_path):
@@ -86,7 +87,7 @@ def retract_run(spark: SparkSession, out_dir: str, run_id: str) -> int:
             kept.coalesce(1).write.mode("overwrite").parquet(tmp)
             shutil.rmtree(audit_path)
             os.rename(tmp, audit_path)
-    for sub in ("violations", "violations_fused"):
+    for sub in ("violations", "violating_keys"):
         p = os.path.join(out_dir, sub)
         if os.path.exists(p):
             shutil.rmtree(p)
