@@ -26,7 +26,8 @@ def _audio_config_doc(fixture_dir: str) -> dict:
             "reference_decode": os.path.join(fixture_dir, "reference_decode.parquet"),
         },
         "constraints": [
-            {"type": "uniqueness", "table": "clips", "keys": ["clip_id"]},
+            # `salted` is a legacy key: still accepted, ignored
+            {"type": "uniqueness", "table": "clips", "keys": ["clip_id"], "salted": True},
             {
                 "type": "referential",
                 "child_table": "transcript_map",

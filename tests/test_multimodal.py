@@ -1,59 +1,7 @@
-"""Multimodal plumbing: binary payload columns + typed metadata through
-Arrow-batched mapInPandas. Decoders for real codecs are stubs (container has
-no image libs); the deterministic raw_rgb path exercises the full pipeline."""
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from unify_spark.functions import multimodal as mm
-
-
-@pytest.fixture(scope="module")
-def media_df(spark):
-    rng = np.random.Generator(np.random.PCG64(11))
-    rows = []
-    for i in range(6):
-        w, h = 8, 4
-        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        rows.append((f"img-{i}", bytes(img.tobytes()), ("image", "raw_rgb", w, h, None, None)))
-    # a jpeg payload → decoder-missing stub path
-    rows.append(("img-jpeg", b"\xff\xd8\xff\xe0fakejpeg", ("image", "jpeg", None, None, None, None)))
-    # a truncated raw_rgb payload → decode error path
-    rows.append(("img-bad", b"\x00" * 10, ("image", "raw_rgb", 8, 4, None, None)))
-    # a 3-frame raw video
-    vid = rng.integers(0, 256, size=(3, 4, 8, 3), dtype=np.uint8)
-    rows.append(("vid-0", bytes(vid.tobytes()), ("video", "raw_rgb", 8, 4, 3, None)))
-    schema = f"key string, payload binary, meta struct<media_type:string,format:string,width:int,height:int,n_frames:int,sample_rate:int>"
-    return spark.createDataFrame(rows, schema)
-
-
-def test_image_features(media_df):
-    out = mm.image_features(media_df.filter(F.col("meta.media_type") == "image"))
-    rows = {r["key"]: r for r in out.collect()}
-    ok = [k for k, r in rows.items() if r["ok"]]
-    assert sorted(ok) == [f"img-{i}" for i in range(6)]
-    r0 = rows["img-0"]
-    assert r0["width"] == 8 and r0["height"] == 4
-    assert 0.0 <= r0["mean_luma"] <= 255.0
-    assert r0["byte_entropy"] > 5.0  # random bytes ≈ high entropy
-    assert not rows["img-jpeg"]["ok"] and "decoder-missing" in rows["img-jpeg"]["error"]
-    assert not rows["img-bad"]["ok"] and "payload" in rows["img-bad"]["error"]
-
-
-def test_video_frame_sampling(media_df):
-    out = mm.sample_video_frames(
-        media_df.filter(F.col("meta.media_type") == "video"), every_n=2
-    )
-    rows = out.collect()
-    good = [r for r in rows if r["ok"]]
-    assert [r["frame_index"] for r in good] == [0, 2]
-    assert all(len(r["frame_bytes"]) == 8 * 4 * 3 for r in good)
-
-
-def test_resize_stub_raises():
-    with pytest.raises(NotImplementedError):
-        mm.resize_stub()
+"""Audio column operators: binary payload columns decoded by the in-repo
+codecs through Arrow-batched mapInPandas — features, activity segments,
+loudness normalization, spectral embeddings and acoustic near-dup
+detection."""
 
 
 def test_audio_features_real_decode(spark):

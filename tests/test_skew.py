@@ -1,5 +1,5 @@
-"""Skew robustness: salted uniqueness under an adversarially hot key, and
-AQE skew-join configuration presence."""
+"""Skew robustness: uniqueness under an adversarially hot key, and AQE
+skew-join configuration presence."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,32 +9,21 @@ from unify_spark.operators.base import ValidationContext
 
 
 def test_salted_uniqueness_hot_key(spark):
-    """One key holds 50% of all rows (the pathological hot key). The salted
-    two-phase plan must still produce exact duplicate counts — phase 1
-    partials are keyed by physical partition, so no single reducer receives
-    the whole hot key's raw rows."""
+    """One key holds 50% of all rows (the pathological hot key). The one
+    aggregate plan must still produce exact duplicate counts — its map-side
+    partials pre-combine inside each physical partition, so no single
+    reducer receives the whole hot key's raw rows."""
     n = 40_000
     hot = spark.range(n // 2).select(F.lit("HOT").alias("k"))
     cold = spark.range(n // 2).select(F.concat(F.lit("k"), F.col("id")).alias("k"))
     dup_cold = spark.createDataFrame([("k7",), ("k9",)], ["k"])
     df = hot.unionByName(cold).unionByName(dup_cold).repartition(16)
-    c = UniquenessConstraint("t", ["k"], salted=True)
+    c = UniquenessConstraint("t", ["k"])
     vio = c.violations({"t": df}, ValidationContext(part_col="none"))
     rows = {r["key"]: int(r["observed"]) for r in vio.select("key", "observed").distinct().collect()}
     assert rows["HOT"] == n // 2
     assert rows["k7"] == 2 and rows["k9"] == 2
     assert len(rows) == 3  # nothing else flagged
-
-
-def test_salted_matches_unsalted(spark):
-    df = spark.range(10_000).select((F.col("id") % 3000).cast("string").alias("k"))
-    ctx = ValidationContext(part_col="none")
-    a = UniquenessConstraint("t", ["k"], salted=True).violations({"t": df}, ctx)
-    b = UniquenessConstraint("t", ["k"], salted=False).violations({"t": df}, ctx)
-    assert a.count() == b.count()
-    ka = {(r["key"], r["observed"]) for r in a.select("key", "observed").distinct().collect()}
-    kb = {(r["key"], r["observed"]) for r in b.select("key", "observed").distinct().collect()}
-    assert ka == kb
 
 
 def test_aqe_skew_config(spark):

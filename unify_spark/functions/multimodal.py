@@ -1,15 +1,12 @@
-"""Multimodal column operators: image / audio / video payloads as opaque
-``binary`` columns with typed metadata, processed by Arrow-batched
+"""Audio column operators: audio payloads as opaque ``binary`` columns
+(codec and sample rate alongside), processed by Arrow-batched
 ``mapInPandas`` (never per-row Python).
 
-The container has no image/video libraries, so — per the build brief — the
-actual pixel/frame decoders are STUBS: ``decode_image``/``decode_video_frame``
-raise ``NotImplementedError`` unless a deterministic fake decoder is enabled.
-Everything Spark-side is real and tested: schemas, batch shapes, partitioning,
-UDF signatures, metadata propagation. Swapping a real decoder (Pillow,
-pyav) into ``_DECODERS`` changes no Spark code.
-
-Audio is NOT stubbed — see ``unify_spark.audio.pcm`` (real codecs).
+Every decoder is real — see ``unify_spark.audio.pcm`` (the in-repo codecs).
+One shared decode stage (``_decode_group_iter``) groups a batch by
+(codec, byte length, sample rate) so features, activity segments,
+loudness normalization and spectral embeddings decode each clip once per
+vectorized group.
 """
 
 from __future__ import annotations
@@ -18,166 +15,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
-
-# typed metadata struct carried alongside every opaque payload column
-MEDIA_META_TYPE = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("format", T.StringType(), True),  # png|jpeg|pcm_s16le|raw_rgb…
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]
-)
-
-IMAGE_FEATURE_SCHEMA = (
-    "key string, n_bytes long, width int, height int, "
-    "mean_luma double, byte_entropy double, ok boolean, error string"
-)
-
-FRAME_SAMPLE_SCHEMA = "key string, frame_index int, frame_bytes binary, ok boolean"
-
-
-def _fake_decode_rgb(blob: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic fake decoder: interprets the payload as raw RGB888
-    (row-major). Real deployments replace this with Pillow/libjpeg; the
-    surrounding Spark plumbing is identical."""
-    need = width * height * 3
-    if len(blob) < need:
-        raise ValueError(f"payload {len(blob)}B < {need}B for {width}x{height} rgb")
-    return np.frombuffer(blob[:need], dtype=np.uint8).reshape(height, width, 3)
-
-
-def decode_image(blob: bytes, fmt: str, width: int | None, height: int | None) -> np.ndarray:
-    if fmt == "raw_rgb" and width and height:
-        return _fake_decode_rgb(blob, width, height)
-    # real codec decode needs an image library not present in this container
-    raise NotImplementedError(
-        f"image format {fmt!r}: plug a real decoder (e.g. Pillow) into "
-        "unify_spark.functions.multimodal._DECODERS"
-    )
-
-
-def _byte_entropy(blob: bytes) -> float:
-    if not blob:
-        return 0.0
-    counts = np.bincount(np.frombuffer(blob, dtype=np.uint8), minlength=256)
-    p = counts[counts > 0] / len(blob)
-    return float(-np.sum(p * np.log2(p)))
-
-
-def image_features(
-    df: DataFrame,
-    key_col: str = "key",
-    payload_col: str = "payload",
-    meta_col: str = "meta",
-) -> DataFrame:
-    """Per-image features via one Arrow-batched pass: size, dimensions,
-    mean luma (from the decoder when available), byte-level entropy (decoder-
-    independent; useful for corruption/dup screening at 100 TB)."""
-    slim = df.select(
-        F.col(key_col).alias("key"),
-        F.col(payload_col).alias("payload"),
-        F.col(f"{meta_col}.format").alias("fmt"),
-        F.col(f"{meta_col}.width").alias("width"),
-        F.col(f"{meta_col}.height").alias("height"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "key": [], "n_bytes": [], "width": [], "height": [],
-                "mean_luma": [], "byte_entropy": [], "ok": [], "error": [],
-            }
-            for key, blob, fmt, w, h in zip(
-                pdf["key"], pdf["payload"], pdf["fmt"], pdf["width"], pdf["height"]
-            ):
-                blob = bytes(blob) if blob is not None else b""
-                out["key"].append(key)
-                out["n_bytes"].append(len(blob))
-                out["byte_entropy"].append(_byte_entropy(blob))
-                try:
-                    img = decode_image(blob, str(fmt), w, h)
-                    out["width"].append(int(img.shape[1]))
-                    out["height"].append(int(img.shape[0]))
-                    # ITU-R BT.601 luma
-                    luma = img @ np.array([0.299, 0.587, 0.114])
-                    out["mean_luma"].append(float(luma.mean()))
-                    out["ok"].append(True)
-                    out["error"].append("")
-                except NotImplementedError as e:
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_luma"].append(None)
-                    out["ok"].append(False)
-                    out["error"].append(f"decoder-missing: {e}")
-                except ValueError as e:
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_luma"].append(None)
-                    out["ok"].append(False)
-                    out["error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(run, schema=IMAGE_FEATURE_SCHEMA)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    every_n: int = 10,
-    key_col: str = "key",
-    payload_col: str = "payload",
-    meta_col: str = "meta",
-) -> DataFrame:
-    """Frame sampling over video payloads. With the deterministic raw_rgb
-    fake container (concatenated raw frames) this is real; for true codecs
-    it raises decoder-missing per row. One payload → many frame rows
-    (mapInPandas flatMap shape)."""
-    slim = df.select(
-        F.col(key_col).alias("key"),
-        F.col(payload_col).alias("payload"),
-        F.col(f"{meta_col}.format").alias("fmt"),
-        F.col(f"{meta_col}.width").alias("width"),
-        F.col(f"{meta_col}.height").alias("height"),
-        F.col(f"{meta_col}.n_frames").alias("n_frames"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"key": [], "frame_index": [], "frame_bytes": [], "ok": []}
-            for key, blob, fmt, w, h, nf in zip(
-                pdf["key"], pdf["payload"], pdf["fmt"], pdf["width"],
-                pdf["height"], pdf["n_frames"],
-            ):
-                if fmt != "raw_rgb" or not (w and h and nf):
-                    rows["key"].append(key)
-                    rows["frame_index"].append(-1)
-                    rows["frame_bytes"].append(None)
-                    rows["ok"].append(False)
-                    continue
-                frame_sz = int(w) * int(h) * 3
-                blob = bytes(blob)
-                for i in range(0, int(nf), every_n):
-                    start = i * frame_sz
-                    rows["key"].append(key)
-                    rows["frame_index"].append(i)
-                    rows["frame_bytes"].append(blob[start : start + frame_sz])
-                    rows["ok"].append(True)
-            yield pd.DataFrame(rows)
-
-    return slim.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
-
-
-def resize_stub(*_args, **_kwargs):
-    """Image resize requires an image library absent from this container."""
-    raise NotImplementedError(
-        "resize needs a real image backend (Pillow/opencv); the Spark-side "
-        "call site is image_features/mapInPandas, which is fully tested"
-    )
-
+from pyspark.sql import DataFrame
 
 def _decode_group_iter(pdf, bytes_col, codec_col, sr_col, reason):
     """Yield (sr, idxs, dec, x) for each decodable (codec, byte-len, sr)
@@ -367,11 +205,10 @@ def audio_features(
     sr_col: str = "sr_hz",
     threshold_dbfs: float = -40.0,
 ) -> "DataFrame":
-    """REAL audio feature extraction (unlike the image/video stubs, the
-    audio codecs are implemented in-repo): decode each payload and emit
-    rms_db, peak, zero-crossing rate, and clipping ratio — the standard
-    quality gates a speech-training pipeline filters on (silent clips,
-    clipped recordings, DC-stuck channels).
+    """Audio feature extraction over the in-repo codecs: decode each
+    payload and emit rms_db, peak, zero-crossing rate, and clipping ratio
+    — the standard quality gates a speech-training pipeline filters on
+    (silent clips, clipped recordings, DC-stuck channels).
 
     Also emits silence_ratio (fraction of 10 ms frames under −40 dBFS —
     the dead-air gate) and dc_offset (mean sample value — a stuck/biased

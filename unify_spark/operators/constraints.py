@@ -32,25 +32,23 @@ class UniquenessConstraint(Constraint):
     broadcast by AQE at runtime.
     """
 
-    def __init__(self, table: str, key_cols: list[str], salted: bool = True):
+    def __init__(self, table: str, key_cols: list[str]):
         self.table = table
         self.key_cols = list(key_cols)
-        self.salted = salted
         self.name = f"uniqueness:{table}.{'+'.join(key_cols)}"
 
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
         df = tables[self.table]
         keys = df.select(*self.key_cols)
-        # One groupBy for BOTH modes. Spark's hash aggregate already runs a
-        # partial (map-side) phase inside each input partition before the
-        # exchange — exactly the per-partition pre-combine the former
-        # explicit (key, spark_partition_id) two-phase spelled out, except
+        # One groupBy. Spark's hash aggregate already runs a partial
+        # (map-side) phase inside each input partition before the exchange
+        # — exactly the per-partition pre-combine an explicit
+        # (key, spark_partition_id) two-phase would spell out, except
         # Catalyst cannot see that a partition-id salt is partition-local,
-        # so it inserted a SECOND full-width exchange for it, doubling the
-        # shuffled rows on a mostly-unique key (the common case). A hot key
-        # still shuffles at most one partial row per input partition, so
-        # the skew story is unchanged (tests/test_skew.py pins both modes
-        # and their equality); ``salted`` is kept for config compatibility.
+        # so it would insert a SECOND full-width exchange for it, doubling
+        # the shuffled rows on a mostly-unique key (the common case). A hot
+        # key still shuffles at most one partial row per input partition
+        # (tests/test_skew.py pins exact counts under a 50%-hot key).
         counts = keys.groupBy(*self.key_cols).agg(F.count(F.lit(1)).alias("dup_count"))
         dups = counts.filter(F.col("dup_count") > 1)
         # join lineage back; dup set is small → AQE broadcasts it

@@ -1,80 +1,292 @@
-"""Distribution-drift constraint: KS + PSI of a numeric column across
-partitions (BASELINE.json north_rule "KS/PSI distribution-drift tests across
+"""Distribution drift across partitions, numeric and categorical, behind one
+scorer (BASELINE.json north_rule "KS/PSI distribution-drift tests across
 partitions").
+
+- :class:`DriftConstraint`: KS + PSI of a numeric column over equi-width
+  bins.
+- :class:`CategoricalDriftConstraint`: PSI over category frequencies plus a
+  new-category count (KS is undefined for unordered buckets).
 
 Scale design (SURVEY §4.3): Spark has no built-in two-sample tests, but the
 sufficient statistic is a tiny histogram — ``groupBy(part, bucket).count``
-produces (n_parts × n_bins) rows regardless of input size. The histogram is
-the one distributed aggregation; the KS/PSI statistics are scored from it by
-one vectorized pandas call over a dense parts × bins matrix (histogram →
-one-task matrix score). The whole constraint stays a lazy plan, so it fuses
-into the same Spark job as every other constraint — no driver-side collect
-in the hot path, no raw rows ever leave the executors.
+produces (n_parts × n_buckets) rows regardless of input size. The histogram
+is the one distributed aggregation; both kinds score it with ONE vectorized
+pandas call over a dense parts × buckets matrix (``_score_histogram``). The
+whole constraint stays a lazy plan, so it fuses into the same Spark job as
+every other constraint — no driver-side collect in the hot path, no raw
+rows ever leave the executors.
 
-Each partition is compared against the pooled rest-of-table distribution; a
-partition fails if PSI (add-1 smoothed) > psi_threshold or KS > a
-sample-size-aware critical value. Violations are partition-grain (key =
-partition value), mirroring the reference's per-kind query validations with
-allowed-set results
+Each partition is compared against the pooled rest of the table, or against
+a prior run's persisted histogram sidecar (cross-run drift). A partition
+fails if PSI (add-1 smoothed) > psi_threshold, if KS > a sample-size-aware
+critical value (numeric), or if it holds a bucket the comparison side never
+saw (categorical ``new_category_fails``). Violations are partition-grain
+(key = partition value), mirroring the reference's per-kind query
+validations with allowed-set results
 (src/com/vendekagonlabs/unify/validation/post_import/query.clj:151-186).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+import os
+
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from unify_spark.operators.base import Constraint, ValidationContext, make_violations
+
+# the side of a histogram row sent to the scorer: this run's partitions, a
+# baseline's pooled rows, or a zero-count row naming one bucket
+CUR, REF, UNIVERSE = 0, 1, 2
 
 
 def _score_histogram(
     pdf,
-    n_bins: int,
+    labels,
     psi_threshold: float,
-    ks_threshold: float,
-    ks_c_alpha: float,
+    ks: tuple[float, float] | None,
+    new_category_fails: bool,
     vs_baseline: bool,
 ):
-    """Score (part, bucket, n, is_ref) histogram rows: one row of (part,
-    psi, ks, ks_crit, failed) per partition, parts sorted. q is the
-    column total minus the partition, or the pooled ``is_ref`` rows."""
+    """Score (part, bucket, n, side) histogram rows: one row of (part, psi,
+    ks, ks_crit, new_categories, failed) per partition, parts sorted.
+
+    The buckets are ``labels`` in order, else the buckets of the UNIVERSE
+    rows; a row outside them is dropped. q is the column total minus the
+    partition, or the pooled REF rows. ``ks`` = (ks_threshold, ks_c_alpha),
+    or None for unordered buckets (null ks/ks_crit). new_categories counts
+    buckets non-empty in the partition and empty in q; it fails the
+    partition only under ``new_category_fails``."""
     import numpy as np
     import pandas as pd
 
-    cur = pdf[~pdf["is_ref"]]
+    side = pdf["side"].to_numpy()
+    if labels is None:
+        labels = pdf["bucket"][side == UNIVERSE].unique()
+    labels = pd.Index(labels)
+
+    def dense(rows, row_codes, n_rows):
+        col = labels.get_indexer(rows["bucket"])
+        keep = col >= 0
+        m = np.zeros((n_rows, len(labels)), dtype=np.int64)
+        np.add.at(m, (row_codes[keep], col[keep]), rows["n"].to_numpy()[keep])
+        return m
+
+    cur = pdf[side == CUR]
     codes, parts = pd.factorize(cur["part"], sort=True, use_na_sentinel=False)
-    m = np.zeros((len(parts), n_bins), dtype=np.int64)
-    np.add.at(m, (codes, cur["bucket"].to_numpy()), cur["n"].to_numpy())
+    m = dense(cur, codes, len(parts))
     if vs_baseline:
-        ref = pdf[pdf["is_ref"]]
-        b = ref["bucket"].to_numpy()
-        keep = (b >= 0) & (b < n_bins)  # bins outside this grid never match
-        pooled = np.zeros(n_bins, dtype=np.int64)
-        np.add.at(pooled, b[keep], ref["n"].to_numpy()[keep])
+        ref = pdf[side == REF]
+        pooled = dense(ref, np.zeros(len(ref), dtype=np.int64), 1)
         q = np.broadcast_to(pooled, m.shape)
     else:
         q = m.sum(axis=0) - m
+    n_bins = len(labels)
     n1 = m.sum(axis=1).astype(np.float64)
     n2 = q.sum(axis=1).astype(np.float64)
     # add-1 smoothed densities (empty tail bins otherwise dominate PSI)
     p_d = (m + 1.0) / (n1 + n_bins)[:, None]
     q_d = (q + 1.0) / (n2 + n_bins)[:, None]
     psi = ((p_d - q_d) * np.log(p_d / q_d)).sum(axis=1)
-    cum_p = np.cumsum(m, axis=1) / np.maximum(n1, 1.0)[:, None]
-    cum_q = np.cumsum(q, axis=1) / np.maximum(n2, 1.0)[:, None]
-    ks = np.abs(cum_p - cum_q).max(axis=1, initial=0.0)
+    new = ((m > 0) & (q == 0)).sum(axis=1)
+    failed = psi > psi_threshold
+    if new_category_fails:
+        failed |= new > 0
+    ks_stat = np.full(len(parts), np.nan)
+    crit = np.full(len(parts), np.nan)
+    if ks is not None:
+        ks_threshold, ks_c_alpha = ks
+        cum_p = np.cumsum(m, axis=1) / np.maximum(n1, 1.0)[:, None]
+        cum_q = np.cumsum(q, axis=1) / np.maximum(n2, 1.0)[:, None]
+        ks_stat = np.abs(cum_p - cum_q).max(axis=1, initial=0.0)
+        with np.errstate(divide="ignore"):
+            crit = np.maximum(ks_threshold, ks_c_alpha * np.sqrt(1.0 / n1 + 1.0 / n2))
+        failed |= ks_stat > crit
+    # an empty q (a one-partition table, an empty baseline) has nothing to
+    # compare against: null statistics, not failed (NaN crosses the Arrow
+    # boundary as null)
     empty = n2 == 0
-    with np.errstate(divide="ignore"):
-        crit = np.maximum(ks_threshold, ks_c_alpha * np.sqrt(1.0 / n1 + 1.0 / n2))
-    failed = ((psi > psi_threshold) | (ks > crit)) & ~empty
-    # NaN crosses the Arrow boundary as null
-    psi[empty] = ks[empty] = crit[empty] = np.nan
+    failed &= ~empty
+    psi[empty] = ks_stat[empty] = crit[empty] = np.nan
     return pd.DataFrame(
-        {"part": parts, "psi": psi, "ks": ks, "ks_crit": crit, "failed": failed}
+        {
+            "part": parts,
+            "psi": psi,
+            "ks": ks_stat,
+            "ks_crit": crit,
+            "new_categories": pd.Series(new, dtype="Int64").mask(empty),
+            "failed": failed,
+        }
     )
 
 
-class DriftConstraint(Constraint):
+class _HistogramDrift(Constraint):
+    """Scoring, verdicts and the cross-run sidecar shared by both drift
+    kinds. A subclass supplies its histogram and bucket universe
+    (:meth:`_buckets`), its sidecar layout (``SIDECAR``, ``BUCKET``,
+    :meth:`_sidecar_columns`), the attribute that fixes its buckets across
+    runs (``CONTRACT``) and its verdict (``STAT``, :meth:`_ks`,
+    :meth:`_expected`)."""
+
     partition_grain = True
+    new_category_fails = False
+
+    def _buckets(
+        self, df: DataFrame, part_col: str
+    ) -> tuple[DataFrame, list | DataFrame]:
+        """((part, bucket, n) histogram, bucket universe): the universe is a
+        list of labels in KS order, or a DataFrame of ``bucket`` rows when
+        only a Spark job knows it."""
+        raise NotImplementedError
+
+    def _sidecar_columns(self) -> list:
+        return []
+
+    def _ks(self) -> tuple[float, float] | None:
+        return None
+
+    def _expected(self) -> str:
+        raise NotImplementedError
+
+    @property
+    def _stable(self) -> bool:
+        """True when the contract attribute fixes the buckets, so a
+        histogram persisted by one run scores a later one."""
+        return getattr(self, self.CONTRACT) is not None
+
+    def _require_contract(self) -> None:
+        if not self._stable:
+            raise ValueError(
+                f"cross-run drift needs contract {self.CONTRACT} so buckets "
+                f"are stable across runs; construct {type(self).__name__}"
+                f"({self.table!r}, {self.column!r}, {self.CONTRACT}=...)"
+            )
+
+    def _score(
+        self, df: DataFrame, part_col: str, baseline: DataFrame | None = None
+    ) -> DataFrame:
+        """(part, psi, ks, ks_crit, new_categories, failed) from this
+        constraint's histogram, scored by ONE pandas call over the whole
+        histogram (n_parts × n_buckets rows whatever the table size, so a
+        single task holds it at any scale). q is the rest of the table, or
+        the pooled rows of ``baseline`` (a prior run's sidecar) when given.
+
+        PSI with add-1 smoothing over every bucket of the universe; KS = max
+        |cumdist diff| with critical value c·sqrt((n1+n2)/(n1·n2)), so the
+        verdict is stable from 10^3-row test partitions to 10^9-row
+        production partitions."""
+        hist, universe = self._buckets(df, part_col)
+        part_type = hist.schema["part"].dataType
+        bucket_type = hist.schema["bucket"].dataType
+
+        def tagged(rows: DataFrame, side: int) -> DataFrame:
+            part = F.col("part") if side == CUR else F.lit(None).cast(part_type)
+            return rows.select(
+                part.alias("part"),
+                F.col("bucket").cast(bucket_type).alias("bucket"),
+                F.col("n").cast("long").alias("n"),
+                F.lit(side).alias("side"),
+            )
+
+        rows, labels = tagged(hist, CUR), universe
+        if isinstance(universe, DataFrame):
+            zeros = universe.withColumn("n", F.lit(0))
+            rows = rows.unionByName(tagged(zeros, UNIVERSE))
+            labels = None
+        if baseline is not None:
+            ref = baseline.filter(
+                (F.col("table") == self.table) & (F.col("column") == self.column)
+            ).select(F.col(self.BUCKET).alias("bucket"), "n")
+            rows = rows.unionByName(tagged(ref, REF))
+        schema = T.StructType(
+            [
+                T.StructField("part", part_type, True),
+                T.StructField("psi", T.DoubleType(), True),
+                T.StructField("ks", T.DoubleType(), True),
+                T.StructField("ks_crit", T.DoubleType(), True),
+                T.StructField("new_categories", T.LongType(), True),
+                T.StructField("failed", T.BooleanType(), False),
+            ]
+        )
+        params = (
+            labels,
+            self.psi_threshold,
+            self._ks(),
+            self.new_category_fails,
+            baseline is not None,
+        )
+
+        def score(pdf):
+            return _score_histogram(pdf, *params)
+
+        return rows.groupBy().applyInPandas(score, schema)
+
+    def scores_plan(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
+        """Lazy (part, psi, ks, ks_crit, new_categories, failed) plan: each
+        partition against the pooled rest of the table."""
+        return self._score(tables[self.table], ctx.part_col)
+
+    def scores_vs_baseline(
+        self,
+        tables: dict[str, DataFrame],
+        ctx: ValidationContext,
+        baseline: DataFrame,
+    ) -> DataFrame:
+        """The :meth:`scores_plan` schema for each CURRENT partition against
+        the pooled BASELINE distribution (a prior run's persisted
+        :meth:`histogram_rows`). The baseline side is metadata-sized;
+        cross-run drift costs one histogram pass over the new data, never a
+        rescan of the old."""
+        self._require_contract()
+        return self._score(tables[self.table], ctx.part_col, baseline)
+
+    def partition_scores(
+        self, tables: dict[str, DataFrame], ctx: ValidationContext
+    ) -> list[tuple]:
+        """(part, psi, <STAT>, failed) per partition, parts sorted."""
+        rows = self.scores_plan(tables, ctx).orderBy("part").collect()
+        return [(r["part"], r["psi"], r[self.STAT[0]], r["failed"]) for r in rows]
+
+    def histogram_rows(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
+        """Persistable histogram sidecar rows for cross-RUN drift
+        (``<out>/<SIDECAR>``): store this run's per-partition histogram next
+        to the audit table, and later runs compare against it without
+        touching this run's data. Requires the ``CONTRACT`` attribute so the
+        buckets are identical across runs."""
+        self._require_contract()
+        hist, _ = self._buckets(tables[self.table], ctx.part_col)
+        return hist.select(
+            F.lit(self.table).alias("table"),
+            F.lit(self.column).alias("column"),
+            F.col("part").cast("string").alias("part"),
+            F.col("bucket").alias(self.BUCKET),
+            F.col("n").cast("long").alias("n"),
+            *self._sidecar_columns(),
+        )
+
+    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
+        stat, label = self.STAT
+        return make_violations(
+            self.scores_plan(tables, ctx).filter(F.col("failed")),
+            constraint=self.name,
+            table=self.table,
+            key="part",
+            column=self.column,
+            observed=F.concat_ws(
+                ";",
+                F.concat(F.lit("psi="), F.round("psi", 4).cast("string")),
+                F.concat(F.lit(f"{label}="), F.round(stat, 4).cast("string")),
+            ),
+            expected=self._expected(),
+            part="part",
+        )
+
+
+class DriftConstraint(_HistogramDrift):
+    SIDECAR = "drift_hist"
+    BUCKET = "bucket"
+    CONTRACT = "bounds"
+    STAT = ("ks", "ks")
+    HIST_SCHEMA = "table string, column string, part string, bucket long, n long, lo double, hi double"
 
     def __init__(
         self,
@@ -93,7 +305,8 @@ class DriftConstraint(Constraint):
         self.ks_threshold = ks_threshold
         self.ks_c_alpha = ks_c_alpha
         # known contract bounds (e.g. the range constraint's domain) skip the
-        # min/max pre-scan; production reads these from Iceberg manifest stats
+        # min/max pre-scan and make the bins stable across runs; production
+        # reads these from Iceberg manifest stats
         self.bounds = bounds
         self.name = f"drift:{table}.{column}"
 
@@ -129,133 +342,23 @@ class DriftConstraint(Constraint):
             F.count(F.lit(1)).alias("n")
         )
 
-    def scores_plan(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        """Lazy (part, psi, ks, ks_crit, failed) plan: each partition against
-        the pooled rest of the table, rest_n(bucket) = total_n(bucket) −
-        part_n (see :meth:`_score`)."""
-        return self._score(self.histogram(tables[self.table], ctx.part_col))
+    def _buckets(self, df: DataFrame, part_col: str) -> tuple[DataFrame, list]:
+        return self.histogram(df, part_col), list(range(self.n_bins))
 
-    def _score(self, hist: DataFrame, ref: DataFrame | None = None) -> DataFrame:
-        """(part, psi, ks, ks_crit, failed) from the (part, bucket, n)
-        histogram, scored by ONE pandas call over the whole histogram
-        (n_parts × n_bins rows whatever the table size, so a single task
-        holds it at any scale). q is the rest of the table, or the pooled
-        ``ref`` (bucket, n) rows of a baseline when given.
-
-        PSI with add-1 smoothing; KS = max |cumdist diff|; KS critical value
-        = c·sqrt((n1+n2)/(n1·n2)) so the verdict is stable from 10^3-row test
-        partitions to 10^9-row production partitions. An empty q (a
-        one-partition table, an empty baseline) has nothing to compare
-        against: null psi/ks/ks_crit, not failed.
-        """
-        part_type = hist.schema["part"].dataType
-        rows = hist.select(
-            "part",
-            F.col("bucket").cast("long").alias("bucket"),
-            F.col("n").cast("long").alias("n"),
-            F.lit(False).alias("is_ref"),
-        )
-        if ref is not None:
-            rows = rows.unionByName(
-                ref.select(
-                    F.lit(None).cast(part_type).alias("part"),
-                    F.col("bucket").cast("long").alias("bucket"),
-                    F.col("n").cast("long").alias("n"),
-                    F.lit(True).alias("is_ref"),
-                )
-            )
-        schema = T.StructType(
-            [
-                T.StructField("part", part_type, True),
-                T.StructField("psi", T.DoubleType(), True),
-                T.StructField("ks", T.DoubleType(), True),
-                T.StructField("ks_crit", T.DoubleType(), True),
-                T.StructField("failed", T.BooleanType(), False),
-            ]
-        )
-        params = (
-            self.n_bins,
-            self.psi_threshold,
-            self.ks_threshold,
-            self.ks_c_alpha,
-            ref is not None,
-        )
-
-        def score(pdf):
-            return _score_histogram(pdf, *params)
-
-        return rows.groupBy().applyInPandas(score, schema)
-
-    def partition_scores(
-        self, tables: dict[str, DataFrame], ctx: ValidationContext
-    ) -> list[tuple[str, float, float, bool]]:
-        rows = self.scores_plan(tables, ctx).orderBy("part").collect()
-        return [(r["part"], r["psi"], r["ks"], r["failed"]) for r in rows]
-
-    # -- cross-run drift: persisted baseline histograms -----------------------
-
-    HIST_SCHEMA = "table string, column string, part string, bucket long, n long, lo double, hi double"
-
-    def histogram_rows(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        """Persistable histogram sidecar rows for cross-RUN drift: store this
-        run's per-partition histogram next to the audit table, and later
-        runs compare against it without touching this run's data. Requires
-        contract ``bounds`` so the bins are identical across runs (the same
-        reason the in-run path prefers bounds: stable, metadata-free bins)."""
-        if self.bounds is None:
-            raise ValueError(
-                "cross-run drift needs contract bounds so bins are stable "
-                f"across runs; construct DriftConstraint({self.table!r}, "
-                f"{self.column!r}, bounds=(lo, hi))"
-            )
-        hist = self.histogram(tables[self.table], ctx.part_col)
-        return hist.select(
-            F.lit(self.table).alias("table"),
-            F.lit(self.column).alias("column"),
-            F.col("part").cast("string").alias("part"),
-            F.col("bucket").cast("long").alias("bucket"),
-            F.col("n").cast("long").alias("n"),
+    def _sidecar_columns(self) -> list:
+        return [
             F.lit(float(self.bounds[0])).alias("lo"),
             F.lit(float(self.bounds[1])).alias("hi"),
-        )
+        ]
 
-    def scores_vs_baseline(
-        self,
-        tables: dict[str, DataFrame],
-        ctx: ValidationContext,
-        baseline: DataFrame,
-    ) -> DataFrame:
-        """(part, psi, ks, ks_crit, failed) of each CURRENT partition against
-        the pooled BASELINE distribution (a prior run's persisted
-        histogram_rows). Same scorer as the in-run path (:meth:`_score`)
-        with q = the baseline's pooled histogram; the baseline side is
-        metadata-sized (≤ n_parts × n_bins rows)."""
-        if self.bounds is None:
-            raise ValueError("cross-run drift needs contract bounds (see histogram_rows)")
-        ref = baseline.filter(
-            (F.col("table") == self.table) & (F.col("column") == self.column)
-        )
-        return self._score(self.histogram(tables[self.table], ctx.part_col), ref)
+    def _ks(self) -> tuple[float, float]:
+        return (self.ks_threshold, self.ks_c_alpha)
 
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        vio = self.scores_plan(tables, ctx).filter(F.col("failed"))
-        return make_violations(
-            vio,
-            constraint=self.name,
-            table=self.table,
-            key="part",
-            column=self.column,
-            observed=F.concat_ws(
-                ";",
-                F.concat(F.lit("psi="), F.round("psi", 4).cast("string")),
-                F.concat(F.lit("ks="), F.round("ks", 4).cast("string")),
-            ),
-            expected=f"psi<={self.psi_threshold} and ks<=max({self.ks_threshold}, crit)",
-            part="part",
-        )
+    def _expected(self) -> str:
+        return f"psi<={self.psi_threshold} and ks<=max({self.ks_threshold}, crit)"
 
 
-class CategoricalDriftConstraint(Constraint):
+class CategoricalDriftConstraint(_HistogramDrift):
     """Category-MIX drift of a low-cardinality string column across
     partitions — the check the numeric :class:`DriftConstraint` cannot
     express: a scrape batch whose codec mix flips from pcm-dominated to
@@ -266,12 +369,12 @@ class CategoricalDriftConstraint(Constraint):
     (src/com/vendekagonlabs/unify/validation/post_import/query.clj:151-186)
     generalized from exact sets to frequency drift.
 
-    Per partition vs rest-of-table: PSI over category frequencies (add-1
-    smoothed, same formula as the numeric path; KS is undefined for
-    unordered categories) plus a NEW-CATEGORY count — categories observed
-    in the partition but nowhere else. ``new_category_fails`` controls
-    whether novelty alone fails the partition (default True: a codec that
-    exists only in one partition is the real-world rollout alarm).
+    Per partition vs rest-of-table (or vs a baseline): PSI over category
+    frequencies (the numeric path's scorer with KS off) plus a NEW-CATEGORY
+    count — categories observed in the partition but nowhere in the
+    comparison side. ``new_category_fails`` controls whether novelty alone
+    fails the partition (default True: a codec that exists only in one
+    partition is the real-world rollout alarm).
 
     Scale shape: ONE ``groupBy(part, value).count()`` over a key-only
     projection is the sufficient statistic — (n_parts x n_categories)
@@ -283,9 +386,17 @@ class CategoricalDriftConstraint(Constraint):
     single-task rank), costing one extra key-only scan. Tail categories
     collapse into one ``<other>`` bucket so a high-cardinality column
     cannot blow up the PSI grid; NULL is its own ``<null>`` category.
+    ``<other>`` counts toward novelty: with contract ``categories`` every
+    out-of-contract value collapses into it, so "this partition has
+    out-of-universe values and the comparison side has none" IS the
+    new-category alarm.
     """
 
-    partition_grain = True
+    SIDECAR = "cat_drift_hist"
+    BUCKET = "val"
+    CONTRACT = "categories"
+    STAT = ("new_categories", "new")
+    HIST_SCHEMA = "table string, column string, part string, val string, n long"
 
     def __init__(
         self,
@@ -317,208 +428,87 @@ class CategoricalDriftConstraint(Constraint):
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    def _bucket_universe(self, hist: DataFrame) -> DataFrame:
-        """The PSI bucket set: contract categories when supplied, else the
-        global top-K by total count (TakeOrderedAndProject — distributed)."""
-        if self.categories is not None:
-            spark = hist.sparkSession
-            return spark.createDataFrame(
-                [(str(c),) for c in self.categories], "val string"
-            )
-        return (
-            hist.groupBy("val")
-            .agg(F.sum("n").alias("tot"))
-            .orderBy(F.desc("tot"), F.col("val"))
-            .limit(self.top_k)
-            .select("val")
-        )
-
-    def _bucketed(self, df: DataFrame, part_col: str, top: DataFrame) -> DataFrame:
-        """(part, val, n) with the tail collapsed into one <other> bucket —
-        bucket-grain re-aggregation of :meth:`histogram`."""
+    def _buckets(self, df: DataFrame, part_col: str) -> tuple[DataFrame, DataFrame]:
+        """(part, bucket, n) with every value outside the universe collapsed
+        into one <other> bucket, and the universe rows: contract categories
+        when supplied (each once, in order), else the global top-K by total
+        count (TakeOrderedAndProject — distributed), plus <other>."""
         hist = self.histogram(df, part_col)
-        return (
-            hist.join(
-                F.broadcast(top.withColumn("_k", F.lit(1))), on="val", how="left"
+        spark = hist.sparkSession
+        if self.categories is not None:
+            top = spark.createDataFrame(
+                [(c,) for c in dict.fromkeys(map(str, self.categories))], "val string"
             )
+        else:
+            top = (
+                hist.groupBy("val")
+                .agg(F.sum("n").alias("tot"))
+                .orderBy(F.desc("tot"), F.col("val"))
+                .limit(self.top_k)
+                .select("val")
+            )
+        bucketed = (
+            hist.join(F.broadcast(top.withColumn("_k", F.lit(1))), on="val", how="left")
             .select(
                 "part",
                 F.when(F.col("_k").isNotNull(), F.col("val"))
                 .otherwise(F.lit(self.OTHER))
-                .alias("val"),
+                .alias("bucket"),
                 "n",
             )
-            .groupBy("part", "val")
+            .groupBy("part", "bucket")
             .agg(F.sum("n").alias("n"))
         )
+        universe = top.select(F.col("val").alias("bucket")).unionByName(
+            spark.createDataFrame([(self.OTHER,)], "bucket string")
+        )
+        return bucketed, universe
 
-    def scores_plan(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        """Lazy (part, psi, new_categories, failed) plan — fuses into the
-        same Spark job as every other constraint, no driver collect."""
-        df = tables[self.table]
-        top = self._bucket_universe(self.histogram(df, ctx.part_col))
-        b = self._bucketed(df, ctx.part_col, top)
-
-        # densify: every (part, bucket) cell, buckets = top ∪ {<other>}
-        parts = b.select("part").distinct()
-        vals = top.unionByName(
-            top.sparkSession.range(1).select(F.lit(self.OTHER).alias("val"))
-        )
-        dense = (
-            parts.crossJoin(F.broadcast(vals))
-            .join(b, on=["part", "val"], how="left")
-            .fillna(0, subset=["n"])
-        )
-        w_tot = Window.partitionBy("val")
-        dense = dense.withColumn("tot_n", F.sum("n").over(w_tot)).withColumn(
-            "rest_n", F.col("tot_n") - F.col("n")
-        )
-        w_part = Window.partitionBy("part")
-        n_buckets = F.count(F.lit(1)).over(w_part)
-        dense = (
-            dense.withColumn("part_total", F.sum("n").over(w_part))
-            .withColumn("rest_total", F.sum("rest_n").over(w_part))
-            .withColumn("nb", n_buckets)
-        )
-        p = (F.col("n") + 1.0) / (F.col("part_total") + F.col("nb"))
-        q = (F.col("rest_n") + 1.0) / (F.col("rest_total") + F.col("nb"))
-        psi_term = (p - q) * F.log(p / q)
-        # <other> is NOT excluded from novelty: with contract ``categories``
-        # every out-of-contract value collapses into it, so "this
-        # partition has out-of-universe values and the rest of the corpus
-        # has none" IS the new-category alarm (a brand-new codec would
-        # otherwise never fire it — advisor round-5 fix).
-        is_new = ((F.col("n") > 0) & (F.col("rest_n") == 0)).cast("int")
-        scored = (
-            dense.select(
-                "part", psi_term.alias("psi_term"), is_new.alias("is_new")
-            )
-            .groupBy("part")
-            .agg(
-                F.sum("psi_term").alias("psi"),
-                F.sum("is_new").alias("new_categories"),
-            )
-        )
-        failed = F.col("psi") > self.psi_threshold
-        if self.new_category_fails:
-            failed = failed | (F.col("new_categories") > 0)
-        return scored.select("part", "psi", "new_categories", failed.alias("failed"))
-
-    def partition_scores(
-        self, tables: dict[str, DataFrame], ctx: ValidationContext
-    ) -> list[tuple[str, float, int, bool]]:
-        rows = self.scores_plan(tables, ctx).orderBy("part").collect()
-        return [
-            (r["part"], r["psi"], r["new_categories"], r["failed"]) for r in rows
-        ]
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        vio = self.scores_plan(tables, ctx).filter(F.col("failed"))
-        expected = f"psi<={self.psi_threshold}" + (
+    def _expected(self) -> str:
+        return f"psi<={self.psi_threshold}" + (
             " and no new categories" if self.new_category_fails else ""
         )
-        return make_violations(
-            vio,
-            constraint=self.name,
-            table=self.table,
-            key="part",
-            column=self.column,
-            observed=F.concat_ws(
-                ";",
-                F.concat(F.lit("psi="), F.round("psi", 4).cast("string")),
-                F.concat(F.lit("new="), F.col("new_categories").cast("string")),
-            ),
-            expected=expected,
-            part="part",
-        )
 
-    # -- cross-run categorical drift: persisted category-count sidecar -------
 
-    CAT_HIST_SCHEMA = "table string, column string, part string, val string, n long"
+def baselined(constraints: list[Constraint]) -> dict[str, list[_HistogramDrift]]:
+    """The drift constraints whose buckets are fixed by contract, grouped by
+    sidecar name — what a run persists as a later run's baseline."""
+    groups: dict[str, list[_HistogramDrift]] = {}
+    for c in constraints:
+        if isinstance(c, _HistogramDrift) and c._stable:
+            groups.setdefault(c.SIDECAR, []).append(c)
+    return groups
 
-    def histogram_rows(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        """Persistable per-partition category counts for cross-RUN drift —
-        the categorical analogue of the numeric ``histogram_rows``. Requires
-        contract ``categories`` for the same reason the numeric path
-        requires ``bounds``: buckets must be identical across runs. The
-        sidecar is metadata-sized: ≤ (len(categories)+1) × n_parts rows."""
-        if self.categories is None:
-            raise ValueError(
-                "cross-run categorical drift needs contract categories so "
-                f"buckets are stable across runs; construct "
-                f"CategoricalDriftConstraint({self.table!r}, {self.column!r}, "
-                "categories=[...])"
-            )
-        df = tables[self.table]
-        top = self._bucket_universe(self.histogram(df, ctx.part_col))
-        b = self._bucketed(df, ctx.part_col, top)
-        return b.select(
-            F.lit(self.table).alias("table"),
-            F.lit(self.column).alias("column"),
-            F.col("part").cast("string").alias("part"),
-            F.col("val").cast("string").alias("val"),
-            F.col("n").cast("long").alias("n"),
-        )
 
-    def scores_vs_baseline(
-        self,
-        tables: dict[str, DataFrame],
-        ctx: ValidationContext,
-        baseline: DataFrame,
-    ) -> DataFrame:
-        """(part, psi, new_categories, failed) of each CURRENT partition
-        against the pooled BASELINE category mix (a prior run's persisted
-        ``histogram_rows``). ``new_categories`` counts categories observed
-        now that the whole baseline corpus never contained — the codec-
-        rollout alarm across runs. The baseline side is a ≤ buckets-row
-        broadcast; cross-run drift costs one (part, value) aggregate over
-        the new data, never a rescan of the old."""
-        if self.categories is None:
-            raise ValueError(
-                "cross-run categorical drift needs contract categories "
-                "(see histogram_rows)"
+def drift_vs_baseline(
+    constraints: list[Constraint],
+    tables: dict[str, DataFrame],
+    ctx: ValidationContext,
+    baseline_dir: str,
+) -> DataFrame:
+    """(constraint, part, psi, ks, ks_crit, failed) of every baselined drift
+    constraint's CURRENT partitions against a PRIOR run's persisted
+    ``<baseline_dir>/<SIDECAR>`` histograms; categorical rows carry null
+    ks/ks_crit, and new categories fold into ``failed``."""
+    groups = baselined(constraints)
+    if not groups:
+        raise ValueError(
+            "no bounded DriftConstraint or categories-declared "
+            "CategoricalDriftConstraint in the plan to baseline"
+        )
+    out = None
+    for sidecar, cs in groups.items():
+        baseline = tables[cs[0].table].sparkSession.read.parquet(
+            os.path.join(baseline_dir, sidecar)
+        )
+        for c in cs:
+            scored = c.scores_vs_baseline(tables, ctx, baseline).select(
+                F.lit(c.name).alias("constraint"),
+                "part",
+                "psi",
+                "ks",
+                "ks_crit",
+                "failed",
             )
-        df = tables[self.table]
-        top = self._bucket_universe(self.histogram(df, ctx.part_col))
-        cur = self._bucketed(df, ctx.part_col, top)
-        ref = (
-            baseline.filter(
-                (F.col("table") == self.table) & (F.col("column") == self.column)
-            )
-            .groupBy("val")
-            .agg(F.sum("n").alias("ref_n"))
-        )
-        parts = cur.select("part").distinct()
-        vals = top.unionByName(
-            top.sparkSession.range(1).select(F.lit(self.OTHER).alias("val"))
-        )
-        dense = (
-            parts.crossJoin(F.broadcast(vals))
-            .join(cur, on=["part", "val"], how="left")
-            .fillna(0, subset=["n"])
-            .join(F.broadcast(ref), on="val", how="left")
-            .fillna(0, subset=["ref_n"])
-        )
-        w_part = Window.partitionBy("part")
-        dense = (
-            dense.withColumn("part_total", F.sum("n").over(w_part))
-            .withColumn("ref_total", F.sum("ref_n").over(w_part))
-            .withColumn("nb", F.count(F.lit(1)).over(w_part))
-        )
-        p = (F.col("n") + 1.0) / (F.col("part_total") + F.col("nb"))
-        q = (F.col("ref_n") + 1.0) / (F.col("ref_total") + F.col("nb"))
-        psi_term = (p - q) * F.log(p / q)
-        # <other> counts toward novelty here too (see scores_plan)
-        is_new = ((F.col("n") > 0) & (F.col("ref_n") == 0)).cast("int")
-        scored = (
-            dense.select("part", psi_term.alias("psi_term"), is_new.alias("is_new"))
-            .groupBy("part")
-            .agg(
-                F.sum("psi_term").alias("psi"),
-                F.sum("is_new").alias("new_categories"),
-            )
-        )
-        failed = F.col("psi") > self.psi_threshold
-        if self.new_category_fails:
-            failed = failed | (F.col("new_categories") > 0)
-        return scored.select("part", "psi", "new_categories", failed.alias("failed"))
+            out = scored if out is None else out.unionByName(scored)
+    return out

@@ -127,9 +127,8 @@ def _build_typed_constraint(spec: dict) -> Constraint:
     spec = {("on" if k is True else k): v for k, v in spec.items()}
     t = spec.get("type")
     if t == "uniqueness":
-        return UniquenessConstraint(
-            spec["table"], list(spec["keys"]), salted=bool(spec.get("salted", True))
-        )
+        # a legacy `salted:` key is ignored (one aggregate plan serves all)
+        return UniquenessConstraint(spec["table"], list(spec["keys"]))
     if t == "referential":
         return ReferentialIntegrityConstraint(
             spec["child_table"],

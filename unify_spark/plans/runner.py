@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unify_spark.operators.base import Constraint, ValidationContext, empty_violations
+from unify_spark.operators.drift import baselined, drift_vs_baseline
 from unify_spark.plans.audit import AuditLog
 from unify_spark.plans.incremental import reject_null_partition
 from unify_spark.plans.retry import with_retries
@@ -886,47 +887,23 @@ class ValidationRunner:
     def persist_drift_histograms(
         self, tables: dict[str, DataFrame], constraints: list[Constraint]
     ) -> int:
-        """Write this run's per-partition histograms for every bounded
-        DriftConstraint to <out>/drift_hist — the persisted-baseline sidecar
-        a LATER run scores itself against without touching this run's data
+        """Write this run's per-partition histograms of every drift
+        constraint with contract buckets to ``<out>/<sidecar>``
+        (``drift_hist``, ``cat_drift_hist``) — the persisted baseline a
+        LATER run scores itself against without touching this run's data
         (drift.py histogram_rows). Returns the number of constraints
-        persisted. Bounded constraints only: stable bins across runs need
-        contract bounds."""
-        from unify_spark.operators.drift import (
-            CategoricalDriftConstraint,
-            DriftConstraint,
-        )
-
-        drifts = [
-            c for c in constraints if isinstance(c, DriftConstraint) and c.bounds
-        ]
-        if drifts:
-            out = drifts[0].histogram_rows(tables, self.ctx)
-            for c in drifts[1:]:
+        persisted."""
+        groups = baselined(constraints)
+        for sidecar, cs in groups.items():
+            out = cs[0].histogram_rows(tables, self.ctx)
+            for c in cs[1:]:
                 out = out.unionByName(c.histogram_rows(tables, self.ctx))
             with_retries(
                 lambda: out.coalesce(1)
                 .write.mode("overwrite")
-                .parquet(os.path.join(self.out_dir, "drift_hist"))
+                .parquet(os.path.join(self.out_dir, sidecar))
             )
-        # categorical sidecar: same contract (stable buckets need declared
-        # categories), separate file — the schemas differ (val string vs
-        # bucket long)
-        cats = [
-            c
-            for c in constraints
-            if isinstance(c, CategoricalDriftConstraint) and c.categories
-        ]
-        if cats:
-            out = cats[0].histogram_rows(tables, self.ctx)
-            for c in cats[1:]:
-                out = out.unionByName(c.histogram_rows(tables, self.ctx))
-            with_retries(
-                lambda: out.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(self.out_dir, "cat_drift_hist"))
-            )
-        return len(drifts) + len(cats)
+        return sum(len(cs) for cs in groups.values())
 
     def drift_vs_baseline(
         self,
@@ -934,62 +911,10 @@ class ValidationRunner:
         constraints: list[Constraint],
         baseline_dir: str,
     ) -> DataFrame:
-        """Score every bounded DriftConstraint's CURRENT partitions against
-        a PRIOR run's persisted histograms (<baseline_dir>/drift_hist):
-        (constraint, part, psi, ks, ks_crit, failed) rows. The baseline side
-        is a metadata-sized histogram per constraint — cross-run drift costs
-        one histogram pass over the new data, never a rescan of the old."""
-        from unify_spark.operators.drift import (
-            CategoricalDriftConstraint,
-            DriftConstraint,
-        )
-
-        drifts = [
-            c for c in constraints if isinstance(c, DriftConstraint) and c.bounds
-        ]
-        cats = [
-            c
-            for c in constraints
-            if isinstance(c, CategoricalDriftConstraint) and c.categories
-        ]
-        if not drifts and not cats:
-            raise ValueError(
-                "no bounded DriftConstraint or categories-declared "
-                "CategoricalDriftConstraint in the plan to baseline"
-            )
-        out = None
-        if drifts:
-            baseline = self.spark.read.parquet(
-                os.path.join(baseline_dir, "drift_hist")
-            )
-            for c in drifts:
-                scored = c.scores_vs_baseline(tables, self.ctx, baseline).select(
-                    F.lit(c.name).alias("constraint"),
-                    "part",
-                    "psi",
-                    "ks",
-                    "ks_crit",
-                    "failed",
-                )
-                out = scored if out is None else out.unionByName(scored)
-        if cats:
-            cat_baseline = self.spark.read.parquet(
-                os.path.join(baseline_dir, "cat_drift_hist")
-            )
-            for c in cats:
-                # categorical rows carry null ks/ks_crit (KS is undefined
-                # for unordered categories); new_categories folds into the
-                # shared verdict via `failed`
-                scored = c.scores_vs_baseline(tables, self.ctx, cat_baseline).select(
-                    F.lit(c.name).alias("constraint"),
-                    "part",
-                    "psi",
-                    F.lit(None).cast("double").alias("ks"),
-                    F.lit(None).cast("double").alias("ks_crit"),
-                    "failed",
-                )
-                out = scored if out is None else out.unionByName(scored)
-        return out
+        """Score every baselined drift constraint's CURRENT partitions
+        against a PRIOR run's persisted histograms: (constraint, part, psi,
+        ks, ks_crit, failed) rows (drift.py drift_vs_baseline)."""
+        return drift_vs_baseline(constraints, tables, self.ctx, baseline_dir)
 
 
 def _row_local_bundle_plan(df, constraints, table, ctx):

@@ -56,7 +56,7 @@ def audio_suite(
     ``ValidationRunner.sampling_estimates`` then extrapolates its counts
     with a Wilson interval."""
     suite: list[Constraint] = [
-        UniquenessConstraint("clips", ["clip_id"], salted=True),
+        UniquenessConstraint("clips", ["clip_id"]),
         ReferentialIntegrityConstraint(
             "transcript_map", "clip_id", "clips", "clip_id",
             strategy="shuffle", key_col="transcript_id",

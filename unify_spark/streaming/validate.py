@@ -143,65 +143,27 @@ def drift_monitor_foreach_batch(
     This is the online half of the cross-run drift design: the baseline is
     a metadata-sized histogram per constraint, so each micro-batch costs ONE
     histogram aggregation over its own rows — no state store, no rescan of
-    history, and the same bins/PSI/KS semantics as the batch path
-    (operators/drift.py scores_vs_baseline). Returns the started query."""
-    from unify_spark.operators.drift import CategoricalDriftConstraint, DriftConstraint
+    history, and the same scorer as the batch path
+    (operators/drift.py drift_vs_baseline). Returns the started query."""
+    import os
+
+    from unify_spark.operators.drift import baselined, drift_vs_baseline
 
     base_ctx = ctx or ValidationContext()
-    drifts = [c for c in constraints if isinstance(c, DriftConstraint) and c.bounds]
-    cats = [
-        c
-        for c in constraints
-        if isinstance(c, CategoricalDriftConstraint) and c.categories
-    ]
-    if not drifts and not cats:
+    if not baselined(constraints):
         raise ValueError(
-            "drift monitor needs at least one bounded DriftConstraint or "
-            "categories-declared CategoricalDriftConstraint"
+            "drift monitor needs at least one drift constraint with contract "
+            "buckets (numeric bounds or declared categories)"
         )
-    import os
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = None
-        if drifts:
-            baseline = batch_df.sparkSession.read.parquet(
-                os.path.join(baseline_dir, "drift_hist")
-            )
-        for c in drifts:
-            scored = c.scores_vs_baseline(
-                {c.table: batch_df}, base_ctx, baseline
-            ).select(
-                F.lit(batch_id).alias("batch_id"),
-                F.lit(c.name).alias("constraint"),
-                "part",
-                "psi",
-                "ks",
-                "ks_crit",
-                "failed",
-            )
-            out = scored if out is None else out.unionByName(scored)
-        if cats:
-            cat_baseline = batch_df.sparkSession.read.parquet(
-                os.path.join(baseline_dir, "cat_drift_hist")
-            )
-            for c in cats:
-                scored = c.scores_vs_baseline(
-                    {c.table: batch_df}, base_ctx, cat_baseline
-                ).select(
-                    F.lit(batch_id).alias("batch_id"),
-                    F.lit(c.name).alias("constraint"),
-                    "part",
-                    "psi",
-                    F.lit(None).cast("double").alias("ks"),
-                    F.lit(None).cast("double").alias("ks_crit"),
-                    "failed",
-                )
-                out = scored if out is None else out.unionByName(scored)
-        out.coalesce(1).write.mode("append").parquet(
-            os.path.join(out_dir, "drift_stream")
-        )
+        tables = {c.table: batch_df for c in constraints}
+        out = drift_vs_baseline(constraints, tables, base_ctx, baseline_dir)
+        out.select(F.lit(batch_id).alias("batch_id"), "*").coalesce(1).write.mode(
+            "append"
+        ).parquet(os.path.join(out_dir, "drift_stream"))
 
     writer = stream_df.writeStream.foreachBatch(process).outputMode("append")
     if checkpoint_dir:
