@@ -4,21 +4,26 @@ Two phases:
 
 1. **Scaling evidence (the BASELINE.json north rule)** — run the FULL audio
    constraint suite on a deterministic bench clips table at two parallelism
-   levels, local[8] (N) and local[32] (4N), same input; report clips/sec at
-   both and efficiency = cps32 / (4 * cps8). Written to BENCH/BASELINE.md.
+   levels, local[N] and local[4N] with N = $UNIFY_BENCH_N (default 2, so
+   local[2] and local[8]), same input; report clips/sec at both and
+   efficiency = cps_4N / (4 * cps_N). A third, informational point runs at
+   local[$SPARK_GRAFT_CPUS] (default 32). Written to BENCH/BASELINE.md.
 
 2. **Headline testdata queries** — per-query wall seconds at
-   $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[32].
+   $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+   local[$SPARK_GRAFT_CPUS].
 
 Prints exactly ONE JSON line at the end:
-  {"metric": ..., "value": <full-suite sec @ local[32]>, "unit": "sec",
-   "queries": {...}, "sf": ..., plus scaling fields}.
+  {"metric": ..., "value": <full-suite sec @ local[4N]>, "unit": "sec",
+   "queries": {...}, "sf": <scale factor parsed from the SF dir name>,
+   "host_cores": ..., plus scaling fields}.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -37,6 +42,10 @@ BENCH_N = int(os.environ.get("UNIFY_BENCH_N", "2"))
 BENCH_4N = 4 * BENCH_N
 BENCH_DIR = os.path.join(REPO, ".bench_data", f"clips_{BENCH_ROWS}")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# the scale factor the headline queries ran at, read off the dir name
+# (".../sf0.01" -> 0.01); None when the name carries no scale factor
+_SF = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(SF_DIR.rstrip("/")))
+SF = float(_SF.group(1)) if _SF else None
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 HEADLINE_QUERIES = [
@@ -411,7 +420,8 @@ end-to-end factor is far below 16x.
                 "value": round(wall_4n, 3),
                 "unit": "sec",
                 "queries": queries,
-                "sf": 0.1,
+                "sf": SF,
+                "host_cores": os.cpu_count(),
                 "clips_rows": n_clips,
                 "bench_levels": [f"local[{BENCH_N}]", f"local[{BENCH_4N}]"],
                 "clips_per_sec_N": round(cps_n, 1),

@@ -237,6 +237,34 @@ def test_run_incremental_fused_matches_full(spark, audio_tables, baseline_run, t
     assert inc_res.violation_counts == full_res.violation_counts
 
 
+def test_repeated_validation_compiles_once(spark, audio_tables, tmp_path):
+    """A repeated validation in one session pays Spark's code generation
+    once: the second identical pass (staged suite, then run_incremental)
+    runs zero Janino compiles. One pass needs ~120 generated classes, more
+    than Spark's default codegen cache of 100, so this pins the cache size
+    set in session.py."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    parts = sorted(
+        r[0] for r in audio_tables["clips"].select("part_date").distinct().collect()
+    )
+    tables2 = _mutate_partition(spark, audio_tables, parts[1])
+
+    def one_pass(i: int) -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        base = str(tmp_path / f"base{i}")
+        ctx = ValidationContext(run_id="base", payload_cap_ms=50)
+        ValidationRunner(spark, base, ctx).run(audio_tables, audio_suite(), resume=False)
+        save_fingerprints(base, collect_fingerprints(audio_tables))
+        ctx = ValidationContext(run_id="inc", payload_cap_ms=50)
+        ValidationRunner(spark, str(tmp_path / f"inc{i}"), ctx).run_incremental(
+            tables2, audio_suite(), base, fused=False
+        )
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    one_pass(0)
+    assert one_pass(1) == 0
+
+
 def test_cli_incremental_chain(fixture_dir, tmp_path, capsys):
     """CLI end-to-end: a plain `validate` saves the fingerprint sidecar by
     default; a second `validate --incremental-from <out1>` on identical

@@ -41,6 +41,27 @@ def test_staged_resume_and_fail_fast(spark, audio_tables, tmp_path):
     assert next(iter(res.violation_counts)).startswith("uniqueness:")
 
 
+def test_fused_fail_fast_stops_later_waves(spark, tmp_path):
+    """fail_fast under run_fused: the first wave emits violations, so the
+    second dependency wave never runs — not run, not gated, not audited."""
+    from unify_spark.operators.constraints import RangeConstraint
+
+    df = spark.createDataFrame(
+        [("a", -1.0, 1.0, 1.0, "p1")], ["clip_id", "val", "other", "late", "part_date"]
+    )
+    fails = RangeConstraint("t", "val", min_value=0.0)
+    passes = RangeConstraint("t", "other", min_value=0.0)
+    later = RangeConstraint("t", "late", min_value=0.0)
+    later.depends_on = [passes.name]
+    ctx = ValidationContext(run_id="fff", fail_fast=True)
+    runner = ValidationRunner(spark, str(tmp_path), ctx)
+    res = runner.run_fused({"t": df}, [fails, passes, later], resume=False)
+    assert res.violation_counts == {fails.name: 1, passes.name: 0}
+    assert not res.gated and not res.errors
+    assert all(name != later.name for name, _ in res.verdicts)
+    assert runner.audit.completed_constraints("fff") == {fails.name, passes.name}
+
+
 @pytest.mark.parametrize("mode", ["run", "run_fused"])
 def test_stage_error_trapped_and_reported(spark, tmp_path, mode):
     """Uncaught-exception trap: a throwing stage becomes an 'error' audit row

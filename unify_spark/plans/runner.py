@@ -77,6 +77,12 @@ class _Stage:
     rows: int
 
 
+def _emitted(res: RunResult, stage: _Stage) -> bool:
+    """True when any name the stage emits has violations so far (fail_fast's
+    stop rule under both executors)."""
+    return any(res.violation_counts.get(n) for n in getattr(stage.c, "emits", [stage.c.name]))
+
+
 def _shuffle_partitions(spark: SparkSession, default: int = 200) -> int:
     """spark.sql.shuffle.partitions as an int, tolerating non-numeric
     values like 'auto' (AQE-managed deployments) — used only to size a
@@ -140,8 +146,7 @@ class ValidationRunner:
     ) -> tuple[int, list[str]]:
         """(row_count, sorted partition universe) in ONE job — the separate
         count + distinct pre-scans were two passes over each table per run;
-        groupBy(part).count() answers both from the same scan (and from
-        column stats alone when the table is hive/Iceberg-partitioned).
+        groupBy(part).count() answers both from the same scan.
         Partition values are strings, as in the audit and violation rows; a
         NULL partition value is rejected (incremental.reject_null_partition)."""
         df = tables.get(table)
@@ -277,8 +282,9 @@ class ValidationRunner:
         of a wave records the wave's wall); use ``run`` when stage-grain
         checkpointing matters more than throughput. A wave whose job raises
         re-runs stage by stage through ``run``'s executor, so the culprit
-        lands as an 'error' row and the rest complete (fail-at-end in both
-        modes; ``fail_fast`` applies only to that fallback).
+        lands as an 'error' row and the rest complete. ``fail_fast`` stops
+        the run after the first wave that emitted violations (the wave
+        itself always completes; its fallback stops at the first stage).
 
         ``depends_on`` executes as successive fused WAVES: each dependency
         level fuses into one job, and the next wave drops (gates) stages
@@ -466,10 +472,7 @@ class ValidationRunner:
         if self.ctx.fail_fast:
             for stage in stages:
                 run_stage_trapped(stage)
-                if any(
-                    res.violation_counts.get(n)
-                    for n in getattr(stage.c, "emits", [stage.c.name])
-                ):
+                if _emitted(res, stage):
                     # reference semantics: first anomaly kills the job
                     # (src/com/vendekagonlabs/unify/import/engine.clj:166-181)
                     return True
@@ -479,16 +482,18 @@ class ValidationRunner:
         return False
 
     def _run_level_fused(self, res: RunResult, stages: list[_Stage]) -> bool:
-        """One level's stages as ONE Spark job (a wave). Spark offers no
-        per-branch error trap inside a union, so a wave whose job raises
-        re-runs through the staged executor."""
+        """One level's stages as ONE Spark job (a wave); under fail_fast,
+        returns True when any stage of the wave emitted violations, so no
+        later wave runs. Spark offers no per-branch error trap inside a
+        union, so a wave whose job raises re-runs through the staged
+        executor."""
         t0 = time.time()
         try:
             counts = self._job(stages)
         except Exception:  # noqa: BLE001 — the staged executor traps per stage
             return self._run_level_staged(res, stages)
         self.audit.append(self._record(res, stages, counts, time.time() - t0))
-        return False
+        return self.ctx.fail_fast and any(_emitted(res, st) for st in stages)
 
     def _job(self, stages: list[_Stage]) -> dict[str, dict]:
         """One Spark job over the stages' violation plans, the same steps

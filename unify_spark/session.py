@@ -6,6 +6,26 @@ Arrow for all pandas UDF exchange, explicit shuffle parallelism. On a real
 multi-executor cluster the same settings apply; only ``master`` changes
 (spark-submit provides it), so ``get_spark(master=None)`` defers to the
 environment.
+
+Repeated validations in one long-lived session (incremental re-validation,
+``validate_stream_foreach_batch`` per micro-batch) re-run the same plan
+shapes, so two defaults make each plan compile once per session:
+
+* Spark's generated-code cache holds 1000 classes. Its default of 100 is
+  below the engine's working set (measured: 123 distinct classes for the
+  incremental benchmark process, 148 for the corpus queries), so every
+  repeated call re-ran ~60-130 Janino compiles and the JIT re-compiled the
+  fresh classes. The size is a STATIC conf, fixed by the first session that
+  generates code in a JVM: a JVM another session already used keeps its
+  old size.
+* PySpark's DataFrame debugging is off. With it on, every ``F.*`` /
+  DataFrame call captures its Python call site (``inspect.stack()``) and
+  makes 5 extra py4j round trips: building the 9 suite stages' plans made
+  ~2.5-3.5x the py4j calls and took ~1.3x as long. The trade-off: a
+  DataFrame error loses its Python call-site context (stage errors still
+  name their constraint). PySpark reads the setting once per process, at
+  the first Column call (with no active session at that point it stays
+  off).
 """
 
 from __future__ import annotations
@@ -42,13 +62,9 @@ _BASE_CONF = {
     # (4N suite throughput dropped ~7% at 4096), so the default stays 2048.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     "spark.sql.files.maxPartitionBytes": "128m",
-    # partition-grain count/min/max aggregates (the runner's table_stats
-    # pre-pass, partition-completeness checks) answer from parquet
-    # footer/row-group metadata instead of scanning data columns —
-    # measured 2.9s → 0.8s for groupBy(part).count() over the 4M-clip
-    # fixture, a level-invariant saving in every suite run (guide §6);
-    # results are exact (Spark only pushes when semantics allow)
-    "spark.sql.parquet.aggregatePushDown": "true",
+    # compile each plan once per session (module docstring)
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # fixture tables are hive-partitioned by part_date=YYYY-MM-DD; keep the
     # partition value a string (matches the declared schema) instead of date
     "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
