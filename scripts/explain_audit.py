@@ -32,13 +32,12 @@ def main() -> None:
         DriftConstraint,
         UniquenessConstraint,
     )
-    from unify_spark.operators.base import ValidationContext
+    from unify_spark.operators.base import ValidationContext, row_local_violations
     from unify_spark.operators.constraints import (
         EqualityAcrossTablesConstraint,
         ReferentialIntegrityConstraint,
     )
     from unify_spark.plans import audio_suite, load_audio_tables
-    from unify_spark.plans.runner import _row_local_bundle_plan
     from unify_spark.session import get_spark
 
     fixture = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
@@ -65,18 +64,19 @@ def main() -> None:
         ),
         (
             "row-local bundle (one scan, all row constraints)",
-            "CHECK: single FileScan of clips feeding Generate(explode); "
-            "ReadSchema excludes bytes (nullness of bytes rides the payload "
-            "scan); WholeStageCodegen wraps filter+project.",
-            _row_local_bundle_plan(
+            "CHECK: single FileScan of clips; a Filter (the OR of every "
+            "predicate) sits under Generate(inline); ReadSchema excludes "
+            "bytes (nullness of bytes rides the payload scan); ONE "
+            "WholeStageCodegen stage wraps filter+generate+filter.",
+            row_local_violations(
                 tables["clips"],
-                [
-                    c
-                    for c in audio_suite()
-                    if getattr(c, "row_predicates", None) and c.row_predicates(ctx)
-                ],
                 "clips",
                 ctx,
+                [
+                    (c, preds)
+                    for c in audio_suite()
+                    if (preds := c.row_predicates(ctx))
+                ],
             ),
         ),
         (

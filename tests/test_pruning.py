@@ -2,6 +2,7 @@
 fixture layout (hive-partitioned parquet; Iceberg manifests at production)."""
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
@@ -30,6 +31,31 @@ def test_filter_pushdown_and_pruning(spark, audio_tables):
     assert "PushedFilters: [IsNotNull(sr_hz), EqualTo(sr_hz,16000)]" in plan
     # column pruning: bytes/transcript never read
     assert "ReadSchema: struct<clip_id:string,sr_hz:int>" in plan
+
+
+def test_row_local_stage_filters_before_explode(spark, audio_tables, tmp_path, monkeypatch):
+    """A staged run() of one RangeConstraint (a bundle of one) filters on its
+    predicate before it explodes violation structs, so the clips scan pushes
+    the range filter down instead of feeding every row into Generate."""
+    from unify_spark.operators.base import ValidationContext
+    from unify_spark.operators.constraints import RangeConstraint
+    from unify_spark.plans.runner import ValidationRunner
+
+    frame_cls = type(audio_tables["clips"])
+    persisted, persist = [], frame_cls.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    c = RangeConstraint("clips", "dur_ms", min_value=0, max_value=30000, min_exclusive=True)
+    ValidationRunner(spark, str(tmp_path / "out"), ValidationContext(run_id="pin")).run(
+        {"clips": audio_tables["clips"]}, [c], resume=False
+    )
+    (plan,) = [p for p in map(_plan, persisted) if "Generate" in p]
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert pushed and all("dur_ms" in f for f in pushed), pushed
 
 
 def test_equality_constraint_shuffles_hashes_not_text(spark, audio_tables):

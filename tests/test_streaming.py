@@ -93,6 +93,31 @@ def test_foreach_batch_suite(spark, fixture_dir, stream_source, manifest, tmp_pa
     assert counts["range:clips.dur_ms"] == 4
 
 
+def test_foreach_batch_collects_violating_keys(spark, tmp_path):
+    """Every field of the caller's context reaches the per-batch run:
+    collect_violating_keys=True leaves the batch's uncapped key sidecar."""
+    from unify_spark.operators.constraints import RangeConstraint
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("c1", 5.0, "p1"), ("c2", -1.0, "p1"), ("c3", 99.0, "p2")],
+        "clip_id string, dur double, part_date string",
+    ).write.parquet(src)
+    out = str(tmp_path / "runs")
+    q = validate_stream_foreach_batch(
+        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+        [RangeConstraint("clips", "dur", min_value=0, max_value=10)],
+        tables={},
+        stream_table_name="clips",
+        out_dir=out,
+        ctx=ValidationContext(run_id="keys", collect_violating_keys=True),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    keys = spark.read.parquet(os.path.join(out, "violating_keys"))
+    assert {(r["key"], r["part"]) for r in keys.collect()} == {("c2", "p1"), ("c3", "p2")}
+
+
 def test_dedup_stream_within_watermark(spark, tmp_path):
     from unify_spark.streaming.stateful import dedup_stream
 

@@ -12,7 +12,7 @@ by aggregation, never driver loops.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +52,6 @@ class ValidationContext:
     # can, and it is derived from the already-persisted violation frame
     # (one extra distinct, no recompute of the constraint plans).
     collect_violating_keys: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def empty_violations(spark: SparkSession) -> DataFrame:
@@ -94,10 +93,60 @@ def make_violations(
     )
 
 
+def row_local_violations(
+    df: DataFrame, table: str, ctx: ValidationContext, bundle: list[tuple]
+) -> DataFrame:
+    """One-scan plan for a table's row-local constraints, the only plan any
+    row-local constraint runs, alone or bundled. ``bundle`` pairs each
+    constraint with its ``row_predicates(ctx)``, built once by the caller.
+
+    Rows where no predicate is TRUE are filtered out first, so the scan gets
+    the pushed-down filter a single constraint's ``df.filter(fail)`` would
+    give it, and clean rows never build the struct array. Each surviving row
+    becomes an array of VIOLATION_SCHEMA structs, one slot per predicate
+    (each keyed by its constraint's own ``row_key``), which ``inline`` turns
+    into rows; a slot whose predicate is not TRUE is NULL and dropped, as in
+    ``filter()``. ``inline`` over a plain ``array`` keeps the whole plan in
+    one generated-code stage (``array_compact`` would not: it is a
+    higher-order function)."""
+    part = F.col(ctx.part_col) if ctx.part_col in df.columns else F.lit(None)
+    any_fail = F.lit(False)
+    structs = []
+    for c, preds in bundle:
+        for fail, column, observed, expected in preds:
+            any_fail = any_fail | fail
+            structs.append(
+                F.when(
+                    fail,
+                    F.struct(
+                        F.lit(c.name).alias("constraint"),
+                        F.lit(table).alias("table"),
+                        F.col(c.row_key(df)).cast("string").alias("key"),
+                        F.lit(column).alias("column"),
+                        observed.cast("string").alias("observed"),
+                        F.lit(expected).alias("expected"),
+                        part.cast("string").alias("part"),
+                        F.lit(None).cast("string").alias("source_file"),
+                        F.lit(None).cast("long").alias("row_index"),
+                    ),
+                )
+            )
+    return (
+        df.filter(any_fail)
+        .select(F.inline(F.array(*structs)))
+        .filter(F.col("constraint").isNotNull())
+    )
+
+
 class Constraint:
     """A named validation over one or more tables.
 
-    Subclasses implement ``violations(tables, ctx)`` returning a DataFrame in
+    A row-local subclass implements ``row_predicates(ctx)`` only: its
+    ``violations()`` is then the shared one-scan plan
+    (:func:`row_local_violations`) over its own predicates, the same plan
+    the runner fuses several such constraints into and the predicates the
+    stream validator compiles. Any other subclass implements
+    ``violations(tables, ctx)`` returning a DataFrame in
     ``VIOLATION_SCHEMA``. Partition-level verdicts are derived generically by
     the runner; constraints whose natural granularity IS the partition (drift)
     override ``partition_grain = True`` and emit one violation row per failing
@@ -157,13 +206,23 @@ class Constraint:
             int(math.floor(self.max_violation_rate * max(rows_checked, 0))),
         )
 
+    def row_predicates(self, ctx: ValidationContext) -> list[tuple] | None:
+        """The row-local form: ``[(fail, column, observed, expected)]``, one
+        tuple per checked column — ``fail`` a boolean Column TRUE on a
+        violating row, ``observed`` the Column reported for it, ``column``
+        and ``expected`` literal strings. None when the constraint is not
+        row-local (it reads other rows or other tables)."""
+        return None
+
     def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        raise NotImplementedError
+        preds = self.row_predicates(ctx)
+        if preds is None:
+            raise NotImplementedError
+        return row_local_violations(tables[self.table], self.table, ctx, [(self, preds)])
 
     def row_key(self, df: DataFrame) -> str:
         """The column a row-local violation is keyed by: ``clip_id`` when the
-        table has one, else its first column. The fused row-local bundle
-        keys each constraint's rows by the same column."""
+        table has one, else its first column."""
         return "clip_id" if "clip_id" in df.columns else df.columns[0]
 
     def config_fingerprint(self) -> str:

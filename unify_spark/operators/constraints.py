@@ -155,41 +155,35 @@ class DomainConstraint(Constraint):
         # the incremental seeding gate must see it (plans/incremental.py)
         self.aux_tables = [dim_table] if dim_table else []
 
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        if self.allowed is not None:
-            bad = df.filter(
-                F.col(self.column).isNotNull() & ~F.col(self.column).isin(self.allowed)
-            )
-            expected = "in {" + ",".join(map(str, self.allowed)) + "}"
-        else:
-            dim = F.broadcast(
-                tables[self.dim_table].select(F.col(self.dim_key).alias(self.column)).distinct()
-            )
-            bad = df.filter(F.col(self.column).isNotNull()).join(
-                dim, on=self.column, how="left_anti"
-            )
-            expected = f"in {self.dim_table}.{self.dim_key}"
-        key = self.row_key(df)
-        return make_violations(
-            bad,
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column=self.column,
-            observed=self.column,
-            expected=expected,
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
     def row_predicates(self, ctx):
-        """Fusable row-local form (literal domains only; dim-table domains
-        need their broadcast join and stay a separate branch)."""
+        """Row-local form for literal domains only; a dim-table domain needs
+        its broadcast join (``violations``)."""
         if self.allowed is None:
             return None
         c = F.col(self.column)
         fail = c.isNotNull() & ~c.isin(self.allowed)
         return [(fail, self.column, c, "in {" + ",".join(map(str, self.allowed)) + "}")]
+
+    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
+        if self.allowed is not None:
+            return super().violations(tables, ctx)
+        df = tables[self.table]
+        dim = F.broadcast(
+            tables[self.dim_table].select(F.col(self.dim_key).alias(self.column)).distinct()
+        )
+        bad = df.filter(F.col(self.column).isNotNull()).join(
+            dim, on=self.column, how="left_anti"
+        )
+        return make_violations(
+            bad,
+            constraint=self.name,
+            table=self.table,
+            key=self.row_key(df),
+            column=self.column,
+            observed=self.column,
+            expected=f"in {self.dim_table}.{self.dim_key}",
+            part=ctx.part_col if ctx.part_col in df.columns else None,
+        )
 
 
 class RangeConstraint(Constraint):
@@ -197,6 +191,12 @@ class RangeConstraint(Constraint):
 
     Reference: `::non-negative`, `::zero-to-one`, `::cn-range` numeric specs
     (src/com/vendekagonlabs/unify/validation/specs.clj:21-23,45-74).
+
+    NULL values are skipped (Required owns nullness). NaN follows Spark's
+    ordering, where NaN is greater than every other value and equal to
+    itself: a NaN fails a ``max_value`` bound and an ``allowed_set`` that
+    does not list NaN, but passes a lone ``min_value`` bound, exclusive or
+    not.
     """
 
     partition_local = True
@@ -219,52 +219,20 @@ class RangeConstraint(Constraint):
         self.min_exclusive = min_exclusive
         self.name = f"range:{table}.{column}"
 
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        c = F.col(self.column)
-        ok = F.lit(True)
-        desc = []
-        if self.allowed_set is not None:
-            ok = ok & c.isin(self.allowed_set)
-            desc.append("in {" + ",".join(map(str, self.allowed_set)) + "}")
-        if self.min_value is not None:
-            ok = ok & (c > self.min_value if self.min_exclusive else c >= self.min_value)
-            desc.append((">" if self.min_exclusive else ">=") + str(self.min_value))
-        if self.max_value is not None:
-            ok = ok & (c <= self.max_value)
-            desc.append("<=" + str(self.max_value))
-        bad = df.filter(c.isNotNull() & ~ok)
-        key = self.row_key(df)
-        return make_violations(
-            bad,
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column=self.column,
-            observed=self.column,
-            expected=" and ".join(desc),
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
-    def _ok_expr(self):
-        c = F.col(self.column)
-        ok = F.lit(True)
-        desc = []
-        if self.allowed_set is not None:
-            ok = ok & c.isin(self.allowed_set)
-            desc.append("in {" + ",".join(map(str, self.allowed_set)) + "}")
-        if self.min_value is not None:
-            ok = ok & (c > self.min_value if self.min_exclusive else c >= self.min_value)
-            desc.append((">" if self.min_exclusive else ">=") + str(self.min_value))
-        if self.max_value is not None:
-            ok = ok & (c <= self.max_value)
-            desc.append("<=" + str(self.max_value))
-        return ok, " and ".join(desc)
-
     def row_predicates(self, ctx):
         c = F.col(self.column)
-        ok, desc = self._ok_expr()
-        return [(c.isNotNull() & ~ok, self.column, c, desc)]
+        ok = F.lit(True)
+        desc = []
+        if self.allowed_set is not None:
+            ok = ok & c.isin(self.allowed_set)
+            desc.append("in {" + ",".join(map(str, self.allowed_set)) + "}")
+        if self.min_value is not None:
+            ok = ok & (c > self.min_value if self.min_exclusive else c >= self.min_value)
+            desc.append((">" if self.min_exclusive else ">=") + str(self.min_value))
+        if self.max_value is not None:
+            ok = ok & (c <= self.max_value)
+            desc.append("<=" + str(self.max_value))
+        return [(c.isNotNull() & ~ok, self.column, c, " and ".join(desc))]
 
 
 class DerivedRangeConstraint(Constraint):
@@ -302,7 +270,7 @@ class DerivedRangeConstraint(Constraint):
         self.label = name or expr
         self.name = f"derived_range:{table}.{self.label}"
 
-    def _ok_expr(self):
+    def row_predicates(self, ctx):
         e = F.expr(self.expr)
         ok = F.lit(True)
         desc = []
@@ -312,27 +280,7 @@ class DerivedRangeConstraint(Constraint):
         if self.max_value is not None:
             ok = ok & (e <= self.max_value)
             desc.append(f"<={self.max_value}")
-        return e, ok, f"{self.expr} " + " and ".join(desc)
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        e, ok, desc = self._ok_expr()
-        bad = df.filter(e.isNotNull() & ~ok)
-        key = self.row_key(df)
-        return make_violations(
-            bad,
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column=self.label,
-            observed=e,
-            expected=desc,
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
-    def row_predicates(self, ctx):
-        e, ok, desc = self._ok_expr()
-        return [(e.isNotNull() & ~ok, self.label, e, desc)]
+        return [(e.isNotNull() & ~ok, self.label, e, f"{self.expr} " + " and ".join(desc))]
 
 
 class RequiredConstraint(Constraint):
@@ -353,34 +301,6 @@ class RequiredConstraint(Constraint):
         self.na_tokens = list(na_tokens or [])
         self.name = f"required:{table}.{'+'.join(columns)}"
 
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        key = self.row_key(df)
-        parts = []
-        for col in self.columns:
-            c = F.col(col)
-            is_missing = c.isNull()
-            if self.na_tokens:
-                # same cast-to-string form as row_predicates so staged and
-                # fused modes agree for every column type
-                is_missing = is_missing | c.cast("string").isin(self.na_tokens)
-            parts.append(
-                make_violations(
-                    df.filter(is_missing),
-                    constraint=self.name,
-                    table=self.table,
-                    key=key,
-                    column=col,
-                    observed=F.lit("null"),
-                    expected="non-null",
-                    part=ctx.part_col if ctx.part_col in df.columns else None,
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     def row_predicates(self, ctx):
         preds = []
         for col in self.columns:
@@ -388,9 +308,9 @@ class RequiredConstraint(Constraint):
             is_missing = c.isNull()
             if self.na_tokens:
                 # cast-to-string keeps the token check type-safe without
-                # dtypes (a numeric column never stringifies to an NA token),
-                # so the fused bundle matches violations() even when
-                # normalize_na did NOT run upstream
+                # dtypes, and correct even when normalize_na did NOT run
+                # upstream. A numeric column matches a token only through
+                # its string form (a NaN double is "NaN")
                 is_missing = is_missing | c.cast("string").isin(self.na_tokens)
             preds.append((is_missing, col, F.lit("null"), "non-null"))
         return preds
@@ -418,21 +338,6 @@ class CompositeIdConstraint(Constraint):
     def row_key(self, df: DataFrame) -> str:
         return self.id_col
 
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        expected = F.concat_ws(self.sep, *[F.col(c).cast("string") for c in self.components])
-        bad = df.filter(F.col(self.id_col).isNotNull() & (F.col(self.id_col) != expected))
-        return make_violations(
-            bad,
-            constraint=self.name,
-            table=self.table,
-            key=self.row_key(df),
-            column=self.id_col,
-            observed=self.id_col,
-            expected=f"concat_ws('{self.sep}', {', '.join(self.components)})",
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
     def row_predicates(self, ctx):
         expected = F.concat_ws(self.sep, *[F.col(c).cast("string") for c in self.components])
         fail = F.col(self.id_col).isNotNull() & (F.col(self.id_col) != expected)
@@ -456,22 +361,6 @@ class EnumMappingConstraint(Constraint):
         self.column = column
         self.mapping = dict(mapping)
         self.name = f"enum_mapping:{table}.{column}"
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        keys = list(self.mapping.keys())
-        bad = df.filter(F.col(self.column).isNotNull() & ~F.col(self.column).isin(keys))
-        key = self.row_key(df)
-        return make_violations(
-            bad,
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column=self.column,
-            observed=self.column,
-            expected="mappable value",
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
 
     def row_predicates(self, ctx):
         c = F.col(self.column)
@@ -516,26 +405,9 @@ class RegexConstraint(Constraint):
             description=f"chars in {{{alphabet}}}",
         )
 
-    def _fail(self):
-        c = F.col(self.column)
-        return c.isNotNull() & ~c.rlike(self.pattern)
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        key = self.row_key(df)
-        return make_violations(
-            df.filter(self._fail()),
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column=self.column,
-            observed=self.column,
-            expected=self.description,
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
     def row_predicates(self, ctx):
-        return [(self._fail(), self.column, F.col(self.column), self.description)]
+        c = F.col(self.column)
+        return [(c.isNotNull() & ~c.rlike(self.pattern), self.column, c, self.description)]
 
 
 class LengthConstraint(Constraint):
@@ -556,33 +428,14 @@ class LengthConstraint(Constraint):
         self.min_len = min_len
         self.name = f"length:{table}.{column}"
 
-    def _fail(self):
+    def row_predicates(self, ctx):
         n = F.length(F.col(self.column))
         bad = n > self.max_len
         if self.min_len:
             bad = bad | (n < self.min_len)
-        return F.col(self.column).isNotNull() & bad
-
-    def _expected(self) -> str:
         lo = f"{self.min_len} <= " if self.min_len else ""
-        return f"{lo}length <= {self.max_len}"
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        key = self.row_key(df)
-        return make_violations(
-            df.filter(self._fail()),
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column=self.column,
-            observed=F.length(F.col(self.column)),
-            expected=self._expected(),
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
-    def row_predicates(self, ctx):
-        return [(self._fail(), self.column, F.length(F.col(self.column)), self._expected())]
+        fail = F.col(self.column).isNotNull() & bad
+        return [(fail, self.column, n, f"{lo}length <= {self.max_len}")]
 
 
 class AnyPresentConstraint(Constraint):
@@ -602,25 +455,9 @@ class AnyPresentConstraint(Constraint):
         self.columns = list(columns)
         self.name = f"any_present:{table}.{'|'.join(columns)}"
 
-    def _fail(self):
-        return F.coalesce(*[F.col(c).cast("string") for c in self.columns]).isNull()
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        key = self.row_key(df)
-        return make_violations(
-            df.filter(self._fail()),
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column="|".join(self.columns),
-            observed=F.lit("all null"),
-            expected="at least one non-null",
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
     def row_predicates(self, ctx):
-        return [(self._fail(), "|".join(self.columns), F.lit("all null"), "at least one non-null")]
+        fail = F.coalesce(*[F.col(c).cast("string") for c in self.columns]).isNull()
+        return [(fail, "|".join(self.columns), F.lit("all null"), "at least one non-null")]
 
 
 class ConditionalConstraint(Constraint):
@@ -643,37 +480,12 @@ class ConditionalConstraint(Constraint):
         self.then_required = list(then_required)
         self.name = f"conditional:{table}.when({when_expr})"
 
-    def _preds(self):
-        cond = F.expr(self.when_expr)
-        out = []
-        for col in self.then_required:
-            fail = cond & F.col(col).isNull()
-            out.append((fail, col, F.lit("null"), f"non-null when {self.when_expr}"))
-        return out
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        key = self.row_key(df)
-        parts = [
-            make_violations(
-                df.filter(fail),
-                constraint=self.name,
-                table=self.table,
-                key=key,
-                column=col,
-                observed=obs,
-                expected=exp,
-                part=ctx.part_col if ctx.part_col in df.columns else None,
-            )
-            for fail, col, obs, exp in self._preds()
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     def row_predicates(self, ctx):
-        return self._preds()
+        cond = F.expr(self.when_expr)
+        return [
+            (cond & F.col(col).isNull(), col, F.lit("null"), f"non-null when {self.when_expr}")
+            for col in self.then_required
+        ]
 
 
 class UpsertConflictConstraint(Constraint):
@@ -1024,32 +836,14 @@ class VectorConstraint(Constraint):
             r = r.when(sq == 0.0, F.lit("zero_norm"))
         return r.otherwise(F.lit(None))
 
-    def _expected(self) -> str:
+    def row_predicates(self, ctx):
+        reason = self._reason()
         parts = [f"dim={self.dim}", "elements non-null and finite"]
         if self.required:
             parts.insert(0, "non-null")
         if self.check_norm:
             parts.append("nonzero norm")
-        return ", ".join(parts)
-
-    def violations(self, tables: dict[str, DataFrame], ctx: ValidationContext) -> DataFrame:
-        df = tables[self.table]
-        key = self.row_key(df)
-        reason = self._reason()
-        return make_violations(
-            df.withColumn("_vr", reason).filter(F.col("_vr").isNotNull()),
-            constraint=self.name,
-            table=self.table,
-            key=key,
-            column=self.column,
-            observed=F.col("_vr"),
-            expected=self._expected(),
-            part=ctx.part_col if ctx.part_col in df.columns else None,
-        )
-
-    def row_predicates(self, ctx):
-        reason = self._reason()
-        return [(reason.isNotNull(), self.column, reason, self._expected())]
+        return [(reason.isNotNull(), self.column, reason, ", ".join(parts))]
 
 
 class FreshnessConstraint(Constraint):

@@ -21,7 +21,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from unify_spark.operators.base import Constraint, ValidationContext, empty_violations
+from unify_spark.operators.base import (
+    Constraint,
+    ValidationContext,
+    empty_violations,
+    row_local_violations,
+)
 from unify_spark.operators.drift import baselined, drift_vs_baseline
 from unify_spark.plans.audit import AuditLog
 from unify_spark.plans.incremental import reject_null_partition
@@ -500,27 +505,28 @@ class ValidationRunner:
         under both executors: build and union the plans, persist, count,
         write the uncapped violating-keys sidecar and the capped evidence,
         unpersist. Returns {name: {part: n}} for the names with violations."""
-        # Row-local constraints (domain/range/required/composite/mapping)
-        # fuse into ONE scan per table: their predicates become an exploded
-        # violation-struct array, so the table's columns are read once for
-        # the whole family instead of once per constraint. Bundles group by
-        # (table, pending-partition set) so a partially-resumed constraint
-        # fuses only with stages scanning the same partition subset. A
-        # bundle of one runs the constraint's own plan, so a one-stage job
-        # stays the reference the fused bundles are checked against.
+        # Every row-local constraint (one whose row_predicates is not None)
+        # runs the shared one-scan plan, row_local_violations, and those on
+        # one table fuse into ONE scan: the table's columns are read once
+        # for the whole family instead of once per constraint. Bundles group
+        # by (table, pending-partition set) so a partially-resumed
+        # constraint fuses only with stages scanning the same partition
+        # subset; a one-stage job is a bundle of one. Each stage's
+        # predicates are built once, here. Other stages run violations().
         groups: dict = {}
         for st in stages:
-            preds = getattr(st.c, "row_predicates", None)
-            fusable = preds is not None and st.c.table in st.tables and preds(self.ctx) is not None
-            groups.setdefault((st.c.table, tuple(st.pending)) if fusable else id(st), []).append(st)
-        plans = [
-            _row_local_bundle_plan(
-                sts[0].tables[sts[0].c.table], [st.c for st in sts], sts[0].c.table, self.ctx
-            )
-            if len(sts) > 1
-            else sts[0].c.violations(sts[0].tables, self.ctx)
-            for sts in groups.values()
-        ]
+            preds = st.c.row_predicates(self.ctx)
+            key = (st.c.table, tuple(st.pending)) if preds is not None else id(st)
+            groups.setdefault(key, []).append((st, preds))
+        plans = []
+        for bundle in groups.values():
+            st, preds = bundle[0]
+            if preds is None:
+                plans.append(st.c.violations(st.tables, self.ctx))
+            else:
+                plans.append(row_local_violations(
+                    st.tables[st.c.table], st.c.table, self.ctx, [(b.c, p) for b, p in bundle]
+                ))
         vio = plans[0]
         for p in plans[1:]:
             vio = vio.unionByName(p)
@@ -920,44 +926,6 @@ class ValidationRunner:
         against a PRIOR run's persisted histograms: (constraint, part, psi,
         ks, ks_crit, failed) rows (drift.py drift_vs_baseline)."""
         return drift_vs_baseline(constraints, tables, self.ctx, baseline_dir)
-
-
-def _row_local_bundle_plan(df, constraints, table, ctx):
-    """One-scan fused plan for a table's row-local constraints: per row, an
-    array of violation structs (one slot per failing predicate), compacted
-    and exploded into canonical VIOLATION_SCHEMA rows. Each struct carries
-    its constraint's own row key, the one its ``violations()`` keys by."""
-    part_col = ctx.part_col if ctx.part_col in df.columns else None
-    structs = []
-    for c in constraints:
-        for fail, column, observed, expected in c.row_predicates(ctx):
-            structs.append(
-                F.when(
-                    fail,
-                    F.struct(
-                        F.lit(c.name).alias("constraint"),
-                        F.col(c.row_key(df)).cast("string").alias("key"),
-                        F.lit(column).alias("column"),
-                        observed.cast("string").alias("observed"),
-                        F.lit(expected).alias("expected"),
-                    ),
-                )
-            )
-    exploded = df.select(
-        (F.col(part_col) if part_col else F.lit(None)).cast("string").alias("part"),
-        F.explode(F.array_compact(F.array(*structs))).alias("v"),
-    )
-    return exploded.select(
-        F.col("v.constraint").alias("constraint"),
-        F.lit(table).alias("table"),
-        F.col("v.key").alias("key"),
-        F.col("v.column").alias("column"),
-        F.col("v.observed").alias("observed"),
-        F.col("v.expected").alias("expected"),
-        F.col("part"),
-        F.lit(None).cast("string").alias("source_file"),
-        F.lit(None).cast("long").alias("row_index"),
-    )
 
 
 def _count_by_part(vio: DataFrame) -> dict[str, dict]:

@@ -24,6 +24,8 @@ over the Iceberg table), which is how the audit table composes the two.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, functions as F
 
 from unify_spark.operators.base import Constraint, ValidationContext
@@ -34,21 +36,15 @@ def row_level_violation_expr(
 ) -> F.Column:
     """Array of failed-constraint names per row, from the row-local subset.
 
-    Built from each constraint's ``row_predicates`` — the SAME fused
-    predicate form the batch runner's single-scan bundle uses — so every
-    row-local family (domain, range, required+na-tokens, composite-id,
-    enum-mapping, regex, length, any-present, conditional) validates on a
-    stream with identical semantics to batch, for free."""
+    Built from each constraint's ``row_predicates`` — the one predicate form
+    every batch row-local plan is built from — so every row-local family
+    (domain, range, derived-range, required+na-tokens, composite-id,
+    enum-mapping, regex, length, any-present, conditional, vector)
+    validates on a stream with identical semantics to batch, for free."""
     ctx = ctx or ValidationContext()
     checks = []
     for c in constraints:
-        preds = getattr(c, "row_predicates", None)
-        if preds is None:
-            continue
-        plist = preds(ctx)
-        if plist is None:
-            continue
-        for fail, _column, _obs, _exp in plist:
+        for fail, _column, _obs, _exp in c.row_predicates(ctx) or []:
             checks.append(F.when(fail, F.lit(c.name)))
     if not checks:
         return F.array().cast("array<string>")
@@ -89,13 +85,7 @@ def validate_stream_foreach_batch(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bctx = ValidationContext(
-            run_id=f"{base_ctx.run_id}@{batch_id}",
-            violation_cap=base_ctx.violation_cap,
-            fail_fast=base_ctx.fail_fast,
-            payload_cap_ms=base_ctx.payload_cap_ms,
-            part_col=base_ctx.part_col,
-        )
+        bctx = dataclasses.replace(base_ctx, run_id=f"{base_ctx.run_id}@{batch_id}")
         runner = ValidationRunner(batch_df.sparkSession, out_dir, bctx)
         batch_tables = dict(tables)
         batch_tables[stream_table_name] = batch_df
