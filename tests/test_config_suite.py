@@ -169,6 +169,17 @@ def test_empty_constraints_rejected():
         parse_suite_config({"tables": {"t": "/x"}, "constraints": []})
 
 
+def test_quoted_fail_fast_rejected():
+    # bool("false") is True: a quoted boolean must not turn fail_fast on
+    doc = {
+        "tables": {"clips": "/x"},
+        "constraints": [{"type": "uniqueness", "table": "clips", "keys": ["clip_id"]}],
+    }
+    assert parse_suite_config({**doc, "fail_fast": True}).context().fail_fast is True
+    with pytest.raises(ValueError, match="fail_fast: must be true or false"):
+        parse_suite_config({**doc, "fail_fast": "false"})
+
+
 def test_parse_corpus_config_rejects_malformed():
     """Empty files and non-mapping sections get clear ValueErrors, not raw
     AttributeError/TypeError tracebacks."""
@@ -209,3 +220,31 @@ def test_shipped_example_configs_parse():
     assert corpus.embed_dedup["dim"] == 64
     assert corpus.clean["max_tok_rep_ratio"] == 0.6
     assert corpus.audio["threshold_dbfs"] == -40.0
+
+
+def test_validate_flags_override_config(spark, fixture_dir, tmp_path, capsys):
+    """`validate --config` honours the run flags: --violation-cap caps the
+    evidence per constraint and --run-id run-0 replaces the config's
+    run_id (it is not a sentinel)."""
+    from unify_spark import cli
+    from unify_spark.plans.audit import AuditLog
+
+    doc = _audio_config_doc(fixture_dir)
+    doc["violation_cap"] = 1000
+    # uniqueness + required: both violated more than once in the fixture
+    doc["constraints"] = [doc["constraints"][0], doc["constraints"][5]]
+    cfg_path = str(tmp_path / "suite.yaml")
+    with open(cfg_path, "w") as f:
+        yaml.safe_dump(doc, f)
+    out = str(tmp_path / "out")
+    rc = cli.main(["validate", "--config", cfg_path, "--out", out,
+                   "--violation-cap", "1", "--run-id", "run-0", "--no-fingerprints"])
+    report = json.loads((o := capsys.readouterr().out)[o.index("{"):])
+    assert rc == 1 and report["run_id"] == "run-0"
+    assert all(n > 1 for n in report["violation_counts"].values())
+    per = spark.read.parquet(os.path.join(out, "violations")).groupBy("constraint").count()
+    assert {r["constraint"]: r["count"] for r in per.collect()} == {
+        name: 1 for name in report["violation_counts"]
+    }
+    runs = AuditLog(spark, os.path.join(out, "audit")).read().select("run_id").distinct()
+    assert [r["run_id"] for r in runs.collect()] == ["run-0"]

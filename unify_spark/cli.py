@@ -178,75 +178,57 @@ def _finish_validate(args, runner, tables, constraints, res, inc_plan=None) -> i
 
 
 def cmd_validate(args) -> int:
+    from dataclasses import replace
+
     from unify_spark.operators.base import ValidationContext
     from unify_spark.plans import ValidationRunner, audio_suite
     from unify_spark.plans.compile import compile_constraints
-    from unify_spark.schema.model import Metamodel
+    from unify_spark.plans.config import RUN_KEYS, load_suite_config
     from unify_spark.sources import read_table
 
-    spark = get_spark("unify-validate")
-
     if args.config:
-        # config-file-driven run: tables + constraints + knobs all come from
+        # config-file-driven run: tables + constraints + run knobs come from
         # the YAML/JSON suite config (unify's config-driven import analogue,
         # config.clj:594-660); CLI flags override where given
-        from unify_spark.plans import ValidationRunner
-        from unify_spark.plans.config import load_suite_config, load_tables
-
         cfg = load_suite_config(args.config)
-        for n, p in _parse_tables(args.tables or []).items():
-            cfg.tables[n] = p
-        if args.run_id != "run-0":
-            cfg.run_id = args.run_id
-        tables = load_tables(spark, cfg)
-        runner = ValidationRunner(spark, args.out, cfg.context())
-        res, inc_plan = _run_validate(args, runner, tables, cfg.constraints)
-        return _finish_validate(args, runner, tables, cfg.constraints, res, inc_plan)
-
-    if not args.tables:
+        table_paths = {**cfg.tables, **_parse_tables(args.tables)}
+        ctx, constraints = cfg.context(), cfg.constraints
+    elif not args.tables:
         print("error: --tables is required without --config", file=sys.stderr)
         return 2
-    table_paths = _parse_tables(args.tables)
-    tables = {n: read_table(spark, p) for n, p in table_paths.items()}
-    # payload cap must match the cap used when payloads were synthesized:
-    # prefer the fixture manifest next to the clips table, then the
-    # ValidationContext default (50). <=0 means validate full duration.
-    cap = args.payload_cap_ms
-    if cap is None:
-        cap = 50
-        clips_path = table_paths.get("clips")
-        if clips_path:
-            mpath = os.path.join(os.path.dirname(clips_path.rstrip("/")), "manifest.json")
-            if os.path.exists(mpath):
-                with open(mpath) as f:
-                    cap = json.load(f).get("payload_cap_ms", 50)
-    if cap is not None and cap <= 0:
-        cap = None
-    if args.metamodel:
-        with open(args.metamodel) as f:
-            mm = Metamodel.from_json(f.read())
-        constraints = compile_constraints(mm)
     else:
-        constraints = audio_suite(
-            payload_sample_rate=getattr(args, "payload_sample_rate", None)
-        )
-        needed = {"clips", "transcript_map", "codec_domain", "reference_decode"}
-        missing = sorted(needed - set(tables))
-        if missing:
-            print(
-                f"error: the built-in audio suite needs tables {sorted(needed)}; "
-                f"missing {missing}. Pass them as --tables name=path or supply "
-                "--metamodel for an inferred plan.",
-                file=sys.stderr,
-            )
-            return 2
-    ctx = ValidationContext(
-        run_id=args.run_id,
-        fail_fast=args.fail_fast,
-        violation_cap=args.violation_cap,
-        payload_cap_ms=cap,
-        part_col=args.part_col,
-    )
+        table_paths = _parse_tables(args.tables)
+        # payload cap must match the cap used when payloads were synthesized:
+        # prefer the fixture manifest next to the clips table
+        ctx = ValidationContext()
+        clips = table_paths.get("clips")
+        mpath = clips and os.path.join(os.path.dirname(clips.rstrip("/")), "manifest.json")
+        if mpath and os.path.exists(mpath):
+            with open(mpath) as f:
+                ctx.payload_cap_ms = json.load(f).get("payload_cap_ms", ctx.payload_cap_ms)
+        if args.metamodel:
+            from unify_spark.schema.model import Metamodel
+
+            with open(args.metamodel) as f:
+                constraints = compile_constraints(Metamodel.from_json(f.read()))
+        else:
+            constraints = audio_suite(payload_sample_rate=args.payload_sample_rate)
+            needed = {"clips", "transcript_map", "codec_domain", "reference_decode"}
+            missing = sorted(needed - set(table_paths))
+            if missing:
+                print(
+                    f"error: the built-in audio suite needs tables {sorted(needed)}; "
+                    f"missing {missing}. Pass them as --tables name=path or supply "
+                    "--metamodel for an inferred plan.",
+                    file=sys.stderr,
+                )
+                return 2
+    flags = {k: getattr(args, k) for k in RUN_KEYS}
+    ctx = replace(ctx, **{k: v for k, v in flags.items() if v is not None})
+    if ctx.payload_cap_ms is not None and ctx.payload_cap_ms <= 0:
+        ctx.payload_cap_ms = None  # <=0 validates the full duration
+    spark = get_spark("unify-validate")
+    tables = {n: read_table(spark, p) for n, p in table_paths.items()}
     runner = ValidationRunner(spark, args.out, ctx)
     res, inc_plan = _run_validate(args, runner, tables, constraints)
     return _finish_validate(args, runner, tables, constraints, res, inc_plan)
@@ -573,76 +555,6 @@ def _parse_rates(specs: list[str]) -> dict[str, float]:
     return out
 
 
-def cmd_corpus_clean(args) -> int:
-    """End-to-end corpus cleaning: quality gate → near-dup clustering →
-    canonical selection (functions/pipeline.py clean_corpus)."""
-    from unify_spark.functions.pipeline import clean_corpus
-    from unify_spark.sources import read_table
-
-    knobs = _with_config(
-        args,
-        "clean",
-        {
-            "id_col": "doc_id",
-            "text_col": "text",
-            "min_tokens": 5,
-            "max_punct_ratio": 0.3,
-            "max_tok_rep_ratio": None,
-            "boilerplate_min_df": None,
-            "min_est_jaccard": 0.5,
-            "benchmark": None,
-            "bench_id_col": None,
-            "bench_text_col": None,
-            "decontaminate_n": 8,
-            "decontaminate_min_overlap": 1,
-        },
-    )
-    spark = get_spark("unify-corpus-clean")
-    df = read_table(spark, args.table)
-    rep = knobs["max_tok_rep_ratio"]
-    bench = (
-        read_table(spark, knobs["benchmark"])
-        if knobs["benchmark"] is not None
-        else None
-    )
-    kept, report = clean_corpus(
-        df,
-        id_col=knobs["id_col"],
-        text_col=knobs["text_col"],
-        min_tokens=int(knobs["min_tokens"]),
-        max_punct_ratio=float(knobs["max_punct_ratio"]),
-        max_tok_rep_ratio=None if rep is None else float(rep),
-        boilerplate_min_df=(
-            None if knobs["boilerplate_min_df"] is None
-            else int(knobs["boilerplate_min_df"])
-        ),
-        min_est_jaccard=float(knobs["min_est_jaccard"]),
-        benchmark=bench,
-        bench_id_col=knobs["bench_id_col"],
-        bench_text_col=knobs["bench_text_col"],
-        decontaminate_n=int(knobs["decontaminate_n"]),
-        decontaminate_min_overlap=int(knobs["decontaminate_min_overlap"]),
-    )
-    kept.write.mode("overwrite").parquet(args.out)
-    kept.unpersist()
-    print(
-        json.dumps(
-            {
-                "n_input": report.n_input,
-                "n_after_quality": report.n_after_quality,
-                "n_kept": report.n_kept,
-                "removed_quality": report.removed_quality,
-                "removed_decontaminated": report.n_decontaminated,
-                "removed_duplicates": report.removed_duplicates,
-                "out": args.out,
-            },
-            indent=2,
-            sort_keys=True,
-        )
-    )
-    return 0
-
-
 def cmd_corpus_sample(args) -> int:
     """Deterministic hash sampling: flat rate, per-stratum rates, or exact
     per-stratum quotas (functions/sampling.py)."""
@@ -710,26 +622,6 @@ def cmd_corpus_pack(args) -> int:
     return 0
 
 
-def _with_config(args, section: str, defaults: dict) -> dict:
-    """Resolve operator knobs: built-in default < config-file corpus section
-    < explicit CLI flag (flags default to None so a given flag always
-    wins). This is the zero-Python contract for the corpus operators —
-    every knob reachable from a YAML/JSON file (plans/config.py
-    parse_corpus_config)."""
-    cfg = {}
-    if getattr(args, "config", None):
-        from unify_spark.plans.config import load_corpus_config
-
-        cfg = getattr(load_corpus_config(args.config), section)
-    out = dict(defaults)
-    out.update(cfg)
-    for k in defaults:
-        v = getattr(args, k, None)
-        if v is not None:
-            out[k] = v
-    return out
-
-
 def cmd_schema_diff(args) -> int:
     """Schema-evolution drift between two metamodel JSONs (e.g. the one a
     pipeline was validated against vs one freshly inferred): prints the
@@ -742,64 +634,6 @@ def cmd_schema_diff(args) -> int:
     print(json.dumps(report, indent=2, sort_keys=True))
     if args.fail_on_breaking and report["n_breaking"] > 0:
         return 1
-    return 0
-
-
-def cmd_corpus_embed_dedup(args) -> int:
-    """Semantic (embedding-space) duplicate clustering from the CLI:
-    banded hyperplane LSH candidates → exact cosine → pointer-doubling
-    connected components (functions/similarity.py embedding_dup_clusters).
-    All knobs config-reachable: corpus.embed_dedup in --config."""
-    from pyspark.sql import functions as F
-
-    from unify_spark.functions.similarity import embedding_dup_clusters
-    from unify_spark.sources import read_table
-
-    knobs = _with_config(
-        args,
-        "embed_dedup",
-        {
-            "id_col": "vec_id",
-            "vec_col": "embedding",
-            "dim": None,
-            "threshold": 0.95,
-            "n_planes": 100,
-            "n_bands": 10,
-            "max_bucket_size": 100_000,
-        },
-    )
-    if knobs["dim"] is None:
-        print("error: dim required (flag --dim or corpus.embed_dedup.dim)", file=sys.stderr)
-        return 2
-    spark = get_spark("unify-embed-dedup")
-    df = read_table(spark, args.table)
-    out = embedding_dup_clusters(
-        df,
-        dim=int(knobs["dim"]),
-        threshold=float(knobs["threshold"]),
-        id_col=knobs["id_col"],
-        vec_col=knobs["vec_col"],
-        n_planes=int(knobs["n_planes"]),
-        n_bands=int(knobs["n_bands"]),
-        max_bucket_size=int(knobs["max_bucket_size"]),
-    )
-    out.write.mode("overwrite").parquet(args.out)
-    clusters = spark.read.parquet(args.out)
-    row = clusters.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("cluster").alias("n_clusters"),
-    ).first()
-    print(
-        json.dumps(
-            {
-                "n_vectors": row["n"],
-                "n_clusters": row["n_clusters"],
-                "n_duplicates": row["n"] - row["n_clusters"],
-                "threshold": float(knobs["threshold"]),
-                "out": args.out,
-            }
-        )
-    )
     return 0
 
 
@@ -845,309 +679,205 @@ def cmd_corpus_decontaminate(args) -> int:
     return 0
 
 
-def cmd_audio_features(args) -> int:
-    """Audio feature + activity-segment sidecars from the CLI: ONE decode
-    pass (audio_sidecars — PCM decode dominates, so features and segments
-    share the decoded matrices) projected into (features.parquet,
-    segments.parquet) under ``--out``. Column names and VAD knobs come from
-    corpus.audio in --config or flags — the same config-driven entry the
-    text corpus path has."""
+def _decoded(spark, path: str):
+    """Row count and undecodable-row count of a decoded audio output
+    (undecodable rows carry a non-empty reason string; '' = decoded)."""
     from pyspark.sql import functions as F
 
-    from unify_spark.functions.multimodal import audio_sidecars
-    from unify_spark.sources import read_table
-
-    knobs = _with_config(
-        args,
-        "audio",
-        {
-            "id_col": "clip_id",
-            "bytes_col": "bytes",
-            "codec_col": "codec",
-            "sr_col": "sr_hz",
-            "threshold_dbfs": -40.0,
-            "max_gap_ms": 100,
-            "min_dur_ms": 60,
-        },
-    )
-    spark = get_spark("unify-audio-features")
-    df = read_table(spark, args.table)
-    cols = {k: knobs[k] for k in ("id_col", "bytes_col", "codec_col", "sr_col")}
-    feats_path = os.path.join(args.out, "features.parquet")
-    segs_path = os.path.join(args.out, "segments.parquet")
-    combined = audio_sidecars(
-        df,
-        **cols,
-        threshold_dbfs=float(knobs["threshold_dbfs"]),
-        max_gap_ms=int(knobs["max_gap_ms"]),
-        min_dur_ms=int(knobs["min_dur_ms"]),
-    ).persist()
-    idc = knobs["id_col"]
-    combined.select(
-        idc, "rms_db", "peak", "zcr", "clipping_ratio", "silence_ratio",
-        "dc_offset", "n_samples", "reason",
-    ).write.mode("overwrite").parquet(feats_path)
-    combined.select(
-        idc, "segments", "n_segments", "speech_ms", "reason"
-    ).write.mode("overwrite").parquet(segs_path)
-    combined.unpersist()
-    feats = spark.read.parquet(feats_path)
-    segs = spark.read.parquet(segs_path)
-    row = feats.agg(
-        F.count(F.lit(1)).alias("n"),
-        # undecodable rows carry a non-empty reason string ('' = decoded)
-        F.sum((F.col("reason") != "").cast("long")).alias("n_failed"),
-    ).first()
-    srow = segs.agg(F.sum("speech_ms").alias("speech_ms")).first()
-    print(
-        json.dumps(
-            {
-                "n_clips": row["n"],
-                "n_failed": int(row["n_failed"] or 0),
-                "total_speech_ms": int(srow["speech_ms"] or 0),
-                "features": feats_path,
-                "segments": segs_path,
-            }
-        )
-    )
-    return 0
-
-
-def cmd_audio_embed(args) -> int:
-    """Deterministic spectral embeddings from the CLI (multimodal.py
-    audio_embeddings): the audio->vector bridge table, ready for
-    corpus-embed-dedup / ANN; knobs from corpus.audio_embed or flags."""
-    from pyspark.sql import functions as F
-
-    from unify_spark.functions.multimodal import audio_embeddings
-    from unify_spark.sources import read_table
-
-    knobs = _with_config(
-        args,
-        "audio_embed",
-        {
-            "id_col": "clip_id",
-            "bytes_col": "bytes",
-            "codec_col": "codec",
-            "sr_col": "sr_hz",
-            "n_bands": 32,
-            "frame_ms": 32,
-            "target_sr": 16_000,
-        },
-    )
-    spark = get_spark("unify-audio-embed")
-    df = read_table(spark, args.table)
-    out = audio_embeddings(
-        df,
-        id_col=knobs["id_col"],
-        bytes_col=knobs["bytes_col"],
-        codec_col=knobs["codec_col"],
-        sr_col=knobs["sr_col"],
-        n_bands=int(knobs["n_bands"]),
-        frame_ms=int(knobs["frame_ms"]),
-        target_sr=(None if knobs["target_sr"] is None else int(knobs["target_sr"])),
-    )
-    out.write.mode("overwrite").parquet(args.out)
-    res = spark.read.parquet(args.out)
-    row = res.agg(
+    row = spark.read.parquet(path).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("reason") != "").cast("long")).alias("n_failed"),
     ).first()
-    print(
-        json.dumps(
-            {
-                "n_clips": row["n"],
-                "n_embedded": row["n"] - int(row["n_failed"] or 0),
-                "dim": int(knobs["n_bands"]),
-                "out": args.out,
-            },
-            indent=2,
-            sort_keys=True,
-        )
-    )
-    return 0
+    return row["n"], int(row["n_failed"] or 0)
 
 
-def cmd_audio_clean(args) -> int:
-    """Audio corpus gate from the CLI: decode + quality screen + exact
-    payload dedup (functions/pipeline.py clean_audio_corpus); writes the
-    kept clips with quality columns attached. Knobs from corpus.audio_clean
-    in --config or flags."""
-    from unify_spark.functions.pipeline import clean_audio_corpus
-    from unify_spark.sources import read_table
-
-    knobs = _with_config(
-        args,
-        "audio_clean",
-        {
-            "id_col": "clip_id",
-            "bytes_col": "bytes",
-            "codec_col": "codec",
-            "sr_col": "sr_hz",
-            "threshold_dbfs": -40.0,
-            "max_silence_ratio": 0.95,
-            "max_clipping_ratio": 0.2,
-            "min_speech_ms": 0,
-            "near_dup_min_shared": None,
-        },
-    )
-    spark = get_spark("unify-audio-clean")
-    df = read_table(spark, args.table)
-    kept, report = clean_audio_corpus(
-        df,
-        id_col=knobs["id_col"],
-        bytes_col=knobs["bytes_col"],
-        codec_col=knobs["codec_col"],
-        sr_col=knobs["sr_col"],
-        threshold_dbfs=float(knobs["threshold_dbfs"]),
-        max_silence_ratio=float(knobs["max_silence_ratio"]),
-        max_clipping_ratio=float(knobs["max_clipping_ratio"]),
-        min_speech_ms=int(knobs["min_speech_ms"]),
-        near_dup_min_shared=(
-            None if knobs["near_dup_min_shared"] is None
-            else int(knobs["near_dup_min_shared"])
-        ),
-    )
-    kept.write.mode("overwrite").parquet(args.out)
-    kept.unpersist()
-    print(
-        json.dumps(
-            {
-                "n_input": report.n_input,
-                "n_after_quality": report.n_after_quality,
-                "n_kept": report.n_kept,
-                "removed_quality": report.removed_quality,
-                "removed_duplicates": report.removed_duplicates,
-                "out": args.out,
-            },
-            indent=2,
-            sort_keys=True,
-        )
-    )
-    return 0
+def _clean_summary(spark, out, report, knob) -> dict:
+    return {
+        "n_input": report.n_input,
+        "n_after_quality": report.n_after_quality,
+        "n_kept": report.n_kept,
+        "removed_quality": report.removed_quality,
+        "removed_duplicates": report.removed_duplicates,
+        "out": out,
+    }
 
 
-def cmd_audio_normalize(args) -> int:
-    """Loudness-normalize a clips table to a target dBFS (decode → gain →
-    re-encode in the clip's own codec; functions/multimodal.py
-    normalize_audio_gain); knobs from corpus.audio_normalize or flags."""
+def _corpus_clean_summary(spark, out, report, knob) -> dict:
+    return {
+        **_clean_summary(spark, out, report, knob),
+        "removed_decontaminated": report.n_decontaminated,
+    }
+
+
+def _embed_dedup_summary(spark, out, report, knob) -> dict:
     from pyspark.sql import functions as F
 
-    from unify_spark.functions.multimodal import normalize_audio_gain
-    from unify_spark.sources import read_table
+    row = spark.read.parquet(out).agg(
+        F.count(F.lit(1)).alias("n"), F.countDistinct("cluster").alias("n_clusters")
+    ).first()
+    return {
+        "n_vectors": row["n"],
+        "n_clusters": row["n_clusters"],
+        "n_duplicates": row["n"] - row["n_clusters"],
+        "threshold": float(knob("threshold")),
+        "out": out,
+    }
 
-    knobs = _with_config(
-        args,
-        "audio_normalize",
-        {
-            "id_col": "clip_id",
-            "bytes_col": "bytes",
-            "codec_col": "codec",
-            "sr_col": "sr_hz",
-            "target_dbfs": -20.0,
-            "mode": "rms",
-            "max_gain_db": 30.0,
-        },
-    )
-    spark = get_spark("unify-audio-normalize")
-    df = read_table(spark, args.table)
-    out = normalize_audio_gain(
-        df,
-        id_col=knobs["id_col"],
-        bytes_col=knobs["bytes_col"],
-        codec_col=knobs["codec_col"],
-        sr_col=knobs["sr_col"],
-        target_dbfs=float(knobs["target_dbfs"]),
-        mode=str(knobs["mode"]),
-        max_gain_db=float(knobs["max_gain_db"]),
-    )
-    out.write.mode("overwrite").parquet(args.out)
-    res = spark.read.parquet(args.out)
-    summary = res.agg(
+
+def _features_summary(spark, out, report, knob) -> dict:
+    from pyspark.sql import functions as F
+
+    feats, segs = (os.path.join(out, name) for name in _AUDIO_SIDECARS)
+    n, n_failed = _decoded(spark, feats)
+    speech_ms = spark.read.parquet(segs).agg(F.sum("speech_ms")).first()[0]
+    return {
+        "n_clips": n,
+        "n_failed": n_failed,
+        "total_speech_ms": int(speech_ms or 0),
+        "features": feats,
+        "segments": segs,
+    }
+
+
+def _embed_summary(spark, out, report, knob) -> dict:
+    n, n_failed = _decoded(spark, out)
+    return {
+        "n_clips": n,
+        "n_embedded": n - n_failed,
+        "dim": int(knob("n_bands")),
+        "out": out,
+    }
+
+
+def _normalize_summary(spark, out, report, knob) -> dict:
+    from pyspark.sql import functions as F
+
+    decoded = F.col("reason") == ""
+    row = spark.read.parquet(out).agg(
         F.count(F.lit(1)).alias("n_clips"),
-        F.sum((F.col("reason") == "").cast("long")).alias("n_normalized"),
-        F.round(F.avg(F.when(F.col("reason") == "", F.col("gain_db"))), 3).alias(
-            "mean_gain_db"
-        ),
+        F.sum(decoded.cast("long")).alias("n_normalized"),
+        F.round(F.avg(F.when(decoded, F.col("gain_db"))), 3).alias("mean_gain_db"),
     ).first()
-    print(
-        json.dumps(
-            {
-                "n_clips": summary["n_clips"],
-                "n_normalized": int(summary["n_normalized"] or 0),
-                "mean_gain_db": summary["mean_gain_db"],
-                "out": args.out,
-            },
-            indent=2,
-            sort_keys=True,
-        )
-    )
-    return 0
+    return {
+        "n_clips": row["n_clips"],
+        "n_normalized": int(row["n_normalized"] or 0),
+        "mean_gain_db": row["mean_gain_db"],
+        "out": out,
+    }
 
 
-def cmd_audio_dedup(args) -> int:
-    """Near-duplicate audio from the CLI: acoustic-fingerprint candidate
-    pairs (functions/audio_dedup.py) — the same recording under a
-    different codec/gain surfaces; knobs from corpus.audio_dedup in
-    --config or flags."""
+def _audio_dedup_summary(spark, out, report, knob) -> dict:
     from pyspark.sql import functions as F
 
-    from unify_spark.functions.audio_dedup import audio_near_dup_candidates
+    pairs = spark.read.parquet(out)
+    # clips-with-a-duplicate counts BOTH sides of each pair
+    ids = pairs.select(F.col("id_a").alias("id")).unionByName(
+        pairs.select(F.col("id_b").alias("id"))
+    )
+    return {
+        "n_pairs": pairs.count(),
+        "n_clips_with_dup": ids.distinct().count(),
+        "min_shared": int(knob("min_shared")),
+        "out": out,
+    }
+
+
+# audio-features writes one decode pass as two sidecars under --out
+_AUDIO_SIDECARS = {
+    "features.parquet": (
+        "rms_db", "peak", "zcr", "clipping_ratio", "silence_ratio", "dc_offset",
+        "n_samples", "reason",
+    ),
+    "segments.parquet": ("segments", "n_segments", "speech_ms", "reason"),
+}
+
+# corpus section -> (help, JSON summary, sidecars); sidecars maps a file
+# under --out to the columns written there, None writes the result to --out.
+# Command names, knobs and operators: plans/config.py CORPUS_COMMANDS.
+_CORPUS_CLI = {
+    "clean": (
+        "quality-gate + dedup + canonicalize a corpus",
+        _corpus_clean_summary,
+        None,
+    ),
+    "embed_dedup": (
+        "semantic duplicate clusters over an embedding column",
+        _embed_dedup_summary,
+        None,
+    ),
+    "audio": (
+        "audio feature + activity-segment sidecars for a clips table",
+        _features_summary,
+        _AUDIO_SIDECARS,
+    ),
+    "audio_clean": (
+        "decode + quality gate + exact payload dedup for a clips table",
+        _clean_summary,
+        None,
+    ),
+    "audio_dedup": (
+        "acoustic-fingerprint near-duplicate pairs for a clips table",
+        _audio_dedup_summary,
+        None,
+    ),
+    "audio_normalize": (
+        "loudness-normalize clips to a target dBFS (decode, gain, re-encode)",
+        _normalize_summary,
+        None,
+    ),
+    "audio_embed": (
+        "deterministic spectral embeddings (audio -> vector bridge)",
+        _embed_summary,
+        None,
+    ),
+}
+
+
+def cmd_corpus(args) -> int:
+    """The one body of every config-driven corpus/audio command: read
+    --table, resolve the knobs (config file < flag; a knob set nowhere is
+    not passed, so the operator's own default applies), call the operator,
+    write --out and print the command's JSON summary."""
+    import importlib
+    import inspect
+
+    from unify_spark.plans.config import CORPUS_COMMANDS, TablePath, corpus_knobs
     from unify_spark.sources import read_table
 
-    knobs = _with_config(
-        args,
-        "audio_dedup",
-        {
-            "id_col": "clip_id",
-            "bytes_col": "bytes",
-            "codec_col": "codec",
-            "sr_col": "sr_hz",
-            "frame_ms": 64,
-            "n_bands": 17,
-            "min_shared": 5,
-            "max_fp_freq": 10_000,
-            "target_sr": 16_000,
-            "hop_ms": 4,
-            "align": True,
-        },
-    )
-    spark = get_spark("unify-audio-dedup")
-    df = read_table(spark, args.table)
-    out = audio_near_dup_candidates(
-        df,
-        id_col=knobs["id_col"],
-        bytes_col=knobs["bytes_col"],
-        codec_col=knobs["codec_col"],
-        sr_col=knobs["sr_col"],
-        frame_ms=int(knobs["frame_ms"]),
-        n_bands=int(knobs["n_bands"]),
-        min_shared=int(knobs["min_shared"]),
-        max_fp_freq=int(knobs["max_fp_freq"]),
-        target_sr=(None if knobs["target_sr"] is None else int(knobs["target_sr"])),
-        hop_ms=(None if knobs["hop_ms"] is None else int(knobs["hop_ms"])),
-        align=bool(knobs["align"]),
-    )
-    out.write.mode("overwrite").parquet(args.out)
-    pairs = spark.read.parquet(args.out)
-    n_pairs = pairs.count()
-    # clips-with-a-duplicate counts BOTH sides of each pair
-    n_dup = (
-        pairs.select(F.col("id_a").alias("id"))
-        .unionByName(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-        .count()
-    )
-    print(
-        json.dumps(
-            {
-                "n_pairs": n_pairs,
-                "n_clips_with_dup": n_dup,
-                "min_shared": int(knobs["min_shared"]),
-                "out": args.out,
-            }
-        )
-    )
+    command, target, _ = CORPUS_COMMANDS[args.section]
+    _, summarize, sidecars = _CORPUS_CLI[args.section]
+    module, name = target.split(":")
+    fn = getattr(importlib.import_module(module), name)
+    params = inspect.signature(fn).parameters
+    knobs = corpus_knobs(args.section, vars(args), args.config)
+    for k, p in list(params.items())[1:]:
+        if p.default is p.empty and p.kind is p.POSITIONAL_OR_KEYWORD and knobs.get(k) is None:
+            flag = "--" + k.replace("_", "-")
+            print(
+                f"error: {k} required (flag {flag} or corpus.{args.section}.{k})",
+                file=sys.stderr,
+            )
+            return 2
+    spark = get_spark(f"unify-{command}")
+    knobs = {k: read_table(spark, v) if isinstance(v, TablePath) else v for k, v in knobs.items()}
+    result = fn(read_table(spark, args.table), **knobs)
+    frame, report = result if isinstance(result, tuple) else (result, None)
+
+    def knob(k):
+        return knobs.get(k, params[k].default)
+
+    if sidecars:
+        frame = frame.persist()
+        outs = {
+            os.path.join(args.out, f): frame.select(knob("id_col"), *cols)
+            for f, cols in sidecars.items()
+        }
+    else:
+        outs = {args.out: frame}
+    for path, df in outs.items():
+        df.write.mode("overwrite").parquet(path)
+    frame.unpersist()
+    print(json.dumps(summarize(spark, args.out, report, knob), indent=2, sort_keys=True))
     return 0
 
 
@@ -1161,7 +891,9 @@ def cmd_generate_fixture(args) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def _parser() -> argparse.ArgumentParser:
+    from unify_spark.plans.config import CORPUS_COMMANDS, knob_spec
+
     p = argparse.ArgumentParser(prog="unify-spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -1183,15 +915,17 @@ def main(argv: list[str] | None = None) -> int:
                                     "--tables entries override config paths")
     s.add_argument("--metamodel", help="metamodel JSON; default = built-in audio suite")
     s.add_argument("--out", required=True)
-    s.add_argument("--run-id", default="run-0")
-    s.add_argument("--part-col", default="part_date")
-    s.add_argument("--fail-fast", action="store_true")
+    # run knobs default to None: an unset flag keeps the config's value, else
+    # ValidationContext's default
+    s.add_argument("--run-id")
+    s.add_argument("--part-col")
+    s.add_argument("--fail-fast", action="store_true", default=None)
     s.add_argument("--no-resume", action="store_true")
-    s.add_argument("--violation-cap", type=int, default=1000)
-    s.add_argument("--payload-cap-ms", type=int, default=None,
+    s.add_argument("--violation-cap", type=int)
+    s.add_argument("--payload-cap-ms", type=int,
                    help="payload truncation used at synthesis time; default reads "
-                        "the fixture manifest next to the clips table, else 50; "
-                        "<=0 validates the full duration")
+                        "the fixture manifest next to the clips table, else the "
+                        "config or 50; <=0 validates the full duration")
     s.add_argument("--fused", action="store_true",
                    help="single-job fused plan (max throughput; stage-grain resume off)")
     s.add_argument("--profile", action="store_true",
@@ -1353,28 +1087,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--run-id", required=True)
     s.set_defaults(fn=cmd_retract)
 
-    s = sub.add_parser("corpus-clean", help="quality-gate + dedup + canonicalize a corpus")
-    s.add_argument("--table", required=True, help="input parquet path")
-    s.add_argument("--out", required=True)
-    s.add_argument("--config", help="YAML/JSON with a corpus.clean section")
-    s.add_argument("--id-col", dest="id_col")
-    s.add_argument("--text-col", dest="text_col")
-    s.add_argument("--min-tokens", dest="min_tokens", type=int)
-    s.add_argument("--max-punct-ratio", dest="max_punct_ratio", type=float)
-    s.add_argument("--max-tok-rep-ratio", dest="max_tok_rep_ratio", type=float)
-    s.add_argument("--boilerplate-min-df", dest="boilerplate_min_df", type=int,
-                   help="strip lines appearing in >= N docs before the gate")
-    s.add_argument("--min-est-jaccard", dest="min_est_jaccard", type=float)
-    s.add_argument("--benchmark", dest="benchmark",
-                   help="eval-set parquet: drop docs with n-gram overlap "
-                        "(decontamination stage)")
-    s.add_argument("--bench-id-col", dest="bench_id_col")
-    s.add_argument("--bench-text-col", dest="bench_text_col")
-    s.add_argument("--decontaminate-n", dest="decontaminate_n", type=int)
-    s.add_argument("--decontaminate-min-overlap", dest="decontaminate_min_overlap",
-                   type=int)
-    s.set_defaults(fn=cmd_corpus_clean)
-
     s = sub.add_parser("corpus-sample", help="deterministic hash sampling (rate/strata/quota)")
     s.add_argument("--table", required=True, help="input parquet path")
     s.add_argument("--out", required=True)
@@ -1409,21 +1121,6 @@ def main(argv: list[str] | None = None) -> int:
     s.set_defaults(fn=cmd_schema_diff)
 
     s = sub.add_parser(
-        "corpus-embed-dedup", help="semantic duplicate clusters over an embedding column"
-    )
-    s.add_argument("--table", required=True, help="input parquet path")
-    s.add_argument("--out", required=True)
-    s.add_argument("--config", help="YAML/JSON with a corpus.embed_dedup section")
-    s.add_argument("--id-col", dest="id_col")
-    s.add_argument("--vec-col", dest="vec_col")
-    s.add_argument("--dim", type=int)
-    s.add_argument("--threshold", type=float)
-    s.add_argument("--n-planes", dest="n_planes", type=int)
-    s.add_argument("--n-bands", dest="n_bands", type=int)
-    s.add_argument("--max-bucket-size", dest="max_bucket_size", type=int)
-    s.set_defaults(fn=cmd_corpus_embed_dedup)
-
-    s = sub.add_parser(
         "corpus-decontaminate", help="flag corpus docs overlapping a benchmark/eval set"
     )
     s.add_argument("--table", required=True, help="corpus parquet path")
@@ -1437,87 +1134,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--min-overlap", dest="min_overlap", type=int, default=1)
     s.set_defaults(fn=cmd_corpus_decontaminate)
 
-    s = sub.add_parser(
-        "audio-features", help="audio feature + activity-segment sidecars for a clips table"
-    )
-    s.add_argument("--table", required=True, help="clips parquet path")
-    s.add_argument("--out", required=True, help="directory for features/segments parquet")
-    s.add_argument("--config", help="YAML/JSON with a corpus.audio section")
-    s.add_argument("--id-col", dest="id_col")
-    s.add_argument("--bytes-col", dest="bytes_col")
-    s.add_argument("--codec-col", dest="codec_col")
-    s.add_argument("--sr-col", dest="sr_col")
-    s.add_argument("--threshold-dbfs", dest="threshold_dbfs", type=float)
-    s.add_argument("--max-gap-ms", dest="max_gap_ms", type=int)
-    s.add_argument("--min-dur-ms", dest="min_dur_ms", type=int)
-    s.set_defaults(fn=cmd_audio_features)
-
-    s = sub.add_parser(
-        "audio-dedup", help="acoustic-fingerprint near-duplicate pairs for a clips table"
-    )
-    s.add_argument("--table", required=True, help="clips parquet path")
-    s.add_argument("--out", required=True)
-    s.add_argument("--config", help="YAML/JSON with a corpus.audio_dedup section")
-    s.add_argument("--id-col", dest="id_col")
-    s.add_argument("--bytes-col", dest="bytes_col")
-    s.add_argument("--codec-col", dest="codec_col")
-    s.add_argument("--sr-col", dest="sr_col")
-    s.add_argument("--frame-ms", dest="frame_ms", type=int)
-    s.add_argument("--n-bands", dest="n_bands", type=int)
-    s.add_argument("--min-shared", dest="min_shared", type=int)
-    s.add_argument("--max-fp-freq", dest="max_fp_freq", type=int)
-    s.set_defaults(fn=cmd_audio_dedup)
-
-    s = sub.add_parser(
-        "audio-clean", help="decode + quality gate + exact payload dedup for a clips table"
-    )
-    s.add_argument("--table", required=True, help="clips parquet path")
-    s.add_argument("--out", required=True)
-    s.add_argument("--config", help="YAML/JSON with a corpus.audio_clean section")
-    s.add_argument("--id-col", dest="id_col")
-    s.add_argument("--bytes-col", dest="bytes_col")
-    s.add_argument("--codec-col", dest="codec_col")
-    s.add_argument("--sr-col", dest="sr_col")
-    s.add_argument("--threshold-dbfs", dest="threshold_dbfs", type=float)
-    s.add_argument("--max-silence-ratio", dest="max_silence_ratio", type=float)
-    s.add_argument("--max-clipping-ratio", dest="max_clipping_ratio", type=float)
-    s.add_argument("--min-speech-ms", dest="min_speech_ms", type=int)
-    s.add_argument("--near-dup-min-shared", dest="near_dup_min_shared", type=int,
-                   help="enable the acoustic near-dup collapse stage")
-    s.set_defaults(fn=cmd_audio_clean)
-
-    s = sub.add_parser(
-        "audio-embed",
-        help="deterministic spectral embeddings (audio -> vector bridge)",
-    )
-    s.add_argument("--table", required=True, help="clips parquet path")
-    s.add_argument("--out", required=True)
-    s.add_argument("--config", help="YAML/JSON with a corpus.audio_embed section")
-    s.add_argument("--id-col", dest="id_col")
-    s.add_argument("--bytes-col", dest="bytes_col")
-    s.add_argument("--codec-col", dest="codec_col")
-    s.add_argument("--sr-col", dest="sr_col")
-    s.add_argument("--n-bands", dest="n_bands", type=int)
-    s.add_argument("--frame-ms", dest="frame_ms", type=int)
-    s.add_argument("--target-sr", dest="target_sr", type=int)
-    s.set_defaults(fn=cmd_audio_embed)
-
-    s = sub.add_parser(
-        "audio-normalize",
-        help="loudness-normalize clips to a target dBFS (decode, gain, re-encode)",
-    )
-    s.add_argument("--table", required=True, help="clips parquet path")
-    s.add_argument("--out", required=True)
-    s.add_argument("--config", help="YAML/JSON with a corpus.audio_normalize section")
-    s.add_argument("--id-col", dest="id_col")
-    s.add_argument("--bytes-col", dest="bytes_col")
-    s.add_argument("--codec-col", dest="codec_col")
-    s.add_argument("--sr-col", dest="sr_col")
-    s.add_argument("--target-dbfs", dest="target_dbfs", type=float)
-    s.add_argument("--mode", dest="mode", choices=["rms", "peak"])
-    s.add_argument("--max-gain-db", dest="max_gain_db", type=float)
-    s.set_defaults(fn=cmd_audio_normalize)
-
     s = sub.add_parser("generate-fixture", help="deterministic synthetic audio fixture")
     s.add_argument("--out", required=True)
     s.add_argument("--rows", type=int, default=10000)
@@ -1525,7 +1141,24 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--payload-cap-ms", type=int, default=50)
     s.set_defaults(fn=cmd_generate_fixture)
 
-    args = p.parse_args(argv)
+    for section, (command, _, knobs) in CORPUS_COMMANDS.items():
+        s = sub.add_parser(command, help=_CORPUS_CLI[section][0])
+        s.add_argument("--table", required=True, help="input parquet path")
+        s.add_argument("--out", required=True)
+        s.add_argument("--config", help=f"YAML/JSON with a corpus.{section} section")
+        for knob, spec in knobs.items():
+            t, help_, choices = knob_spec(spec)
+            flag = "--" + knob.replace("_", "-")
+            if t is bool:  # --align / --no-align
+                s.add_argument(flag, dest=knob, action=argparse.BooleanOptionalAction, help=help_)
+            else:
+                s.add_argument(flag, dest=knob, type=t, choices=choices, help=help_)
+        s.set_defaults(fn=cmd_corpus, section=section)
+    return p
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = _parser().parse_args(argv)
     return args.fn(args)
 
 

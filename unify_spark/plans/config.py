@@ -52,6 +52,8 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from types import SimpleNamespace
+from typing import Literal, get_args, get_origin
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -77,25 +79,23 @@ from unify_spark.operators import (
 from unify_spark.operators.constraints import UpsertConflictConstraint, VectorConstraint
 
 
+# the top-level run keys a suite config may set (and validate's flags
+# override); their defaults are ValidationContext's own
+RUN_KEYS = ("run_id", "part_col", "payload_cap_ms", "violation_cap", "fail_fast")
+
+
 @dataclass
 class SuiteConfig:
     tables: dict[str, str]
     constraints: list[Constraint]
-    run_id: str = "run-0"
-    part_col: str = "part_date"
-    payload_cap_ms: int | None = 50
-    violation_cap: int = 1000
-    fail_fast: bool = False
-    raw: dict = field(default_factory=dict)
+    ctx: ValidationContext = field(default_factory=ValidationContext)
+
+    @property
+    def run_id(self) -> str:
+        return self.ctx.run_id
 
     def context(self) -> ValidationContext:
-        return ValidationContext(
-            run_id=self.run_id,
-            part_col=self.part_col,
-            payload_cap_ms=self.payload_cap_ms,
-            violation_cap=self.violation_cap,
-            fail_fast=self.fail_fast,
-        )
+        return self.ctx
 
 
 def _build_constraint(spec: dict) -> Constraint:
@@ -299,28 +299,25 @@ def parse_suite_config(doc: dict, base_dir: str = ".") -> SuiteConfig:
     constraints = [_build_constraint(s) for s in doc.get("constraints", [])]
     if not constraints:
         raise ValueError("suite config declares no constraints")
-    return SuiteConfig(
-        tables=tables,
-        constraints=constraints,
-        run_id=doc.get("run_id", "run-0"),
-        part_col=doc.get("part_col", "part_date"),
-        payload_cap_ms=doc.get("payload_cap_ms", 50),
-        violation_cap=int(doc.get("violation_cap", 1000)),
-        fail_fast=bool(doc.get("fail_fast", False)),
-        raw=doc,
-    )
+    ctx = ValidationContext(**{k: doc[k] for k in RUN_KEYS if k in doc})
+    ctx.violation_cap = int(ctx.violation_cap)
+    ctx.fail_fast = bool(coerce("fail_fast", bool, ctx.fail_fast))
+    return SuiteConfig(tables=tables, constraints=constraints, ctx=ctx)
+
+
+def _read_doc(path: str):
+    """Parse a YAML (.yaml/.yml) or JSON config file."""
+    with open(path) as f:
+        if path.endswith((".yaml", ".yml")):
+            import yaml
+
+            return yaml.safe_load(f)
+        return json.load(f)
 
 
 def load_suite_config(path: str) -> SuiteConfig:
     """Load a YAML (.yaml/.yml) or JSON (.json) suite config file."""
-    with open(path) as f:
-        text = f.read()
-    if path.endswith((".yaml", ".yml")):
-        import yaml
-
-        doc = yaml.safe_load(text)
-    else:
-        doc = json.loads(text)
+    doc = _read_doc(path)
     return parse_suite_config(doc, base_dir=os.path.dirname(os.path.abspath(path)))
 
 
@@ -332,76 +329,120 @@ def load_tables(spark: SparkSession, cfg: SuiteConfig) -> dict[str, DataFrame]:
 
 # ---------------------------------------------------------------------------
 # corpus-pipeline config — the knob surface for the LLM-data operators, so
-# semantic dedup / quality cleaning / audio feature extraction run from a
-# config file with zero Python (same zero-code contract as the constraint
-# suite above). A ``corpus:`` section coexists with ``tables:``/
-# ``constraints:`` in one file, or stands alone:
+# text cleaning, semantic dedup and the audio family run from a config file
+# with zero Python (same zero-code contract as the constraint suite above).
+# A ``corpus:`` section coexists with ``tables:``/``constraints:`` in one
+# file, or stands alone; each sub-section feeds one CLI command:
 #
 #     corpus:
-#       clean:        {id_col: doc_id, text_col: text, min_tokens: 5,
-#                      max_punct_ratio: 0.3, min_est_jaccard: 0.8}
-#       embed_dedup:  {id_col: vec_id, vec_col: embedding, dim: 64,
-#                      threshold: 0.95, n_planes: 100, n_bands: 10,
-#                      max_bucket_size: 100000}
-#       audio:        {id_col: clip_id, bytes_col: bytes, codec_col: codec,
-#                      sr_col: sr_hz, threshold_dbfs: -40.0,
-#                      max_gap_ms: 100, min_dur_ms: 60}
+#       clean:           {min_tokens: 5, min_est_jaccard: 0.8}  # corpus-clean
+#       embed_dedup:     {dim: 64, threshold: 0.95}      # corpus-embed-dedup
+#       audio:           {threshold_dbfs: -40.0}         # audio-features
+#       audio_clean:     {near_dup_min_shared: 5}        # audio-clean
+#       audio_dedup:     {min_shared: 5, align: true}    # audio-dedup
+#       audio_normalize: {target_dbfs: -20.0}            # audio-normalize
+#       audio_embed:     {n_bands: 32}                   # audio-embed
+#
+# CORPUS_COMMANDS below is the only statement of these knobs: the CLI builds
+# its flags from it and the parser derives the allowed keys from it. A knob
+# set neither in the file nor by a flag is not passed at all, so its default
+# is the operator's own keyword default.
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class CorpusConfig:
-    clean: dict = field(default_factory=dict)
-    embed_dedup: dict = field(default_factory=dict)
-    audio: dict = field(default_factory=dict)
-    audio_clean: dict = field(default_factory=dict)
-    audio_dedup: dict = field(default_factory=dict)
-    audio_normalize: dict = field(default_factory=dict)
-    audio_embed: dict = field(default_factory=dict)
-    raw: dict = field(default_factory=dict)
+class TablePath(str):
+    """Knob type of a table-valued knob: given as a path, read as a
+    DataFrame before the operator is called."""
 
 
-_CORPUS_KEYS = {
-    "clean": {
-        "id_col", "text_col", "min_tokens", "max_punct_ratio",
-        "max_tok_rep_ratio", "boilerplate_min_df", "min_est_jaccard",
-        "benchmark", "bench_id_col", "bench_text_col",
-        "decontaminate_n", "decontaminate_min_overlap",
-    },
-    "embed_dedup": {
-        "id_col", "vec_col", "dim", "threshold", "n_planes", "n_bands",
-        "max_bucket_size",
-    },
-    "audio": {
-        "id_col", "bytes_col", "codec_col", "sr_col", "threshold_dbfs",
-        "max_gap_ms", "min_dur_ms",
-    },
-    "audio_clean": {
-        "id_col", "bytes_col", "codec_col", "sr_col", "threshold_dbfs",
-        "max_silence_ratio", "max_clipping_ratio", "min_speech_ms",
-        "near_dup_min_shared",
-    },
-    "audio_dedup": {
-        "id_col", "bytes_col", "codec_col", "sr_col", "frame_ms", "n_bands",
-        "min_shared", "max_fp_freq", "target_sr", "hop_ms", "align",
-    },
-    "audio_normalize": {
-        "id_col", "bytes_col", "codec_col", "sr_col", "target_dbfs",
-        "mode", "max_gain_db",
-    },
-    "audio_embed": {
-        "id_col", "bytes_col", "codec_col", "sr_col", "n_bands",
-        "frame_ms", "target_sr",
-    },
+_AUDIO_COLS = {"id_col": str, "bytes_col": str, "codec_col": str, "sr_col": str}
+
+# section -> (command, "module:function", {knob: type | (type, help)}); the
+# function is named, not imported, so building the CLI loads no operator
+CORPUS_COMMANDS: dict[str, tuple[str, str, dict]] = {
+    "clean": ("corpus-clean", "unify_spark.functions.pipeline:clean_corpus", {
+        "id_col": str, "text_col": str, "min_tokens": int,
+        "max_punct_ratio": float, "max_tok_rep_ratio": float,
+        "boilerplate_min_df": (int, "strip lines appearing in >= N docs before the gate"),
+        "min_est_jaccard": float,
+        "benchmark": (TablePath, "eval-set parquet: drop docs with n-gram overlap "
+                                 "(decontamination stage)"),
+        "bench_id_col": str, "bench_text_col": str,
+        "decontaminate_n": int, "decontaminate_min_overlap": int,
+    }),
+    "embed_dedup": ("corpus-embed-dedup",
+                    "unify_spark.functions.similarity:embedding_dup_clusters", {
+        "id_col": str, "vec_col": str, "dim": int, "threshold": float,
+        "n_planes": int, "n_bands": int, "max_bucket_size": int,
+    }),
+    "audio": ("audio-features", "unify_spark.functions.multimodal:audio_sidecars", {
+        **_AUDIO_COLS, "threshold_dbfs": float, "max_gap_ms": int, "min_dur_ms": int,
+    }),
+    "audio_clean": ("audio-clean", "unify_spark.functions.pipeline:clean_audio_corpus", {
+        **_AUDIO_COLS, "threshold_dbfs": float, "max_silence_ratio": float,
+        "max_clipping_ratio": float, "min_speech_ms": int,
+        "near_dup_min_shared": (int, "enable the acoustic near-dup collapse stage"),
+    }),
+    "audio_dedup": ("audio-dedup",
+                    "unify_spark.functions.audio_dedup:audio_near_dup_candidates", {
+        **_AUDIO_COLS, "frame_ms": int, "n_bands": int, "min_shared": int,
+        "max_fp_freq": int, "target_sr": int, "hop_ms": int,
+        "align": (bool, "time-alignment voting over fingerprint matches"),
+    }),
+    "audio_normalize": ("audio-normalize",
+                        "unify_spark.functions.multimodal:normalize_audio_gain", {
+        **_AUDIO_COLS, "target_dbfs": float, "mode": Literal["rms", "peak"],
+        "max_gain_db": float,
+    }),
+    "audio_embed": ("audio-embed", "unify_spark.functions.multimodal:audio_embeddings", {
+        **_AUDIO_COLS, "n_bands": int, "frame_ms": int, "target_sr": int,
+    }),
 }
 
 
-def parse_corpus_config(doc: dict | None) -> CorpusConfig:
-    """Validate and extract the ``corpus:`` section; unknown keys inside a
-    sub-section are an error (a typo'd knob silently falling back to a
-    default is exactly the config bug a validation engine must not have),
-    and non-mapping sections get a clear ValueError rather than a raw
-    traceback (an empty YAML file parses to None)."""
+def knob_spec(spec) -> tuple:
+    """(type, help, choices) of one knob-table entry; a ``Literal`` type is
+    a string knob with a fixed set of choices."""
+    t, help_ = spec if isinstance(spec, tuple) else (spec, None)
+    if get_origin(t) is Literal:
+        return str, help_, get_args(t)
+    return t, help_, None
+
+
+def coerce(where: str, t, v):
+    """A config value through its knob type; None stays None (an explicit
+    null is an operator value, e.g. ``hop_ms: null``), and a bool knob takes
+    only a real bool, since ``bool("false")`` is True."""
+    if v is None:
+        return None
+    if t is bool and not isinstance(v, bool):
+        raise ValueError(f"{where}: must be true or false, got {v!r}")
+    return t(v)
+
+
+def corpus_knobs(section: str, flags: dict, config_path: str | None = None) -> dict:
+    """Resolve one section's knobs: the config file's value (an explicit
+    null included), overridden by a given flag (flags default to None),
+    coerced through the knob's type. Knobs set nowhere are left out, so the
+    operator's own default applies."""
+    cfg = getattr(load_corpus_config(config_path), section) if config_path else {}
+    out = {}
+    for knob, spec in CORPUS_COMMANDS[section][2].items():
+        t = knob_spec(spec)[0]
+        if flags.get(knob) is not None:
+            out[knob] = t(flags[knob])
+        elif knob in cfg:
+            out[knob] = coerce(f"corpus.{section}.{knob}", t, cfg[knob])
+    return out
+
+
+def parse_corpus_config(doc: dict | None) -> SimpleNamespace:
+    """Validate and extract the ``corpus:`` section, one attribute per
+    sub-section; unknown keys inside a sub-section are an error (a typo'd
+    knob silently falling back to a default is exactly the config bug a
+    validation engine must not have), and non-mapping sections get a clear
+    ValueError rather than a raw traceback (an empty YAML file parses to
+    None)."""
     doc = doc if doc is not None else {}
     if not isinstance(doc, dict):
         raise ValueError(f"corpus config must be a mapping, got {type(doc).__name__}")
@@ -409,27 +450,19 @@ def parse_corpus_config(doc: dict | None) -> CorpusConfig:
     if not isinstance(section, dict):
         raise ValueError(f"corpus: must be a mapping, got {type(section).__name__}")
     out: dict[str, dict] = {}
-    for name, allowed in _CORPUS_KEYS.items():
+    for name, (_, _, knobs) in CORPUS_COMMANDS.items():
         sub = section.get(name) or {}
         if not isinstance(sub, dict):
             raise ValueError(f"corpus.{name}: must be a mapping, got {type(sub).__name__}")
-        unknown = set(sub) - allowed
+        unknown = set(sub) - set(knobs)
         if unknown:
             raise ValueError(
-                f"corpus.{name}: unknown keys {sorted(unknown)}; allowed: {sorted(allowed)}"
+                f"corpus.{name}: unknown keys {sorted(unknown)}; allowed: {sorted(knobs)}"
             )
         out[name] = dict(sub)
-    return CorpusConfig(raw=doc, **out)
+    return SimpleNamespace(**out)
 
 
-def load_corpus_config(path: str) -> CorpusConfig:
+def load_corpus_config(path: str) -> SimpleNamespace:
     """Load the corpus section of a YAML/JSON config file."""
-    with open(path) as f:
-        text = f.read()
-    if path.endswith((".yaml", ".yml")):
-        import yaml
-
-        doc = yaml.safe_load(text)
-    else:
-        doc = json.loads(text)
-    return parse_corpus_config(doc)
+    return parse_corpus_config(_read_doc(path))
