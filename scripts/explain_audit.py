@@ -3,11 +3,13 @@ operators, annotated with what to check (column pruning, pushed filters,
 whole-stage codegen spans, partial aggregation, AQE join strategy).
 
 Run: python scripts/explain_audit.py [fixture_dir]
+(fixture_dir: a ``generate-fixture`` output; default .bench_data/clips_4000000)
 """
 
 from __future__ import annotations
 
 import io
+import json
 import os
 import re
 import sys
@@ -37,6 +39,7 @@ def main() -> None:
         EqualityAcrossTablesConstraint,
         ReferentialIntegrityConstraint,
     )
+    from unify_spark.fixtures.generate import DUR_MAX_MS
     from unify_spark.plans import audio_suite, load_audio_tables
     from unify_spark.session import get_spark
 
@@ -98,10 +101,13 @@ def main() -> None:
             ).violations(tables, ctx),
         ),
         (
-            "drift (histogram + windowed KS/PSI, fully lazy)",
-            "CHECK: one hash aggregate over (part,bucket); window functions "
-            "operate on the tiny densified histogram, not raw rows.",
-            DriftConstraint("clips", "dur_ms").violations(tables, ctx),
+            "drift (histogram + one applyInPandas PSI/KS scorer)",
+            "CHECK: the only pass over raw rows is one hash aggregate over "
+            "(part, bucket), whose bucket universe is a broadcast Range (the "
+            "bounds contract; no min/max pre-scan); ONE FlatMapGroupsInPandas "
+            "scores the whole histogram (n_parts x n_buckets rows) in a single "
+            "group; no Window node and no per-row Python.",
+            DriftConstraint("clips", "dur_ms", bounds=(0, DUR_MAX_MS)).violations(tables, ctx),
         ),
         (
             "transcript equality (hash-only shuffle on the fact side)",
@@ -154,16 +160,21 @@ def main() -> None:
             )
         )
 
+    with open(os.path.join(fixture, "manifest.json")) as f:
+        m = json.load(f)
+    where = os.path.relpath(fixture, REPO) if fixture.startswith(REPO) else fixture
     out = [
         "# PLANS — physical-plan audit of the core operators\n",
         "Generated by scripts/explain_audit.py (`.explain('formatted')` on the",
-        f"fixture at {fixture}). Each section lists what the plan must show",
-        "for the 100 TB design to hold, followed by the actual plan.\n",
+        f"fixture made by `python -m unify_spark.cli generate-fixture --out {where}",
+        f"--rows {m['n_rows']} --parts {m['n_parts']} --payload-cap-ms {m['payload_cap_ms']}`).",
+        "Each section lists what the plan must show for the 100 TB design to",
+        "hold, followed by the actual plan.\n",
     ]
     for title, check, df in sections:
         plan = explain_str(df)
         # keep plans readable: drop the long Location/field-by-field output
-        plan = re.sub(r"Location: \S+", "Location: <fixture>", plan)
+        plan = re.sub(r"Location: \S+ \[[^\]]*\]", "Location: <fixture>", plan)
         out.append(f"\n## {title}\n\n{check}\n\n```\n{plan}\n```\n")
 
     # preserve the hand-written analysis sections (HOF pitfall, per-round

@@ -130,30 +130,3 @@ def test_load_dsl_yaml(tmp_path):
     with open(p, "w") as f:
         yaml.safe_dump(DSL, f)
     assert compile_schema(load_dsl(p)).kinds.keys() == DSL.keys()
-
-
-def test_to_dsl_roundtrip():
-    """Reverse emitter (compile.clj:298-316 parity): Metamodel → DSL →
-    Metamodel reproduces the compiled schema exactly, including enums,
-    refs, tuples, cardinality-many, parent links, and id scopes."""
-    from dataclasses import asdict
-
-    from unify_spark.schema.compile_dsl import to_dsl
-
-    mm = compile_schema(DSL)
-    dsl2 = to_dsl(mm)
-    mm2 = compile_schema(dsl2)
-    assert {k: asdict(v) for k, v in mm.kinds.items()} == {
-        k: asdict(v) for k, v in mm2.kinds.items()
-    }
-    # and the emitted DSL is itself stable (emit → compile → emit fixpoint)
-    assert to_dsl(mm2) == dsl2
-
-
-def test_to_dsl_rejects_idless_kind():
-    from unify_spark.schema.compile_dsl import to_dsl
-    from unify_spark.schema.model import KindSchema, Metamodel
-
-    mm = Metamodel(kinds={"k": KindSchema(kind="k", id_attr=None)})
-    with pytest.raises(ValueError):
-        to_dsl(mm)

@@ -11,7 +11,8 @@ import yaml
 from unify_spark.fixtures.generate import DUR_MAX_MS, SR_CHOICES
 from unify_spark.operators.base import ValidationContext
 from unify_spark.plans import ValidationRunner, audio_suite
-from unify_spark.plans.config import load_suite_config, load_tables, parse_suite_config
+from unify_spark.plans.config import load_suite_config, parse_suite_config
+from unify_spark.sources import read_table
 
 
 def _audio_config_doc(fixture_dir: str) -> dict:
@@ -62,7 +63,7 @@ def test_yaml_config_reproduces_builtin_suite(spark, fixture_dir, tmp_path):
     cfg = load_suite_config(cfg_path)
     assert cfg.run_id == "cfg-run" and len(cfg.constraints) == 9
 
-    tables = load_tables(spark, cfg)
+    tables = {name: read_table(spark, p) for name, p in cfg.tables.items()}
     cfg_res = ValidationRunner(spark, str(tmp_path / "cfg_out"), cfg.context()).run(
         tables, cfg.constraints
     )
@@ -98,7 +99,7 @@ def test_json_config_and_relative_paths(spark, fixture_dir, tmp_path):
     with open(cfg_path, "w") as f:
         json.dump(doc, f)
     cfg = load_suite_config(cfg_path)
-    tables = load_tables(spark, cfg)
+    tables = {name: read_table(spark, p) for name, p in cfg.tables.items()}
     assert tables["clips"].count() > 0
 
 

@@ -185,33 +185,6 @@ def test_global_constraint_resume_stays_stage_grain(spark, tmp_path):
     assert res.violation_counts[c.name] == 2
 
 
-def test_referencing_entities_reverse_lookup(spark):
-    """util.clj:44-63 parity: violations without their own lineage get up to
-    `cap` referrer descriptors from the declared reverse refs."""
-    from unify_spark.operators.base import ValidationContext
-    from unify_spark.operators.constraints import RangeConstraint
-    from unify_spark.operators.report import annotate_referencing_entities
-
-    clips = spark.createDataFrame(
-        [("c1", -5.0), ("c2", 1.0)], ["clip_id", "val"]
-    )
-    tmap = spark.createDataFrame(
-        [("t%d" % i, "c1") for i in range(15)] + [("t99", "c2")],
-        ["transcript_id", "clip_id"],
-    )
-    vios = RangeConstraint("clips", "val", min_value=0.0).violations(
-        {"clips": clips}, ValidationContext()
-    )
-    out = annotate_referencing_entities(
-        vios, {"transcript_map": tmap},
-        refs=[("transcript_map", "clip_id", "transcript_id")], cap=10,
-    )
-    rows = {r["key"]: r["referenced_from"] for r in out.collect()}
-    assert set(rows) == {"c1"}
-    assert len(rows["c1"]) == 10  # capped at first 10 of 15 referrers
-    assert all(r.startswith("transcript_map:t") for r in rows["c1"])
-
-
 def test_equality_hash_is_type_insensitive(spark):
     """xxhash64 is type-sensitive; when column types differ the constraint
     must hash a common-type cast so long 1 == string '1' (and 1 == 1.0)

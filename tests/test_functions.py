@@ -538,28 +538,6 @@ def test_shingles_short_text(spark):
     assert got[3] is None  # null text stays null (upstream nullness checks own it)
 
 
-def test_ivf_centroid_sidecar_save_load(spark, tmp_path):
-    """Trained quantizer persists as a parquet sidecar and a fresh load
-    reproduces the index exactly (cross-session reuse, like the HLL/t-digest
-    profile sidecars)."""
-    import numpy as np
-
-    rows = [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(60)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    C = similarity.ivf_train_centroids(df, dim=8, n_cells=4, iters=2)
-    p = str(tmp_path / "ivf" / "centroids.parquet")
-    similarity.save_ivf_centroids(p, C)
-    C2 = similarity.load_ivf_centroids(p)
-    assert np.allclose(C, C2) and C2.shape == (4, 8)
-
-    q = df.filter(F.col("vec_id") == 0)
-    a = {(r["id_q"], r["id_b"], r["rank"]) for r in
-         similarity.ivf_ann_topk(df, q, dim=8, k=3, n_cells=4, centroids=C).collect()}
-    b = {(r["id_q"], r["id_b"], r["rank"]) for r in
-         similarity.ivf_ann_topk(df, q, dim=8, k=3, n_cells=4, centroids=C2).collect()}
-    assert a == b and len(a) == 3
-
-
 def test_winnow_recall_vs_ngram_ground_truth(spark):
     """Recall floor for winnow_candidates against exact n-gram Jaccard
     near-dups on a seeded corpus — pins the (k, w, min_shared) trade the

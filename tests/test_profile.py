@@ -272,3 +272,38 @@ def test_categorical_out_of_contract_value_trips_novelty(spark):
     }
     assert scores["p3"][1] >= 1 and scores["p3"][2]
     assert scores["p0"][1] == 0 and not scores["p0"][2]
+
+
+def test_exact_group_percentiles_matches_builtin(spark):
+    """The distributed percentile equals the builtin ``percentile()`` on
+    nulls, an all-NULL group, a one-value group, a NULL group key,
+    duplicates and p0/p100 — except signed zero: ``groupBy`` folds -0.0
+    into 0.0, so a {-0.0, 0.0} group reads +0.0 where the builtin returns
+    -0.0."""
+    import math
+
+    from unify_spark.operators.profile import exact_group_percentiles
+
+    rows = (
+        [("a", float(v)) for v in (5, 1, 4, 2, 3)] + [("a", None)] * 3
+        + [("all_null", None)] * 2
+        + [("single", 7.25)]
+        + [(None, 10.0), (None, -2.5), (None, None)]
+        + [("dup", 1.0)] * 4 + [("dup", 9.0)]
+        + [("zero", -0.0), ("zero", 0.0)]
+    )
+    df = spark.createDataFrame(rows, "g string, v double")
+    ps = {"p0": 0.0, "p25": 0.25, "p50": 0.5, "p95": 0.95, "p100": 1.0}
+    got = {r["g"]: r.asDict() for r in exact_group_percentiles(df, "v", ps, "g").collect()}
+    ref = {
+        r["g"]: r.asDict()
+        for r in df.groupBy("g")
+        .agg(*[F.expr(f"percentile(v, {p})").alias(n) for n, p in ps.items()])
+        .collect()
+    }
+    assert got == ref  # -0.0 == 0.0, so the zero group compares equal here
+    assert all(got["all_null"][n] is None for n in ps)
+    assert got[None]["p0"] == -2.5 and got[None]["p100"] == 10.0
+    assert got["dup"]["p50"] == 1.0 and got["single"]["p95"] == 7.25
+    assert [math.copysign(1.0, got["zero"][n]) for n in ps] == [1.0] * 5
+    assert [math.copysign(1.0, ref["zero"][n]) for n in ("p0", "p50", "p95")] == [-1.0] * 3

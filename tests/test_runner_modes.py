@@ -131,24 +131,6 @@ def test_unknown_dependency_raises_before_any_job(spark, tmp_path, mode):
         getattr(runner, mode)({"t": df}, [c])
 
 
-def test_write_partitioned_batch_rows_contract(spark, tmp_path):
-    import glob
-
-    from unify_spark.sources.sinks import write_partitioned
-
-    df = spark.createDataFrame(
-        [(i, "p%d" % (i % 2)) for i in range(100)], ["x", "part"]
-    ).coalesce(1)
-    out = str(tmp_path / "batched")
-    write_partitioned(df, out, ["part"], batch_rows=10)
-    files = glob.glob(out + "/part=*/*.parquet")
-    assert len(files) >= 10  # 100 rows / 10-per-file across 2 partitions
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="positive"):
-        write_partitioned(df, out, ["part"], batch_rows=0)
-
-
 def test_audit_append_retries_transient_failures(spark, tmp_path, monkeypatch):
     from unify_spark.plans.audit import AuditLog
 

@@ -1,10 +1,9 @@
-"""Sources (lineage CSV, NA normalization, column contract) and sinks
-(idempotent dim upsert, run retraction)."""
+"""Sources (lineage CSV, NA normalization, column contract), run
+retraction and the Iceberg adapter's dispatch."""
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from unify_spark.sources import (
     check_required_columns,
@@ -12,7 +11,7 @@ from unify_spark.sources import (
     read_csv_with_lineage,
 )
 from unify_spark.sources.readers import MissingColumnsError
-from unify_spark.sources.sinks import retract_run, upsert_dim
+from unify_spark.sources.sinks import retract_run
 
 
 def test_csv_lineage_and_trim(spark, tmp_path):
@@ -40,18 +39,6 @@ def test_normalize_na(spark):
     assert out[1]["x"] is None and out[1]["y"] is None
 
 
-def test_upsert_dim_idempotent(spark, tmp_path):
-    path = str(tmp_path / "dim")
-    d1 = spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"])
-    assert upsert_dim(spark, d1, path, ["k"]) == 2
-    # re-seeding is a no-op (reference db.clj:71-78 count-probe idempotency)
-    assert upsert_dim(spark, d1, path, ["k"]) == 0
-    d2 = spark.createDataFrame([("b", 99), ("c", 3)], ["k", "v"])
-    assert upsert_dim(spark, d2, path, ["k"]) == 1  # only 'c' is new
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert rows == {"a": 1, "b": 2, "c": 3}  # existing 'b' not overwritten
-
-
 def test_retract_run(spark, audio_tables, tmp_path):
     from unify_spark.operators.base import ValidationContext
     from unify_spark.plans import ValidationRunner, audio_suite
@@ -76,69 +63,6 @@ def test_retract_run(spark, audio_tables, tmp_path):
     # must not drive split_valid
     assert not os.path.exists(os.path.join(out, "violations"))
     assert not os.path.exists(os.path.join(out, "violating_keys"))
-
-
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """Joining two tables bucketed on the same key must plan WITHOUT a
-    shuffle exchange on either side (the co-located join story)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from unify_spark.sources.sinks import write_bucketed
-
-    left = spark.range(10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    right = spark.range(5_000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("w")
-    )
-    write_bucketed(left, "bk_left", ["k"], n_buckets=8)
-    write_bucketed(right, "bk_right", ["k"], n_buckets=8)
-    # force a merge join (small test tables would otherwise broadcast and
-    # hide the bucketing); at fact×fact scale SMJ is what Spark picks anyway
-    j = spark.table("bk_left").hint("merge").join(spark.table("bk_right"), on="k")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        j.explain()
-    plan = buf.getvalue()
-    assert "SortMergeJoin" in plan
-    assert "Exchange hashpartitioning" not in plan, plan  # no shuffle: co-located
-    assert j.count() == 5_000
-
-
-def test_write_matrix_file_header_rewrite_and_constants(spark, tmp_path):
-    """matrix.clj:21-62 parity: header substitution map + constant columns."""
-    import glob
-
-    from unify_spark.sources.sinks import write_matrix_file
-
-    df = spark.createDataFrame(
-        [("g1", 1.0), ("g2", 2.0)], ["gene_name", "bc1"]
-    )
-    dest = str(tmp_path / "mtx")
-    write_matrix_file(
-        df, dest, header_map={"gene_name": "measurement.gene"},
-        constants={"dataset": "d1"},
-    )
-    part = glob.glob(dest + "/part-*.csv")[0]
-    lines = open(part).read().strip().split("\n")
-    assert lines[0] == "measurement.gene\tbc1\tdataset"
-    assert lines[1].endswith("\td1") and len(lines) == 3
-
-
-def test_upload_matrix_files_copies_tree(tmp_path):
-    from unify_spark.sources.sinks import upload_matrix_files
-
-    wd = tmp_path / "work"
-    (wd / "matrix").mkdir(parents=True)
-    (wd / "matrix" / "m1.tsv").write_text("a\tb\n1\t2\n")
-    (wd / "matrix" / "_SUCCESS").write_text("")
-    dest = tmp_path / "bucket"
-    keys = upload_matrix_files(str(wd), str(dest))
-    assert keys == ["m1.tsv"]
-    assert (dest / "m1.tsv").read_text().startswith("a\tb")
-    # no matrix dir -> noop (db.matrix/noop analogue)
-    assert upload_matrix_files(str(tmp_path / "nowhere"), str(dest)) == []
 
 
 def test_spark_submit_pyfiles_deployment(tmp_path):
@@ -189,12 +113,12 @@ def test_spark_submit_pyfiles_deployment(tmp_path):
 
 def test_iceberg_adapter_dispatch_and_sql(spark, tmp_path):
     """The Iceberg seam as a tested dual path: catalog detection from conf
-    keys, the exact MERGE/DELETE statements the catalog path emits, and the
-    parquet shim handling every operation in this jar-free sandbox."""
+    keys, the exact DELETE statement the catalog path emits, and the
+    parquet shim handling appends in this jar-free sandbox."""
     from unify_spark.sources import iceberg as ice
 
-    # no catalog configured here → disabled, everything routes to the shim
-    assert ice.iceberg_enabled(spark) is False
+    # no catalog configured here → everything routes to the shim
+    assert ice.iceberg_catalogs(spark) == []
 
     # detection rule, unit-tested via injected conf
     confs = {
@@ -228,13 +152,8 @@ def test_iceberg_adapter_dispatch_and_sql(spark, tmp_path):
     assert not ice.is_table_identifier("other.db.t", catalogs=sess)
     assert not ice.is_table_identifier("db.audit", catalogs=["lake"])
 
-    # the statements the catalog path executes, asserted verbatim —
+    # the statement the catalog path executes, asserted verbatim —
     # identifiers backtick-quoted so user-supplied names never parse as SQL
-    assert ice.merge_sql("lake.dims.codec", ["codec"], ["codec", "label"]) == (
-        "MERGE INTO `lake`.`dims`.`codec` t USING `_src` s ON t.`codec` = s.`codec` "
-        "WHEN MATCHED THEN UPDATE SET t.`label` = s.`label` "
-        "WHEN NOT MATCHED THEN INSERT (`codec`, `label`) VALUES (s.`codec`, s.`label`)"
-    )
     assert ice.delete_run_sql("lake.audit.runs", "r'1") == (
         "DELETE FROM `lake`.`audit`.`runs` WHERE run_id = 'r''1'"
     )
@@ -245,45 +164,3 @@ def test_iceberg_adapter_dispatch_and_sql(spark, tmp_path):
     ice.append_rows(spark, df, p)
     ice.append_rows(spark, df, p)
     assert spark.read.parquet(p).count() == 4
-
-    # shim upsert: idempotent on keys
-    p2 = str(tmp_path / "dim")
-    ice.upsert_rows(spark, df, p2, ["k"])
-    ice.upsert_rows(spark, df.unionByName(spark.createDataFrame([(3, "c")], ["k", "v"])), p2, ["k"])
-    assert spark.read.parquet(p2).count() == 3
-
-    # version/timestamp snapshot reads have no parquet-shim meaning → error
-    with pytest.raises(ValueError, match="snapshot read needs an Iceberg catalog"):
-        ice.read_snapshot(spark, p, version=3)
-
-
-def test_read_snapshot_parquet_shim_as_of_run(spark, tmp_path):
-    """The jar-free time-travel analogue: write run A, then run B (each
-    with its audit rows), and an as-of-run-A read returns exactly A's rows
-    — a run whose audit commit postdates A's is invisible, matching the
-    snapshot-isolation read a catalog would give."""
-    from unify_spark.plans.audit import AuditLog
-    from unify_spark.sources import iceberg as ice
-
-    table = str(tmp_path / "verdicts")
-    audit = str(tmp_path / "audit")
-    log = AuditLog(spark, audit)
-
-    spark.createDataFrame(
-        [("runA", "c1", 1), ("runA", "c2", 0)], ["run_id", "constraint", "n"]
-    ).write.mode("append").parquet(table)
-    log.append([{"run_id": "runA", "constraint": "c1", "status": "done"}])
-
-    spark.createDataFrame(
-        [("runB", "c1", 5)], ["run_id", "constraint", "n"]
-    ).write.mode("append").parquet(table)
-    log.append([{"run_id": "runB", "constraint": "c1", "status": "done"}])
-
-    as_of_a = ice.read_snapshot(spark, table, as_of_run="runA", audit_path=audit)
-    assert {r["run_id"] for r in as_of_a.collect()} == {"runA"}
-    assert as_of_a.count() == 2
-    as_of_b = ice.read_snapshot(spark, table, as_of_run="runB", audit_path=audit)
-    assert as_of_b.count() == 3  # B's snapshot includes A (committed earlier)
-
-    with pytest.raises(ValueError, match="not found in audit"):
-        ice.read_snapshot(spark, table, as_of_run="ghost", audit_path=audit)

@@ -1,39 +1,8 @@
-"""Prepare-engine transform operators (SURVEY §2.2) + upsert crosscheck."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Prepare-engine melt (SURVEY §2.2) + upsert crosscheck."""
 
 from unify_spark.operators import transforms as tr
 from unify_spark.operators.base import ValidationContext
 from unify_spark.operators.constraints import UpsertConflictConstraint
-
-
-def test_select_rename(spark):
-    df = spark.createDataFrame([("a", 1)], ["src_name", "x"])
-    out = tr.select_rename(df, {"src_name": "name", "x": "count"})
-    assert out.columns == ["name", "count"]
-
-
-def test_cast_strict_captures_errors(spark):
-    df = spark.createDataFrame([("1", "2.5"), ("oops", "3.0"), (None, "bad")], ["a", "b"])
-    out = tr.cast_strict(df, {"a": "long", "b": "double"}).collect()
-    assert out[0]["_cast_errors"] == []
-    assert out[1]["_cast_errors"] == ["a:oops"]
-    assert out[2]["_cast_errors"] == ["b:bad"]
-    assert out[1]["a"] is None and out[1]["b"] == 3.0
-
-
-def test_card_many_split(spark):
-    df = spark.createDataFrame([("x;y;z",), ("solo",), ("",), (None,)], ["tags"])
-    got = [r["tags"] for r in tr.card_many_split(df, "tags", ";").collect()]
-    assert got == [["x", "y", "z"], ["solo"], [], []]
-
-
-def test_card_many_split_regex_metachar(spark):
-    # delimiter must be literal: '|' would be a regex alternation otherwise
-    df = spark.createDataFrame([("a|b",)], ["v"])
-    got = tr.card_many_split(df, "v", "|").collect()[0]["v"]
-    assert got == ["a", "b"]
 
 
 def test_molten(spark):
@@ -42,26 +11,6 @@ def test_molten(spark):
     assert {(r["id"], r["variable"], r["value"]) for r in out} == {
         (1, "m1", 10.0),
         (1, "m2", 20.0),
-    }
-
-
-def test_constants_and_tuple(spark):
-    df = spark.createDataFrame([("s1",)], ["sample"])
-    out = tr.constants_injection(df, {"dataset": "ds1", "version": 2})
-    out = tr.tuple_assembly(out, "uid_tuple", ["dataset", "sample"])
-    row = out.collect()[0]
-    assert row["dataset"] == "ds1" and row["version"] == 2
-    assert row["uid_tuple"]["sample"] == "s1"
-
-
-def test_melt_matrix_dense_drops_na(spark):
-    df = spark.createDataFrame(
-        [("r1", 1.0, None), ("r2", None, 4.0)], ["row_key", "c1", "c2"]
-    )
-    out = tr.melt_matrix_dense(df, ["row_key"], ["c1", "c2"])
-    assert {(r["row_key"], r["col_key"], r["value"]) for r in out.collect()} == {
-        ("r1", "c1", 1.0),
-        ("r2", "c2", 4.0),
     }
 
 
@@ -80,161 +29,3 @@ def test_upsert_no_conflict_when_values_agree(spark):
     )
     c = UpsertConflictConstraint("t", ["id"], ["v"])
     assert c.violations({"t": df}, ValidationContext()).count() == 0
-
-
-# --- matrix scan (dense + sparse), matrix_file.clj:41-117 ------------------
-
-
-def test_scan_matrix_dense_shapes(spark):
-    from unify_spark.operators.transforms import scan_matrix
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [
-            ("g1", "1.5", "NA", "bad"),
-            ("g2", "2.0", "0.5", "3.0"),
-        ],
-        ["gene", "bc1", "bc2", "bc3"],
-    )
-    res = scan_matrix(
-        df, ["gene"], data_type="double", value_spec=lambda v: v >= 0
-    )
-    assert res.value_column is None
-    assert res.target_columns == ["bc1", "bc2", "bc3"]
-    cells = {(r["gene"], r["col_key"]): r["value"] for r in res.long.collect()}
-    # NA skipped, 'bad' excluded from clean cells
-    assert cells == {("g1", "bc1"): 1.5, ("g2", "bc1"): 2.0,
-                     ("g2", "bc2"): 0.5, ("g2", "bc3"): 3.0}
-    inv = res.invalid_cells.collect()
-    assert [(r["gene"], r["col_key"], r["observed"]) for r in inv] == [("g1", "bc3", "bad")]
-    assert {r["gene"] for r in res.index_sets["gene"].collect()} == {"g1", "g2"}
-
-
-def test_scan_matrix_sparse_shapes(spark):
-    from unify_spark.operators.transforms import scan_matrix
-
-    df = spark.createDataFrame(
-        [
-            ("g1", "bc1", "1.5"),
-            ("g1", "bc2", "NA"),
-            ("g2", "bc1", "-3"),
-            ("g2", "bc2", "oops"),
-        ],
-        ["gene", "barcode", "count"],
-    )
-    res = scan_matrix(
-        df, ["gene", "barcode"], sparse=True,
-        data_type="double", value_spec=lambda v: v >= 0,
-    )
-    assert res.value_column == "count"
-    cells = {(r["gene"], r["barcode"]): r["value"] for r in res.long.collect()}
-    assert cells == {("g1", "bc1"): 1.5}  # NA skipped; -3 fails spec; oops uncoercible
-    bad = sorted((r["gene"], r["barcode"], r["observed"]) for r in res.invalid_cells.collect())
-    assert bad == [("g2", "bc1", "-3"), ("g2", "bc2", "oops")]
-
-
-def test_scan_matrix_shape_contract(spark):
-    import pytest as _pytest
-    from unify_spark.operators.transforms import scan_matrix
-
-    df = spark.createDataFrame([("g1", "b1", "1")], ["gene", "barcode", "v"])
-    with _pytest.raises(ValueError, match="exactly one value column"):
-        scan_matrix(df.withColumn("v2", df["v"]), ["gene", "barcode"], sparse=True)
-    with _pytest.raises(ValueError, match="no value columns"):
-        scan_matrix(df, ["gene", "barcode", "v"])
-
-
-def test_scan_matrix_error_cap(spark):
-    from unify_spark.operators.transforms import scan_matrix
-
-    rows = [("g%d" % i, "bad") for i in range(50)]
-    df = spark.createDataFrame(rows, ["gene", "x"])
-    res = scan_matrix(df, ["gene"], sparse=True, data_type="double", error_cap=10)
-    assert res.invalid_cells.count() == 10
-
-
-# --- tuple arity/type checks (data.clj:448-487) -----------------------------
-
-
-def test_tuple_assembly_arity_and_types(spark):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-    from unify_spark.operators.transforms import tuple_assembly
-
-    df = spark.createDataFrame(
-        [("chr1", "100", "x"), ("chr2", "oops", "y")], ["chrom", "pos", "tag"]
-    )
-    with _pytest.raises(ValueError, match="arity"):
-        tuple_assembly(df, "coord", ["chrom", "pos"], types=["string"])
-    out = tuple_assembly(df, "coord", ["chrom", "pos"], types=["string", "long"])
-    rows = {r["tag"]: r for r in out.collect()}
-    assert rows["x"]["coord"]["pos"] == 100 and rows["x"]["_tuple_errors"] == []
-    assert rows["y"]["coord"]["pos"] is None
-    assert rows["y"]["_tuple_errors"] == ["pos:oops"]
-
-
-# --- NA row-omit policy (data.clj:600-619) ----------------------------------
-
-
-def test_na_omit_policy(spark):
-    from unify_spark.sources.readers import apply_na_omit_policy
-
-    df = spark.createDataFrame(
-        [("a", "1", "x"), ("NA", "2", "y"), ("c", "NA", "z"), ("d", "4", "NA")],
-        ["c1", "c2", "c3"],
-    )
-    # [*]: any NA anywhere omits the row
-    assert {r["c1"] for r in apply_na_omit_policy(df, ["*"]).collect()} == {"a"}
-    # listed attrs: only NA in c2 omits; other rows survive with NA -> null
-    out = apply_na_omit_policy(df, ["c2"]).collect()
-    assert {r["c1"] for r in out} == {"a", None, "d"}  # 'NA' c1 normalized to null, kept
-    assert sorted(r["c3"] or "" for r in out) == ["", "x", "y"]  # d's c3 null, row kept
-
-
-# --- ref→UID context expansion (data.clj:228-289) ---------------------------
-
-
-def test_resolve_ref_uid_context_expansion(spark):
-    from pyspark.sql import functions as F
-    from unify_spark.schema.model import (
-        AttributeSpec,
-        ContextNode,
-        KindSchema,
-        Metamodel,
-        resolve_ref_uid,
-    )
-
-    mm = Metamodel(
-        kinds={
-            "dataset": KindSchema(kind="dataset", id_attr="name"),
-            "subject": KindSchema(kind="subject", parent="dataset", id_attr="sid",
-                                  id_scope="context"),
-            "sample": KindSchema(kind="sample", parent="subject", id_attr="smid",
-                                 id_scope="context"),
-            "gene": KindSchema(kind="gene", id_attr="hugo", id_scope="global"),
-        }
-    )
-    # config tree: dataset d1 -> subject (ids from rows) -> sample job
-    root = ContextNode("dataset", "d1", children=[
-        ContextNode("subject", "s-ctx", children=[ContextNode("sample")]),
-    ])
-    df = spark.createDataFrame([("smp-1", "HUGO1")], ["sample_ref", "gene_ref"])
-
-    # global-id kind: raw value IS the uid
-    c = resolve_ref_uid(mm, root, [0, 0], "gene", F.col("gene_ref"))
-    assert df.select(c.alias("u")).collect()[0]["u"] == "HUGO1"
-
-    # context kind found by walking up from the sample job: uid gets the
-    # ancestor id prefix (dataset, subject)
-    c = resolve_ref_uid(mm, root, [0, 0], "sample", F.col("sample_ref"))
-    assert df.select(c.alias("u")).collect()[0]["u"] == "d1|:~s-ctx|:~smp-1"
-
-    # direct child of root (< 2 levels of context): raw value
-    c = resolve_ref_uid(mm, root, [0, 0], "subject", F.col("sample_ref"))
-    assert df.select(c.alias("u")).collect()[0]["u"] == "smp-1"
-
-    # unknown kind: ref stack consumed
-    import pytest as _pytest
-    mm.kinds["orphan"] = KindSchema(kind="orphan", parent="subject", id_scope="context")
-    with _pytest.raises(ValueError, match="ref stack"):
-        resolve_ref_uid(mm, ContextNode("dataset", "d1"), [], "orphan", F.lit("x"))

@@ -261,16 +261,6 @@ def _encode_alaw(pcm: np.ndarray) -> bytes:
     return (out & 0xFF).astype(np.uint8).tobytes()
 
 
-def _alaw_expand(raw: np.ndarray) -> np.ndarray:
-    """uint8 A-law byte array (any shape) → int16 PCM (same shape)."""
-    a = raw.astype(np.int32) ^ 0x55
-    t = (a & 0x0F) << 4
-    seg = (a >> 4) & 0x07
-    t = np.where(seg == 0, t + 8, (t + 0x108) << np.maximum(seg - 1, 0))
-    out = np.where(a & 0x80, t, -t)
-    return out.clip(-32768, 32767).astype("<i2")
-
-
 def _decode_alaw(data: bytes) -> np.ndarray:
     return _ALAW_LUT[np.frombuffer(data, dtype=np.uint8)]
 

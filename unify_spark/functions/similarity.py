@@ -298,42 +298,6 @@ def ivf_train_centroids(
     return C
 
 
-def save_ivf_centroids(path: str, centroids) -> str:
-    """Persist a trained IVF coarse quantizer as a parquet sidecar — the
-    same incremental-state shape as the HLL/t-digest profile sidecars:
-    train once, reuse across runs/sessions instead of re-scanning vectors.
-    Driver-side pyarrow write (centroids are n_cells × dim floats — model
-    metadata, not data)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    C = np.asarray(centroids, dtype=np.float64)
-    tbl = pa.table(
-        {
-            "cell": pa.array(range(C.shape[0]), type=pa.int32()),
-            "centroid": pa.array([row.tolist() for row in C], type=pa.list_(pa.float64())),
-        }
-    )
-    import os
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    pq.write_table(tbl, path)
-    return path
-
-
-def load_ivf_centroids(path: str):
-    """Load a persisted IVF quantizer (see save_ivf_centroids); returns the
-    n_cells × dim numpy array ``ivf_ann_topk(centroids=...)`` accepts."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(path)
-    order = np.argsort(tbl.column("cell").to_numpy())
-    rows = tbl.column("centroid").to_pylist()
-    return np.array([rows[i] for i in order], dtype=np.float64)
-
-
 def ivf_assign(
     df: DataFrame,
     centroids,

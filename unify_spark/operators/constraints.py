@@ -349,8 +349,8 @@ class EnumMappingConstraint(Constraint):
     """Value remapping where an unresolved input value is an ERROR, not a
     pass-through — unify's exact semantics
     (src/com/vendekagonlabs/unify/import/engine/parse/data.clj:292-306).
-    The mapping is applied as a broadcast map literal; unresolved values
-    become violation rows instead of exceptions (fail-at-end, SURVEY §7.4).
+    A value outside the mapping's keys becomes a violation row instead of
+    an exception (fail-at-end, SURVEY §7.4).
     """
 
     partition_local = True
@@ -366,11 +366,6 @@ class EnumMappingConstraint(Constraint):
         c = F.col(self.column)
         fail = c.isNotNull() & ~c.isin(list(self.mapping.keys()))
         return [(fail, self.column, c, "mappable value")]
-
-    def apply_mapping(self, df: DataFrame) -> DataFrame:
-        """The transform side: resolved values are rewritten in place."""
-        mapping_expr = F.create_map(*[F.lit(x) for kv in self.mapping.items() for x in kv])
-        return df.withColumn(self.column, mapping_expr[F.col(self.column)])
 
 
 class RegexConstraint(Constraint):

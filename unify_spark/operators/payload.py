@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from unify_spark.audio import pcm
-from unify_spark.operators.base import Constraint, ValidationContext, make_violations
+from unify_spark.operators.base import Constraint, ValidationContext
 
 SNR_STRIDE = 4  # 1-in-4 frame stride for SNR estimation (see _decode_batch)
 

@@ -205,7 +205,10 @@ def exact_group_percentiles(
     groupings this helper targets (for high-cardinality groups the plain
     grouped window is already parallel; use that instead). Interpolation
     reproduces Percentile.getPercentile exactly: (higher − pos)·v_lo +
-    (pos − lower)·v_hi, so results are bit-identical to the builtin.
+    (pos − lower)·v_hi, so results are bit-identical to the builtin with
+    one exception, signed zero: the (group, value) aggregate folds -0.0
+    into 0.0, so a group holding {-0.0, 0.0} yields 0.0 where the builtin
+    returns -0.0 (pinned in tests/test_profile.py).
 
     Returns one row per group with one column per ``percentiles`` key."""
     spark = df.sparkSession

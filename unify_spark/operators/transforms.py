@@ -1,56 +1,14 @@
-"""Prepare-engine per-row transforms (SURVEY §2.2), re-expressed as columnar
-operations. In the reference these compose per record inside
+"""Prepare-engine melt (SURVEY §2.2), re-expressed as a columnar operation.
+In the reference the per-row transforms compose per record inside
 ``record->entity`` (src/com/vendekagonlabs/unify/import/engine/parse/data.clj:628-687);
-here each is a DataFrame→DataFrame function built from Column expressions
+the one carried here is the wide → long-format unpivot, the DataFrame form
+of unify's ``:unify/variable``/``:unify/value`` and of its matrix blobs
 (whole-stage codegen, no Python).
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, functions as F
-
-
-def select_rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Row→entity projection: select config-named source columns under their
-    target attribute names (data.clj:430-446)."""
-    return df.select(*[F.col(src).alias(dst) for src, dst in mapping.items()])
-
-
-def cast_strict(df: DataFrame, types: dict[str, str], flag_col: str = "_cast_errors") -> DataFrame:
-    """Type cast with error capture (data.clj:41-59,73-88): failed casts
-    become nulls PLUS an array of '<col>:<raw>' markers, so bad rows are
-    violation data rather than job-killing exceptions (SURVEY §7.4)."""
-    exprs, markers = [], []
-    for col in df.columns:
-        if col in types:
-            # try_cast: failed parses yield null instead of the ANSI throw;
-            # marker references the ORIGINAL value, so build one select
-            casted = F.col(col).try_cast(types[col])
-            exprs.append(casted.alias(col))
-            markers.append(
-                F.when(
-                    F.col(col).isNotNull() & casted.isNull(),
-                    F.concat_ws(":", F.lit(col), F.col(col).cast("string")),
-                )
-            )
-        else:
-            exprs.append(F.col(col))
-    return df.select(*exprs, F.array_compact(F.array(*markers)).alias(flag_col))
-
-
-def card_many_split(df: DataFrame, column: str, delimiter: str) -> DataFrame:
-    """Cardinality-many cell split (data.clj:556-574): delimiter is treated
-    literally (regex-escaped), empty cells → empty array not [''], matching
-    the reference's handling."""
-    pat = re.escape(delimiter)
-    split = F.split(F.col(column), pat)
-    return df.withColumn(
-        column,
-        F.when(F.col(column).isNull() | (F.col(column) == ""), F.array().cast("array<string>"))
-        .otherwise(split),
-    )
 
 
 def molten(
@@ -69,156 +27,3 @@ def molten(
         variable_name,
         value_name,
     )
-
-
-def constants_injection(df: DataFrame, constants: dict) -> DataFrame:
-    """Config-literal columns merged into every row (data.clj:577-585);
-    Catalyst constant-folds these."""
-    out = df
-    for name, value in constants.items():
-        out = out.withColumn(name, F.lit(value))
-    return out
-
-
-def tuple_assembly(
-    df: DataFrame,
-    target: str,
-    components: list[str],
-    types: list[str] | None = None,
-    flag_col: str = "_tuple_errors",
-) -> DataFrame:
-    """N columns → one struct-typed tuple attribute (data.clj:448-487).
-
-    With ``types`` declared, reference parity is enforced: arity mismatch is
-    a config error raised at plan time (the reference throws
-    'Row did not provide the right number of values to form a tuple',
-    data.clj:462-469), and each component is ``try_cast`` to its declared
-    type with per-row '<col>:<raw>' error markers (resolve-value's per-type
-    coercion, mapped to fail-at-end violation data instead of a throw)."""
-    if types is None:
-        return df.withColumn(target, F.struct(*[F.col(c) for c in components]))
-    if len(types) != len(components):
-        raise ValueError(
-            f"tuple {target!r}: {len(components)} columns {components} do not "
-            f"match declared tuple-types arity {len(types)} {types}"
-        )
-    fields, markers = [], []
-    for col, dt in zip(components, types):
-        casted = F.col(col).try_cast(dt)
-        fields.append(casted.alias(col))
-        markers.append(
-            F.when(
-                F.col(col).isNotNull() & casted.isNull(),
-                F.concat_ws(":", F.lit(col), F.col(col).cast("string")),
-            )
-        )
-    return df.withColumn(target, F.struct(*fields)).withColumn(
-        flag_col, F.array_compact(F.array(*markers))
-    )
-
-
-def reverse_reference(
-    child: DataFrame, parent_key_col: str, fk_name: str
-) -> DataFrame:
-    """`:unify/reverse` (data.clj:412-419): the child row asserts the ref to
-    its parent — relationally that's just naming the FK column on the child."""
-    return child.withColumn(fk_name, F.col(parent_key_col))
-
-
-def melt_matrix_dense(
-    df: DataFrame, index_cols: list[str], value_cols: list[str], value_name: str = "value"
-) -> DataFrame:
-    """Dense matrix file → long format (matrix_file.clj:33-117): one row per
-    (index..., column) cell, NA cells dropped like the reference's NA skip."""
-    long = molten(df, index_cols, value_cols, "col_key", value_name)
-    return long.where(F.col(value_name).isNotNull())
-
-
-class MatrixScanResult:
-    """Distributed restatement of parse-matrix-file's return map
-    (matrix_file.clj:92-105): long-form cells, per-index distinct sets,
-    capped invalid-cell rows, and (sparse) the single value-column name.
-    Every member is a lazy DataFrame — nothing collects on the driver."""
-
-    def __init__(
-        self,
-        long: DataFrame,
-        index_sets: dict[str, DataFrame],
-        invalid_cells: DataFrame,
-        value_column: str | None,
-        target_columns: list[str],
-    ):
-        self.long = long
-        self.index_sets = index_sets
-        self.invalid_cells = invalid_cells
-        self.value_column = value_column
-        self.target_columns = target_columns
-
-
-def scan_matrix(
-    df: DataFrame,
-    index_cols: list[str],
-    sparse: bool = False,
-    data_type: str = "double",
-    value_spec=None,
-    na_tokens: tuple[str, ...] = ("NA",),
-    error_cap: int = 1000,
-) -> MatrixScanResult:
-    """Matrix file scan, dense AND sparse (matrix_file.clj:41-117).
-
-    Shape contract (matrix_file.clj:52-63): a matrix must have more columns
-    than indices; a SPARSE matrix has exactly one extra column carrying the
-    values (each row is one cell), while a dense matrix's non-index columns
-    are the second axis (each row is a vector of cells).
-
-    Per-cell checks (matrix_file.clj:75-116): NA tokens are skipped, values
-    are coerced with ``try_cast(data_type)`` (coercion failure = invalid,
-    mapped to violation rows instead of thrown — SURVEY §7.4 fail-at-end),
-    then the optional ``value_spec`` (Column → boolean Column) runs on the
-    coerced value. Invalid cells are capped at ``error_cap`` like the
-    reference's first-1000 truncation (matrix_file.clj:113-116).
-
-    Scale shape: dense melt is the built-in unpivot (stack — one scan, no
-    shuffle); the invalid-cell cap is a ``limit`` (Spark stops early);
-    index sets are lazy ``distinct`` DataFrames (map-side partial dedup).
-    """
-    non_index = [c for c in df.columns if c not in index_cols]
-    if not non_index:
-        raise ValueError(
-            f"not a valid matrix: columns {df.columns} leave no value columns "
-            f"beyond indices {index_cols}"
-        )
-    if sparse and len(non_index) != 1:
-        raise ValueError(
-            f"sparse matrix must have exactly one value column; got {non_index}"
-        )
-
-    if sparse:
-        value_column = non_index[0]
-        long = df.select(
-            *[F.col(c) for c in index_cols],
-            F.lit(value_column).alias("col_key"),
-            F.col(value_column).cast("string").alias("_raw"),
-        )
-    else:
-        value_column = None
-        long = molten(
-            df.select(*index_cols, *[F.col(c).cast("string") for c in non_index]),
-            index_cols,
-            non_index,
-            "col_key",
-            "_raw",
-        )
-
-    is_na = F.col("_raw").isNull() | F.col("_raw").isin(list(na_tokens))
-    coerced = F.col("_raw").try_cast(data_type)
-    cells = long.withColumn("value", coerced)
-    ok = F.lit(True) if value_spec is None else value_spec(F.col("value"))
-    invalid = (
-        cells.where(~is_na & (coerced.isNull() | ~ok))
-        .select(*index_cols, "col_key", F.col("_raw").alias("observed"))
-        .limit(error_cap)
-    )
-    clean = cells.where(~is_na & coerced.isNotNull() & ok).drop("_raw")
-    index_sets = {c: df.select(c).distinct() for c in index_cols}
-    return MatrixScanResult(clean, index_sets, invalid, value_column, non_index)

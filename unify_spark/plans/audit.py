@@ -10,7 +10,7 @@ the audit table is skipped on re-run, and per-partition verdict rows give the
 partition-grain lineage the north_rule asks for.
 
 Storage: an Iceberg table when an Iceberg catalog is configured on the
-session (MERGE semantics); otherwise an append-only parquet directory with
+session (batch appends); otherwise an append-only parquet directory with
 the same schema — latest status per key wins by (ts) — so tests run without
 any catalog jars.
 """
@@ -142,8 +142,7 @@ class AuditLog:
 
         if self._catalog_table():
             # catalog path: append the same rows to the Iceberg audit table
-            # (sources/iceberg.py) — snapshot-isolated, retraction becomes
-            # DELETE WHERE run_id, and time travel serves the drift baseline.
+            # (sources/iceberg.py), snapshot-isolated.
             # Retry-idempotence: if THIS batch_id is already visible, the
             # prior attempt committed and only the ack was lost — skip.
             # Only a RETRY attempt pays the visibility scan: on the first

@@ -55,8 +55,6 @@ from dataclasses import dataclass, field
 from types import SimpleNamespace
 from typing import Literal, get_args, get_origin
 
-from pyspark.sql import DataFrame, SparkSession
-
 from unify_spark.operators import (
     AnyPresentConstraint,
     AudioPayloadConstraint,
@@ -319,12 +317,6 @@ def load_suite_config(path: str) -> SuiteConfig:
     """Load a YAML (.yaml/.yml) or JSON (.json) suite config file."""
     doc = _read_doc(path)
     return parse_suite_config(doc, base_dir=os.path.dirname(os.path.abspath(path)))
-
-
-def load_tables(spark: SparkSession, cfg: SuiteConfig) -> dict[str, DataFrame]:
-    from unify_spark.sources import read_table
-
-    return {name: read_table(spark, p) for name, p in cfg.tables.items()}
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from unify_spark.operators.base import (
     Constraint,
     ValidationContext,
-    empty_violations,
     row_local_violations,
 )
 from unify_spark.operators.drift import baselined, drift_vs_baseline

@@ -127,53 +127,6 @@ def compile_schema(dsl: dict) -> Metamodel:
     return mm
 
 
-def to_dsl(mm: Metamodel) -> dict:
-    """Reverse emitter: Metamodel → DSL document, the inverse of
-    ``compile_schema`` (parity with infer-schema's DSL reconstruction from a
-    compiled schema, reference
-    src/com/vendekagonlabs/unify/db/schema/compile.clj:298-316).
-
-    Roundtrip contract: ``compile_schema(to_dsl(mm))`` reproduces ``mm``
-    exactly for any metamodel that came out of ``compile_schema`` (the
-    golden roundtrip test pins enums/refs/tuples). Metamodels from data
-    inference may carry extra per-attribute facts the DSL grammar cannot
-    express (min/max bounds, required flags on non-id attributes); those
-    are dropped with the same lossiness the reference's emitter has —
-    the DSL is the declarative subset."""
-    doc: dict = {}
-    for kind, ks in mm.kinds.items():
-        if not ks.id_attr:
-            raise ValueError(f"kind {kind!r} has no id attribute; not DSL-expressible")
-        id_spec = {"attribute": ks.id_attr, "type": None, "scope": ks.id_scope}
-        attrs = []
-        for a in ks.attributes:
-            if a.name == ks.id_attr:
-                id_spec["type"] = a.dtype
-                if a.doc:
-                    id_spec["doc"] = a.doc
-                continue
-            if a.enum_domain:
-                atype: object = {"enum_of": list(a.enum_domain)}
-            elif a.ref_to:
-                atype = {"ref_to": a.ref_to}
-            elif a.tuple_types:
-                atype = {"tuple_of": list(a.tuple_types)}
-            else:
-                atype = a.dtype
-            attrs.append([a.name, atype, a.cardinality, a.doc])
-        if id_spec["type"] is None:
-            raise ValueError(
-                f"kind {kind!r}: id attribute {ks.id_attr!r} missing from attributes"
-            )
-        kdef: dict = {"id": id_spec}
-        if ks.parent:
-            kdef["parent"] = ks.parent
-        if attrs:
-            kdef["attributes"] = attrs
-        doc[kind] = kdef
-    return doc
-
-
 def metaschema(mm: Metamodel) -> dict:
     """{tables, joins} query metaschema (metaschema.clj:34-62):
     tables — one entry per kind keyed by its (namespaced) unique id attr, or

@@ -136,95 +136,3 @@ def composite_id(*component_cols: str | Column) -> Column:
     """Synthetic composite id (data.clj:504-530)."""
     cols = [F.col(c) if isinstance(c, str) else c for c in component_cols]
     return F.concat_ws(COMPOSITE_SEP, *[c.cast("string") for c in cols])
-
-
-def family_tree(mm: "Metamodel", kind: str) -> list[str]:
-    """Ancestor chain root→kind via parent links (metamodel/family-tree-ids,
-    reference src/com/vendekagonlabs/unify/db/metamodel.clj)."""
-    path, cur, seen = [], kind, set()
-    while cur is not None:
-        if cur in seen:
-            raise ValueError(f"parent cycle at kind {cur!r}")
-        seen.add(cur)
-        path.append(cur)
-        cur = mm.kinds[cur].parent if cur in mm.kinds else None
-    return list(reversed(path))
-
-
-@dataclass
-class ContextNode:
-    """One node of the parsed import-config context tree — the structure
-    resolve-ref-uid-in-context walks (data.clj:228-250). ``id_value`` is the
-    literal id the config pins at this node (a string) or a column name in
-    the row being resolved."""
-
-    kind: str
-    id_value: str | Column | None = None
-    children: list["ContextNode"] = field(default_factory=list)
-
-
-def _find_kind(node: ContextNode, kind: str) -> list[ContextNode] | None:
-    """DFS for the first node of ``kind`` in the subtree; returns the
-    node path root→match (collection/all-nested-maps analogue)."""
-    if node.kind == kind:
-        return [node]
-    for ch in node.children:
-        sub = _find_kind(ch, kind)
-        if sub is not None:
-            return [node] + sub
-    return None
-
-
-def resolve_ref_uid(
-    mm: "Metamodel",
-    config_root: ContextNode,
-    job_path: list[int],
-    target_kind: str,
-    value: str | Column,
-) -> Column:
-    """Ref→UID resolution with upward context-tree expansion — the Spark
-    restatement of resolve-ref-uid-in-context (data.clj:228-289).
-
-    Semantics (matching ref-uid's three arms, data.clj:254-271):
-    - target kind has a GLOBAL id, or sits directly under the root
-      (family tree < 2 levels): the raw value IS the UID;
-    - otherwise: starting at the job's context node, expand the search
-      upward one ancestor at a time until a subtree containing
-      ``target_kind`` is found; the UID is that node path's ancestor id
-      values joined by '|:~' with the raw value as the leaf. Exhausting the
-      ancestor stack raises (the reference logs 'Consumed ref stack').
-
-    The tree walk is driver-side over the (tiny) config — per the reference,
-    which memoizes on the config path, not the row — and the result is one
-    Column expression, so resolution stays a zero-shuffle projection."""
-    vcol = F.lit(value) if isinstance(value, str) else value
-    ks = mm.kinds.get(target_kind)
-    if ks is not None and ks.id_scope == "global":
-        return vcol
-    # the reference tests (butlast family-tree) < 2: kinds parented directly
-    # under the root need no context prefix (data.clj:259-266)
-    if len(family_tree(mm, target_kind)) - 1 < 2:
-        return vcol
-
-    # materialize the job node path root→job
-    nodes = [config_root]
-    for i in job_path:
-        nodes.append(nodes[-1].children[i])
-
-    for depth in range(len(nodes) - 1, -1, -1):
-        found = _find_kind(nodes[depth], target_kind)
-        if found is None:
-            continue
-        # ancestors of the matched node: the already-walked prefix above the
-        # search root, plus the path down to (but excluding) the match
-        ancestry = nodes[:depth] + found[:-1]
-        prefix = [
-            (F.lit(n.id_value) if isinstance(n.id_value, str) else n.id_value)
-            for n in ancestry
-            if n.id_value is not None
-        ]
-        return context_uid(*prefix, vcol)
-    raise ValueError(
-        f"consumed ref stack without finding referent kind {target_kind!r} "
-        "while generating UID"
-    )

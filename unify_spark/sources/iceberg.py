@@ -1,21 +1,17 @@
-"""Iceberg table adapter — the catalog-aware path for audit/violation
+"""Iceberg table adapter — the catalog-aware path for audit and metrics
 state, with the parquet-directory shim as the jar-free fallback.
 
-The engine's storage contract (audit appends keyed (run_id, constraint,
-part); violation partition overwrites; run retraction; snapshot reads) maps
-onto Iceberg as: `writeTo(...).append()`, `MERGE INTO` on the key columns,
-`DELETE WHERE run_id = ...`, and `VERSION AS OF` reads. This sandbox ships
+The engine's storage contract (audit and metrics-repository appends keyed
+by run_id; deleting one run's metric rows) maps onto Iceberg as
+`writeTo(...).append()` and `DELETE WHERE run_id = ...`. This sandbox ships
 no Iceberg runtime jars, so the adapter is split exactly at the jar
 boundary:
 
 - **dispatch + SQL generation** are real and unit-tested (a catalog is
-  detected from `spark.sql.catalog.<name>` conf; the emitted MERGE/DELETE
-  statements are asserted verbatim);
+  detected from `spark.sql.catalog.<name>` conf; the emitted DELETE
+  statement is asserted verbatim);
 - **execution** routes through the catalog when one is configured and
-  through the parquet shim otherwise — the shim implements the same
-  contract on directories (append = parquet append; retract = predicate
-  rewrite; snapshot read = audit-table run_id filtering, the jar-free
-  time-travel analogue).
+  through the parquet shim otherwise (append = parquet append).
 
 With `--packages org.apache.iceberg:iceberg-spark-runtime-...` and a
 catalog conf, the catalog path activates without code changes.
@@ -82,13 +78,6 @@ def iceberg_catalogs(
     return result
 
 
-def iceberg_enabled(spark: SparkSession, catalog: str | None = None) -> bool:
-    """True when an Iceberg catalog is configured (optionally a specific
-    one). Conf-level detection only — cheap enough to gate every sink."""
-    cats = iceberg_catalogs(spark)
-    return (catalog in cats) if catalog else bool(cats)
-
-
 def is_table_identifier(path_or_name: str, catalogs: list[str] | None = None) -> bool:
     """The storage dispatch rule: a catalog table identifier is dotted
     (``catalog.db.table``) with no path separators or file suffixes. The
@@ -135,37 +124,15 @@ def routes_to_catalog(spark: SparkSession, target: str) -> bool:
     return is_table_identifier(target, catalogs=iceberg_catalogs(spark))
 
 
-def _q(ident: str) -> str:
-    """Backtick-quote one identifier component (column, view, table part)
-    — user-supplied column/table names must never parse as SQL."""
-    return "`" + ident.replace("`", "``") + "`"
-
-
 def _q_table(table: str) -> str:
-    return ".".join(_q(p) for p in table.split("."))
-
-
-def merge_sql(table: str, keys: list[str], columns: list[str], source: str = "_src") -> str:
-    """The MERGE INTO statement for an idempotent keyed upsert (the
-    ``upsert_dim`` / audit-append contract). Pure string construction so
-    the statement shape is unit-testable without Iceberg jars. Every
-    identifier is backtick-quoted."""
-    on = " AND ".join(f"t.{_q(k)} = s.{_q(k)}" for k in keys)
-    sets = ", ".join(f"t.{_q(c)} = s.{_q(c)}" for c in columns if c not in keys)
-    cols = ", ".join(_q(c) for c in columns)
-    vals = ", ".join(f"s.{_q(c)}" for c in columns)
-    # all-key tables have nothing to UPDATE — an empty SET clause is a
-    # parse error, so degrade to insert-if-absent
-    matched = f"WHEN MATCHED THEN UPDATE SET {sets} " if sets else ""
-    return (
-        f"MERGE INTO {_q_table(table)} t USING {_q(source)} s ON {on} "
-        f"{matched}"
-        f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
-    )
+    """Backtick-quote each part of a table identifier — user-supplied
+    table names must never parse as SQL."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in table.split("."))
 
 
 def delete_run_sql(table: str, run_id: str) -> str:
-    """The retraction statement (sinks.retract_run's catalog form)."""
+    """The one-run delete statement (``MetricsRepository.delete_run``'s
+    catalog form)."""
     safe = run_id.replace("'", "''")
     return f"DELETE FROM {_q_table(table)} WHERE run_id = '{safe}'"
 
@@ -183,82 +150,3 @@ def append_rows(spark: SparkSession, df: DataFrame, target: str) -> None:
             df.writeTo(target).create()
     else:
         df.write.mode("append").parquet(target)
-
-
-def upsert_rows(
-    spark: SparkSession, df: DataFrame, target: str, keys: list[str]
-) -> None:
-    """Keyed idempotent upsert: MERGE INTO on the catalog path, else the
-    parquet read-union-dedup shim (`sinks.upsert_dim`)."""
-    if routes_to_catalog(spark, target):
-        import uuid
-
-        # uuid-suffixed source view, dropped after the merge: a fixed
-        # '_src' would clobber any user view of that name and leak
-        view = f"_unify_merge_src_{uuid.uuid4().hex}"
-        df.createOrReplaceTempView(view)
-        try:
-            spark.sql(merge_sql(target, keys, df.columns, source=view))
-        finally:
-            spark.catalog.dropTempView(view)
-    else:
-        from unify_spark.sources.sinks import upsert_dim
-
-        upsert_dim(spark, df, target, keys)
-
-
-def retract_run_rows(spark: SparkSession, target: str, run_id: str) -> int:
-    """Delete a run's rows: `DELETE WHERE` on the catalog path, else the
-    filesystem predicate-rewrite shim (`sinks.retract_run`)."""
-    if routes_to_catalog(spark, target):
-        spark.sql(delete_run_sql(target, run_id))
-        return -1  # Iceberg DELETE doesn't report a count without a snapshot diff
-    from unify_spark.sources.sinks import retract_run
-
-    return retract_run(spark, target, run_id)
-
-
-def read_snapshot(
-    spark: SparkSession,
-    table: str,
-    version: int | None = None,
-    as_of: str | None = None,
-    as_of_run: str | None = None,
-    audit_path: str | None = None,
-) -> DataFrame:
-    """Time-travel read. Catalog path: real Iceberg `VERSION AS OF` /
-    `TIMESTAMP AS OF`. Parquet shim: ``as_of_run`` + ``audit_path`` give
-    the jar-free analogue — the audit table records every run's rows with
-    a commit timestamp, so "the table as of run A" is the rows of runs
-    whose LAST audit commit is at or before run A's last commit, filtered
-    by the table's own ``run_id`` column. Runs still in flight when A
-    finished (later audit rows) are excluded, matching snapshot-isolation
-    reads. Version/timestamp reads on the shim stay a clear error (a
-    parquet directory keeps no snapshot log)."""
-    if routes_to_catalog(spark, table):
-        if version is not None:
-            return spark.read.option("versionAsOf", version).table(table)
-        if as_of is not None:
-            return spark.read.option("timestampAsOf", as_of).table(table)
-        return spark.table(table)
-    if as_of_run is None or audit_path is None:
-        raise ValueError(
-            f"snapshot read needs an Iceberg catalog table, got {table!r} "
-            "(parquet directories keep no snapshot history; pass as_of_run= "
-            "and audit_path= for the audit-filtered run-grain analogue)"
-        )
-    from pyspark.sql import functions as F
-
-    from unify_spark.plans.audit import AuditLog
-
-    last_ts: dict[str, float] = {}
-    for rid, ts in AuditLog(spark, audit_path)._read_columns(["run_id", "ts"]):
-        if rid is not None and ts is not None:
-            last_ts[rid] = max(last_ts.get(rid, float("-inf")), ts)
-    if as_of_run not in last_ts:
-        raise ValueError(
-            f"run {as_of_run!r} not found in audit table {audit_path!r}"
-        )
-    cutoff = last_ts[as_of_run]
-    committed = [rid for rid, ts in last_ts.items() if ts <= cutoff]
-    return spark.read.parquet(table).where(F.col("run_id").isin(committed))

@@ -92,24 +92,3 @@ def normalize_na(
             c, F.when(F.col(c).isin(list(na_tokens)), None).otherwise(F.col(c))
         )
     return out
-
-
-def apply_na_omit_policy(
-    df: DataFrame,
-    omit_if_na: list[str],
-    na_tokens: list[str] = ("", "NA", "N/A", "null", "NULL"),
-) -> DataFrame:
-    """Row-omit half of unify's handle-na (data.clj:600-619): after NA
-    normalization, a row is OMITTED entirely when
-
-    - ``omit_if_na == ["*"]`` and ANY column is NA/null, or
-    - any of the LISTED columns is NA/null.
-
-    Returns the surviving rows with NA tokens normalized to null. One scan,
-    one fused filter — the omit predicate folds into the parquet scan."""
-    out = normalize_na(df, na_tokens)
-    targets = out.columns if omit_if_na == ["*"] else list(omit_if_na)
-    keep = F.lit(True)
-    for c in targets:
-        keep = keep & F.col(c).isNotNull()
-    return out.where(keep)
