@@ -21,10 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from unify_spark.functions import dedup, similarity, text
 from unify_spark.functions.sampling import hash_threshold as _thr
 from unify_spark.functions.text import PII_PATTERNS
+from unify_spark.sources.readers import read_parquet
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -549,6 +550,7 @@ def q_uid_synthesis(spark: SparkSession, sf: str) -> DataFrame:
         "c_custkey",
         context_uid(F.col("c_name"), F.col("c_nationkey").cast("string")).alias("uid"),
         F.md5(F.concat_ws("|:~", F.col("c_name"), F.col("c_nationkey").cast("string"))).alias("uid_md5"),
+        hashed_uid(F.col("c_name"), F.col("c_nationkey").cast("string")).alias("huid"),
     )
 
 
@@ -1188,7 +1190,8 @@ def oracle_sql() -> dict[str, str]:
         "q_uid_synthesis": """
             SELECT c_custkey,
                    concat_ws('|:~', c_name, CAST(c_nationkey AS VARCHAR)) AS uid,
-                   md5(concat_ws('|:~', c_name, CAST(c_nationkey AS VARCHAR))) AS uid_md5
+                   md5(concat_ws('|:~', c_name, CAST(c_nationkey AS VARCHAR))) AS uid_md5,
+                   concat_ws('|:~', c_name, md5(CAST(c_nationkey AS VARCHAR))) AS huid
             FROM customer
         """,
         "q_unpivot_lineitem": """

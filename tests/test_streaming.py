@@ -118,78 +118,6 @@ def test_foreach_batch_collects_violating_keys(spark, tmp_path):
     assert {(r["key"], r["part"]) for r in keys.collect()} == {("c2", "p1"), ("c3", "p2")}
 
 
-def test_dedup_stream_within_watermark(spark, tmp_path):
-    from unify_spark.streaming.stateful import dedup_stream
-
-    src = str(tmp_path / "dsrc")
-    rows = [
-        ("k1", "2025-01-01 00:00:00"),
-        ("k1", "2025-01-01 00:00:30"),  # dup within window
-        ("k2", "2025-01-01 00:01:00"),
-    ]
-    spark.createDataFrame(rows, "id string, ts string").withColumn(
-        "ts", F.to_timestamp("ts")
-    ).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("id string, ts timestamp").parquet(src)
-    out = dedup_stream(stream, ["id"], "ts", "10 minutes")
-    sink = str(tmp_path / "dsink")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(r["id"] for r in spark.read.parquet(sink).collect())
-    assert got == ["k1", "k2"]
-
-
-def test_running_violation_counts_state(spark, tmp_path):
-    from unify_spark.streaming.stateful import running_violation_counts
-
-    src = str(tmp_path / "ssrc")
-    # batch 1
-    spark.createDataFrame(
-        [("p1", False), ("p1", True), ("p2", False)], "part_date string, bad boolean"
-    ).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("part_date string, bad boolean").parquet(src)
-    out = running_violation_counts(stream, "bad")
-    sink_rows = []
-
-    def collect_batch(df, _bid):
-        sink_rows.extend(r.asDict() for r in df.collect())
-
-    q = (
-        out.writeStream.foreachBatch(collect_batch)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "sckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # batch 2: state must carry over across restarts via checkpoint
-    spark.createDataFrame(
-        [("p1", True)], "part_date string, bad boolean"
-    ).write.mode("append").parquet(src)
-    q2 = (
-        running_violation_counts(
-            spark.readStream.schema("part_date string, bad boolean").parquet(src), "bad"
-        )
-        .writeStream.foreachBatch(collect_batch)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "sckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    latest = {}
-    for r in sink_rows:
-        latest[r["part"]] = (r["n_rows"], r["n_violations"])
-    assert latest["p1"] == (3, 2)  # running totals across both batches
-    assert latest["p2"] == (1, 0)
-
-
 def test_row_level_stream_covers_new_families(spark, tmp_path):
     """regex/length/any-present/conditional validate on a stream via the
     same row_predicates the batch bundle fuses."""

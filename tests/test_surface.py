@@ -9,7 +9,8 @@ itself live. Module-level code and every file outside ``unify_spark/`` are
 live; a definition's body is live once its own name is. So a helper whose
 only caller is another dead helper is reported too. Names are matched by
 identifier (an attribute, an import, or an identifier inside a string such
-as a ``"module:function"`` dispatch entry), which errs towards keeping.
+as a ``"module:function"`` dispatch entry), which errs towards keeping;
+a docstring names nothing.
 Pure ``ast``; no Spark.
 """
 
@@ -24,12 +25,22 @@ _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 # Dead on purpose, each with the reason it stays.
 KEEP = {
     "quantile_from_rows": "ROADMAP D8 replaces the t-digest quantile reader with moment sketches",
+    "with_quality": "the Column form that ROADMAP D5 pins with_quality_frame against",
+    "hll_estimate": "the reader of the HLL sidecar that runner.profile persists",
 }
 
 
 def _names(node: ast.AST) -> set[str]:
     out: set[str] = set()
+    # a string statement (a docstring) documents a name; it does not use it
+    docs = {
+        id(n.value)
+        for n in ast.walk(node)
+        if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant) and isinstance(n.value.value, str)
+    }
     for n in ast.walk(node):
+        if id(n) in docs:
+            continue
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):

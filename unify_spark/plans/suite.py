@@ -27,18 +27,18 @@ from unify_spark.operators import (
     UniquenessConstraint,
 )
 from unify_spark.fixtures.generate import DUR_MAX_MS, SR_CHOICES
+from unify_spark.sources.readers import read_parquet
 
 
 def load_audio_tables(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
     return {
-        "clips": spark.read.parquet(os.path.join(fixture_dir, "clips")),
-        "transcript_map": spark.read.parquet(
-            os.path.join(fixture_dir, "transcript_map.parquet")
-        ),
-        "codec_domain": spark.read.parquet(os.path.join(fixture_dir, "codec_domain.parquet")),
-        "reference_decode": spark.read.parquet(
-            os.path.join(fixture_dir, "reference_decode.parquet")
-        ),
+        name: read_parquet(spark, os.path.join(fixture_dir, rel))
+        for name, rel in (
+            ("clips", "clips"),
+            ("transcript_map", "transcript_map.parquet"),
+            ("codec_domain", "codec_domain.parquet"),
+            ("reference_decode", "reference_decode.parquet"),
+        )
     }
 
 
