@@ -4,6 +4,8 @@ import pytest
 
 from unify_spark.operators.base import ValidationContext
 from unify_spark.plans import ValidationRunner, audio_suite
+from unify_spark.plans.audit import AuditLog
+from unify_spark.plans.history import MetricsRepository
 
 
 def test_fused_equals_staged(spark, audio_tables, manifest, tmp_path):
@@ -131,54 +133,67 @@ def test_unknown_dependency_raises_before_any_job(spark, tmp_path, mode):
         getattr(runner, mode)({"t": df}, [c])
 
 
-def test_audit_append_retries_transient_failures(spark, tmp_path, monkeypatch):
-    from unify_spark.plans.audit import AuditLog
+# Both run-keyed tables, each appending one row through its own signature.
+_TABLES = {
+    "audit": (
+        AuditLog,
+        lambda t: t.append(
+            [{"run_id": "r", "constraint": "c", "part": None, "status": "done",
+              "violation_count": 0}],
+            backoff_s=0.01,
+        ),
+    ),
+    "metrics": (
+        MetricsRepository,
+        lambda t: t.append([("clips", "*", "dur_ms", "max", "1.0")], "r", backoff_s=0.01),
+    ),
+}
 
-    audit = AuditLog(spark, str(tmp_path / "audit"))
+
+@pytest.mark.parametrize("kind", sorted(_TABLES))
+def test_audit_append_retries_transient_failures(spark, tmp_path, monkeypatch, kind):
+    cls, append_one = _TABLES[kind]
+    table = cls(spark, str(tmp_path / kind))
     calls = {"n": 0}
-    real = AuditLog._append_once
+    real = cls._write
 
-    def flaky(self, rows, batch, is_retry=False):
+    def flaky(self, tbl, batch, is_retry=False):
         calls["n"] += 1
         if calls["n"] < 3:
             raise OSError("transient store hiccup")
-        return real(self, rows, batch, is_retry)
+        return real(self, tbl, batch, is_retry)
 
-    monkeypatch.setattr(AuditLog, "_append_once", flaky)
-    audit.append(
-        [{"run_id": "r", "constraint": "c", "part": None, "status": "done",
-          "violation_count": 0}],
-        backoff_s=0.01,
-    )
+    monkeypatch.setattr(cls, "_write", flaky)
+    append_one(table)
     assert calls["n"] == 3
-    assert audit.completed_constraints("r") == {"c"}
+    rows = table.read().collect()
+    assert [r["run_id"] for r in rows] == ["r"]
+    assert len({r["batch_id"] for r in rows}) == 1
+    if kind == "audit":
+        assert table.completed_constraints("r") == {"c"}
 
 
-def test_audit_append_idempotent_under_ambiguous_failure(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("kind", sorted(_TABLES))
+def test_audit_append_idempotent_under_ambiguous_failure(spark, tmp_path, monkeypatch, kind):
     """An append whose write COMMITTED but whose ack was lost must not
     double lineage on retry: the batch_id is minted once per append(), so
     the retry rewrites the same batch file instead of adding a second."""
-    from unify_spark.plans.audit import AuditLog
-
-    audit = AuditLog(spark, str(tmp_path / "audit"))
+    cls, append_one = _TABLES[kind]
+    table = cls(spark, str(tmp_path / kind))
     calls = {"n": 0}
-    real = AuditLog._append_once
+    real = cls._write
 
-    def committed_but_unacked(self, rows, batch, is_retry=False):
+    def committed_but_unacked(self, tbl, batch, is_retry=False):
         calls["n"] += 1
-        real(self, rows, batch, is_retry)  # the write lands...
+        real(self, tbl, batch, is_retry)  # the write lands...
         if calls["n"] == 1:
             raise OSError("ack lost")      # ...but the caller never hears
         return None
 
-    monkeypatch.setattr(AuditLog, "_append_once", committed_but_unacked)
-    audit.append(
-        [{"run_id": "r", "constraint": "c", "part": "p0", "status": "pass",
-          "violation_count": 0}],
-        backoff_s=0.01,
-    )
+    monkeypatch.setattr(cls, "_write", committed_but_unacked)
+    append_one(table)
     assert calls["n"] == 2
-    rows = audit.read().collect()
+    rows = table.read().collect()
     assert len(rows) == 1                     # no duplicate lineage row
     assert len({r["batch_id"] for r in rows}) == 1
 
@@ -507,8 +522,6 @@ def test_depends_on_gating(spark, audio_tables, tmp_path):
     assert "required:clips.transcript" not in res.violation_counts
     # gated stages are not 'done': a resumed run retries them
     import os
-
-    from unify_spark.plans.audit import AuditLog
 
     audit = AuditLog(spark, os.path.join(str(tmp_path / "g1"), "audit"))
     assert "required:clips.transcript" not in audit.completed_constraints("g1")

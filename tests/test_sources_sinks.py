@@ -2,6 +2,7 @@
 retraction and the Iceberg adapter's dispatch."""
 
 import os
+import time
 
 import pytest
 
@@ -63,6 +64,97 @@ def test_retract_run(spark, audio_tables, tmp_path):
     # must not drive split_valid
     assert not os.path.exists(os.path.join(out, "violations"))
     assert not os.path.exists(os.path.join(out, "violating_keys"))
+
+
+def _audit_files(audit_dir):
+    """{file name: bytes} of an audit directory."""
+    out = {}
+    for f in sorted(os.listdir(audit_dir)):
+        with open(os.path.join(audit_dir, f), "rb") as fh:
+            out[f] = fh.read()
+    return out
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"retract-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_retract_is_per_run(spark, tmp_path):
+    """Retracting the middle of three runs in one out dir removes only its
+    audit files: the other runs' files keep their names and bytes, they
+    still resume as done, and no Spark job starts."""
+    from unify_spark.operators.base import ValidationContext
+    from unify_spark.operators.constraints import RangeConstraint
+    from unify_spark.plans import ValidationRunner
+    from unify_spark.plans.audit import AuditLog
+
+    df = spark.createDataFrame(
+        [(i, f"p{i % 3}") for i in range(30)], "x long, part_date string"
+    )
+    suite = [RangeConstraint("t", "x", min_value=0, max_value=20)]
+    out = str(tmp_path / "out")
+    audit_dir = os.path.join(out, "audit")
+    files = {}
+    for run in ("A", "B", "C"):
+        before = set(os.listdir(audit_dir)) if os.path.exists(audit_dir) else set()
+        ValidationRunner(spark, out, ValidationContext(run_id=run)).run(
+            {"t": df}, suite, resume=False
+        )
+        files[run] = set(os.listdir(audit_dir)) - before
+    audit = AuditLog(spark, audit_dir)
+    done = {r: audit.completed_constraints(r) for r in ("A", "C")}
+    assert done["A"] == done["C"] == {suite[0].name}
+    n_b = audit.read().where("run_id = 'B'").count()
+    snapshot = _audit_files(audit_dir)
+
+    removed, jobs = _jobs_started(spark, lambda: retract_run(spark, out, "B"))
+    assert removed == n_b > 0
+    assert jobs == 0
+    assert _audit_files(audit_dir) == {
+        f: b for f, b in snapshot.items() if f in files["A"] | files["C"]
+    }
+    assert audit.completed_constraints("B") == set()
+    assert {r: audit.completed_constraints(r) for r in ("A", "C")} == done
+
+
+def test_retract_rewrites_legacy_mixed_audit_file(spark, tmp_path):
+    """An audit directory as an earlier retract left it: one Spark-written
+    file holding runs A and C. Retracting A rewrites that file without A's
+    rows, keeps every C row, and leaves no temp file or stale checksum."""
+    from unify_spark.plans.audit import AuditLog
+
+    staged = AuditLog(spark, str(tmp_path / "staged"))
+    for run, n in (("A", 3), ("C", 2)):
+        staged.append(
+            [{"run_id": run, "constraint": "c", "part": f"p{i}", "status": "pass",
+              "violation_count": 0} for i in range(n)]
+        )
+        staged.append([{"run_id": run, "constraint": "c", "status": "done"}])
+    out = str(tmp_path / "out")
+    audit_dir = os.path.join(out, "audit")
+    staged.read().coalesce(1).write.mode("overwrite").parquet(audit_dir)
+    audit = AuditLog(spark, audit_dir)
+    cols = ["run_id", "constraint", "part", "status", "ts", "batch_id"]
+    c_rows = sorted(audit.rows(cols, "C"), key=str)
+
+    assert retract_run(spark, out, "A") == 4
+    assert sorted(audit.rows(cols), key=str) == c_rows
+    assert audit.completed_constraints("C") == {"c"}
+    assert audit.read().count() == 3  # Spark still reads the rewritten file
+    leftovers = [
+        f for f in os.listdir(audit_dir)
+        if f.startswith((".", "_")) and "SUCCESS" not in f
+    ]
+    assert leftovers == []
 
 
 def test_spark_submit_pyfiles_deployment(tmp_path):

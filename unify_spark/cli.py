@@ -285,23 +285,14 @@ def cmd_infer_metaschema(args) -> int:
 
 def cmd_profile(args) -> int:
     from unify_spark.operators import profile_table
+    from unify_spark.plans.history import write_profile_stats
     from unify_spark.sources import read_table
 
     spark = get_spark("unify-profile")
-    repo = None
-    if args.metrics_repo:
-        from unify_spark.plans.history import MetricsRepository
-
-        repo = MetricsRepository(spark, args.metrics_repo)
     for name, path in _parse_tables(args.tables).items():
         df = read_table(spark, path)
         stats = profile_table(df, name, part_col=args.part_col if args.part_col in df.columns else None)
-        if repo is not None:
-            stats = stats.persist()
-            repo.append(stats, args.run_id)
-        stats.coalesce(1).write.mode("append").parquet(args.out)
-        if repo is not None:
-            stats.unpersist()
+        write_profile_stats(stats, args.out, args.metrics_repo, args.run_id)
     print(f"profiles written to {args.out}")
     return 0
 
@@ -420,11 +411,9 @@ def cmd_metrics_prune(args) -> int:
     spark = get_spark("unify-metrics-prune")
     repo = MetricsRepository(spark, args.repo)
     if args.run_id:
-        known = repo.runs()
-        if args.run_id not in known:
+        if not repo.delete_run(args.run_id):
             print(f"metrics-prune: unknown run_id {args.run_id!r}", file=sys.stderr)
             return 2
-        repo.delete_run(args.run_id)
         dropped = [args.run_id]
     else:
         dropped = repo.prune(args.keep)
@@ -538,7 +527,9 @@ def cmd_list_runs(args) -> int:
 
 
 def cmd_retract(args) -> int:
-    """retract analogue (reference import/retract.clj:84-153): undo a run."""
+    """retract analogue (reference import/retract.clj:84-153): undo a run.
+    Deletes that run's audit rows only, but every run's violation evidence
+    until the evidence is keyed by run (ROADMAP D10)."""
     from unify_spark.sources.sinks import retract_run
 
     spark = get_spark("unify-retract")

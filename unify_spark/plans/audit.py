@@ -9,21 +9,19 @@ resumability is the CONSTRAINT STAGE: a completed (run_id, constraint) key in
 the audit table is skipped on re-run, and per-partition verdict rows give the
 partition-grain lineage the north_rule asks for.
 
-Storage: an Iceberg table when an Iceberg catalog is configured on the
-session (batch appends); otherwise an append-only parquet directory with
-the same schema — latest status per key wins by (ts) — so tests run without
-any catalog jars.
+Storage: a :class:`~unify_spark.plans.runtable.RunTable`. The audit lives
+under ``<out>/audit``, a path, so it always takes the parquet-directory
+route: one pyarrow-written file per append, latest status per key wins by
+``ts``. Resume reads it on the driver and starts no Spark job.
 """
 
 from __future__ import annotations
 
-import os
-import time
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from unify_spark.plans.runtable import RunTable
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -40,167 +38,25 @@ AUDIT_SCHEMA = T.StructType(
 )
 
 
-class AuditLog:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _catalog_table(self) -> bool:
-        """True when the audit target is an Iceberg catalog identifier AND a
-        catalog is configured — reads and writes must agree on the route
-        (an append to the catalog that resume later reads from the
-        filesystem would silently forget every completed stage)."""
-        from unify_spark.sources import iceberg as ice
-
-        return ice.routes_to_catalog(self.spark, self.path)
-
-    def _exists(self) -> bool:
-        if self._catalog_table():
-            return self.spark.catalog.tableExists(self.path)
-        return os.path.exists(self.path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
-        )
-
-    def read(self) -> DataFrame:
-        if not self._exists():
-            return self.spark.createDataFrame([], AUDIT_SCHEMA)
-        if self._catalog_table():
-            return self.spark.table(self.path)
-        return self.spark.read.schema(AUDIT_SCHEMA).parquet(self.path)
-
-    def append(self, rows: list[dict], max_retries: int = 5, backoff_s: float = 0.2) -> None:
-        """Driver-side append via pyarrow: the audit table is metadata-sized
-        (rows ~ constraints × partitions), so writing it through a Spark job
-        would cost more scheduling than data. The file layout stays a plain
-        parquet directory Spark reads back for verdicts/resume. With an
-        Iceberg catalog this becomes a batch-keyed idempotent append on
-        the audit table (see the retry note below).
-
-        App-level retry with scaled backoff mirrors the reference's transact
-        retry policy (db/transact.clj:128-136: bounded retries, scaled
-        backoff) — transient filesystem/object-store failures must not lose
-        lineage; the bound is small because each append is a tiny local
-        write, not a distributed transaction. Retryable-vs-fatal
-        classification is the shared taxonomy in plans/retry.py.
-
-        Idempotent under retry: the batch_id is minted ONCE per append(),
-        so a retry after an ambiguous failure rewrites the SAME parquet
-        file (filesystem path) or is skipped entirely when the batch_id is
-        already visible in the table (catalog path) — a commit that
-        succeeded but whose ack was lost cannot double-append lineage."""
-        from unify_spark.plans.retry import with_retries
-
-        if not rows:
-            return
-        batch = uuid.uuid4().hex
-        attempts = [0]
-
-        def once():
-            attempts[0] += 1
-            return self._append_once(rows, batch, is_retry=attempts[0] > 1)
-
-        return with_retries(
-            once,
-            max_retries=max_retries,
-            base_backoff_s=backoff_s,
-        )
-
-    def _append_once(
-        self, rows: list[dict], batch: str, is_retry: bool = False
-    ) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        now = time.time()
-        tbl = pa.table(
-            {
-                "run_id": [r["run_id"] for r in rows],
-                "constraint": [r["constraint"] for r in rows],
-                "part": [r.get("part") for r in rows],
-                "status": [r["status"] for r in rows],
-                "violation_count": [r.get("violation_count") for r in rows],
-                "rows_checked": [r.get("rows_checked") for r in rows],
-                "wall_sec": [r.get("wall_sec") for r in rows],
-                "ts": [now] * len(rows),
-                "batch_id": [batch] * len(rows),
-            },
-            schema=pa.schema(
-                [
-                    ("run_id", pa.string()),
-                    ("constraint", pa.string()),
-                    ("part", pa.string()),
-                    ("status", pa.string()),
-                    ("violation_count", pa.int64()),
-                    ("rows_checked", pa.int64()),
-                    ("wall_sec", pa.float64()),
-                    ("ts", pa.float64()),
-                    ("batch_id", pa.string()),
-                ]
-            ),
-        )
-        from unify_spark.sources import iceberg as ice
-
-        if self._catalog_table():
-            # catalog path: append the same rows to the Iceberg audit table
-            # (sources/iceberg.py), snapshot-isolated.
-            # Retry-idempotence: if THIS batch_id is already visible, the
-            # prior attempt committed and only the ack was lost — skip.
-            # Only a RETRY attempt pays the visibility scan: on the first
-            # attempt the freshly minted uuid cannot be present, and this
-            # check would otherwise add a Spark job to every append.
-            if is_retry and self.spark.catalog.tableExists(self.path):
-                already = (
-                    self.spark.table(self.path)
-                    .where(F.col("batch_id") == batch)
-                    .limit(1)
-                    .count()
-                )
-                if already:
-                    return
-            ice.append_rows(
-                self.spark, self.spark.createDataFrame(tbl.to_pylist(), AUDIT_SCHEMA), self.path
-            )
-            return
-        os.makedirs(self.path, exist_ok=True)
-        pq.write_table(tbl, os.path.join(self.path, f"audit-{batch}.parquet"))
-
-    def _read_columns(self, columns: list[str]) -> list[tuple]:
-        """Column-pruned driver-side read of the whole audit table: pyarrow
-        over the parquet directory (no Spark job — audit is metadata-sized),
-        or a Spark read when the audit lives in an Iceberg catalog table."""
-        if self._catalog_table():
-            return [tuple(r) for r in self.spark.table(self.path).select(*columns).collect()]
-        import pyarrow.dataset as ds
-
-        tbl = ds.dataset(self.path, format="parquet").to_table(columns=columns)
-        return list(zip(*(tbl.column(c).to_pylist() for c in columns)))
+class AuditLog(RunTable):
+    SCHEMA = AUDIT_SCHEMA
+    FILE_PREFIX = "audit"
 
     def completed_constraints(self, run_id: str) -> set[str]:
-        """Stage keys already finished for this run (the resume filter) —
-        read driver-side (audit is tiny; no Spark job needed)."""
-        if not self._exists():
-            return set()
-        out = set()
-        for rid, c, s in self._read_columns(["run_id", "constraint", "status"]):
-            if rid == run_id and s == "done":
-                out.add(c)
-        return out
+        """Stage keys already finished for this run (the resume filter)."""
+        return {c for c, s in self.rows(["constraint", "status"], run_id) if s == "done"}
 
     def stage_rows_checked(self, run_id: str) -> dict[str, int]:
         """rows_checked recorded on each completed stage's 'done' marker —
         resumed-run hydration needs it so RATE tolerances
         (max_violation_rate) and dependency gating keep the denominator
         they had in the original attempt instead of degrading to the
-        absolute tolerance (rate × 0). Driver-side read (audit is tiny)."""
-        if not self._exists():
-            return {}
-        out: dict[str, int] = {}
-        for rid, c, s, n in self._read_columns(
-            ["run_id", "constraint", "status", "rows_checked"]
-        ):
-            if rid == run_id and s == "done" and n is not None:
-                out[c] = int(n)
-        return out
+        absolute tolerance (rate × 0)."""
+        return {
+            c: int(n)
+            for c, s, n in self.rows(["constraint", "status", "rows_checked"], run_id)
+            if s == "done" and n is not None
+        }
 
     def part_results(self, run_id: str) -> dict[str, dict[str | None, tuple[str, int]]]:
         """Latest per-(constraint, partition) pass/fail rows for a run:
@@ -208,15 +64,11 @@ class AuditLog:
         per-partition lineage used for (a) hydrating resumed-run reports and
         (b) partition-grain resume of partition-local constraints — the
         committed-set filter of import_coordination.clj:60-84 at partition
-        grain. Driver-side read (audit is metadata-sized)."""
-        if not self._exists():
-            return {}
-        rows = self._read_columns(
-            ["run_id", "constraint", "part", "status", "violation_count", "ts"]
-        )
+        grain."""
+        rows = self.rows(["constraint", "part", "status", "violation_count", "ts"], run_id)
         best: dict[tuple[str, str | None], tuple[str, int, float]] = {}
-        for rid, c, p, s, n, ts in rows:
-            if rid != run_id or s not in ("pass", "fail"):
+        for c, p, s, n, ts in rows:
+            if s not in ("pass", "fail"):
                 continue
             k = (c, p)
             if k not in best or ts > best[k][2]:

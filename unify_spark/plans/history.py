@@ -10,10 +10,10 @@ every ``validate --profile`` / ``profile`` run already persists.
 Two storage layouts feed the same envelope:
 
 - ``history_anomalies(run_dirs)`` — N separate run out-dirs, one
-  column-pruned parquet scan each (zero setup; fine for a handful of runs).
+  column-pruned driver read each (zero setup; fine for a handful of runs).
 - ``MetricsRepository`` — ONE append-mode metrics table spanning runs
-  (parquet directory or Iceberg catalog table, the same dual route as the
-  audit table), appended by ``validate --profile --metrics-repo`` /
+  (a :class:`~unify_spark.plans.runtable.RunTable`: parquet directory or
+  Iceberg catalog table), appended by ``validate --profile --metrics-repo`` /
   ``profile --metrics-repo`` and scored by ``repo_anomalies`` with a
   single scan. At one row per (run, table, part, column, stat) the table
   is metadata-scale even at 10^12 data rows, and an ops scheduler never
@@ -28,8 +28,7 @@ common case for row counts and null rates on a healthy pipeline), the
 check degrades to an exact-change test with a relative tolerance.
 
 Everything is driver-side: profile rows are metadata-scale
-(tables × columns × stats), read with one column-pruned parquet scan per
-run dir.
+(tables × columns × stats), read with pyarrow and no Spark job.
 """
 
 from __future__ import annotations
@@ -37,37 +36,38 @@ from __future__ import annotations
 import os
 from statistics import median
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from unify_spark.plans.runtable import RunTable, read_parquet_rows
 
 DEFAULT_STATS = ("rows", "null_rate", "approx_distinct", "min", "max")
+STAT_COLUMNS = ["table", "part", "column", "stat", "value"]
 
 
-def _load_global_stats(
-    spark: SparkSession, out_dir: str, stats: tuple[str, ...]
-) -> dict[tuple[str, str, str], float]:
-    """{(table, column, stat): value} from one run's profile sidecar,
-    global rows only (part='*')."""
+def _global_scalars(rows, stats: tuple[str, ...]) -> dict[tuple[str, str, str], float]:
+    """{(table, column, stat): value} from (table, part, column, stat,
+    value) rows: global rows only (part='*') whose value parses as a float."""
+    out: dict[tuple[str, str, str], float] = {}
+    for table, part, column, stat, value in rows:
+        if part != "*" or stat not in stats or value is None:
+            continue
+        try:
+            out[(table, column, stat)] = float(value)
+        except ValueError:
+            continue  # sketch arrays and other non-scalar stats
+    return out
+
+
+def _load_global_stats(out_dir: str, stats: tuple[str, ...]) -> dict[tuple[str, str, str], float]:
+    """One run's global scalar stats from its profile sidecar."""
     path = os.path.join(out_dir, "profile")
     if not os.path.exists(path):
         raise FileNotFoundError(
             f"no profile sidecar under {out_dir} — run `validate --profile` "
             "(or the profile command) so the run records metrics"
         )
-    rows = (
-        spark.read.parquet(path)
-        .where("part = '*'")
-        .select("table", "column", "stat", "value")
-        .collect()
-    )
-    out: dict[tuple[str, str, str], float] = {}
-    for r in rows:
-        if r["stat"] not in stats or r["value"] is None:
-            continue
-        try:
-            out[(r["table"], r["column"], r["stat"])] = float(r["value"])
-        except ValueError:
-            continue  # sketch arrays and other non-scalar stats
-    return out
+    return _global_scalars(read_parquet_rows(path, STAT_COLUMNS), stats)
 
 
 def history_anomalies(
@@ -84,11 +84,12 @@ def history_anomalies(
     and the robust z-score. Metrics with fewer than ``min_history`` prior
     observations are skipped (no basis), as are metrics absent from the
     current run (a disappeared column is schema drift — `schema-diff`'s
-    job, not a numeric envelope's)."""
+    job, not a numeric envelope's). The sidecars are read on the driver;
+    ``spark`` starts no job."""
     if len(run_dirs) < 2:
         raise ValueError("need at least one history run and one current run")
-    history = [_load_global_stats(spark, d, stats) for d in run_dirs[:-1]]
-    current = _load_global_stats(spark, run_dirs[-1], stats)
+    history = [_load_global_stats(d, stats) for d in run_dirs[:-1]]
+    current = _load_global_stats(run_dirs[-1], stats)
     return _score(history, current, k, min_history, rel_tol)
 
 
@@ -129,179 +130,32 @@ def _score(
     return anomalies
 
 
-METRICS_SCHEMA = (
-    "run_id string, table string, part string, column string, stat string, "
-    "value string, ts double, batch_id string"
-)
-
-
-class MetricsRepository:
+class MetricsRepository(RunTable):
     """One append-mode metrics table spanning validation runs — the Deequ
     ``MetricsRepository`` analogue. Each profiled run appends its long-format
     stat rows tagged with (run_id, ts, batch_id); anomaly checks and ad-hoc
     metric series then need one scan of one table instead of a directory per
-    run.
-
-    Storage mirrors :class:`unify_spark.plans.audit.AuditLog`'s dual route:
-    an Iceberg catalog table when the target routes to a configured catalog
-    (snapshot-isolated appends; retention is DELETE WHERE run_id), else an
-    append-only parquet directory of one file per batch. Appends are
-    driver-side pyarrow — the table is metadata-sized (runs × tables ×
-    partitions × columns × stats), so a Spark write job would cost more
-    scheduling than data — wrapped in the shared retry taxonomy with a
-    per-append batch_id minted ONCE, so an ambiguous failure retried after a
-    successful commit rewrites the same file (filesystem) or is skipped when
-    the batch is already visible (catalog): no double-counted history.
+    run. Storage, retry-idempotent appends and per-run deletes are
+    :class:`~unify_spark.plans.runtable.RunTable`'s.
     """
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _catalog_table(self) -> bool:
-        from unify_spark.sources import iceberg as ice
-
-        return ice.routes_to_catalog(self.spark, self.path)
-
-    def _exists(self) -> bool:
-        if self._catalog_table():
-            return self.spark.catalog.tableExists(self.path)
-        return os.path.exists(self.path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
-        )
-
-    def read(self):
-        """The full metrics table as a DataFrame (empty with the right
-        schema when nothing has been appended)."""
-        if not self._exists():
-            return self.spark.createDataFrame([], METRICS_SCHEMA)
-        if self._catalog_table():
-            return self.spark.table(self.path)
-        return self.spark.read.schema(METRICS_SCHEMA).parquet(self.path)
+    SCHEMA = T.StructType(
+        [T.StructField("run_id", T.StringType())]
+        + [T.StructField(c, T.StringType()) for c in STAT_COLUMNS]
+        + [T.StructField("ts", T.DoubleType()), T.StructField("batch_id", T.StringType())]
+    )
+    FILE_PREFIX = "metrics"
 
     def append(self, stats, run_id: str, max_retries: int = 5, backoff_s: float = 0.2) -> None:
-        """Append one run's profile rows (the long-format output of
-        ``profile_table`` — a DataFrame or an iterable of (table, part,
-        column, stat, value) tuples) tagged with ``run_id``. The stats frame
-        is collected driver-side first: profile output is aggregate state,
-        not data."""
-        import uuid
-
-        from unify_spark.plans.retry import with_retries
-
-        if hasattr(stats, "collect"):
-            rows = [tuple(r) for r in stats.select("table", "part", "column", "stat", "value").collect()]
-        else:
-            rows = [tuple(r) for r in stats]
-        if not rows:
-            return
-        batch = uuid.uuid4().hex
-        attempts = [0]
-
-        def once():
-            attempts[0] += 1
-            return self._append_once(rows, run_id, batch, is_retry=attempts[0] > 1)
-
-        return with_retries(once, max_retries=max_retries, base_backoff_s=backoff_s)
-
-    def _append_once(
-        self, rows: list[tuple], run_id: str, batch: str, is_retry: bool = False
-    ) -> None:
-        import time
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql import functions as F
-
-        from unify_spark.sources import iceberg as ice
-
-        now = time.time()
-        tbl = pa.table(
-            {
-                "run_id": [run_id] * len(rows),
-                "table": [r[0] for r in rows],
-                "part": [r[1] for r in rows],
-                "column": [r[2] for r in rows],
-                "stat": [r[3] for r in rows],
-                "value": [None if r[4] is None else str(r[4]) for r in rows],
-                "ts": [now] * len(rows),
-                "batch_id": [batch] * len(rows),
-            },
-            schema=pa.schema(
-                [
-                    ("run_id", pa.string()),
-                    ("table", pa.string()),
-                    ("part", pa.string()),
-                    ("column", pa.string()),
-                    ("stat", pa.string()),
-                    ("value", pa.string()),
-                    ("ts", pa.float64()),
-                    ("batch_id", pa.string()),
-                ]
-            ),
-        )
-        if self._catalog_table():
-            if is_retry and self.spark.catalog.tableExists(self.path):
-                already = (
-                    self.spark.table(self.path)
-                    .where(F.col("batch_id") == batch)
-                    .limit(1)
-                    .count()
-                )
-                if already:
-                    return
-            ice.append_rows(
-                self.spark,
-                self.spark.createDataFrame(tbl.to_pylist(), METRICS_SCHEMA),
-                self.path,
-            )
-            return
-        os.makedirs(self.path, exist_ok=True)
-        pq.write_table(tbl, os.path.join(self.path, f"metrics-{batch}.parquet"))
-
-    def runs(self) -> list[str]:
-        """Distinct run_ids ordered by first-seen append time — the history
-        axis for ``repo_anomalies``. Driver-side read (metadata-sized)."""
-        if not self._exists():
-            return []
-        first_ts: dict[str, float] = {}
-        for rid, ts in self._iter_columns(["run_id", "ts"]):
-            if rid not in first_ts or ts < first_ts[rid]:
-                first_ts[rid] = ts
-        return [rid for rid, _ in sorted(first_ts.items(), key=lambda kv: (kv[1], kv[0]))]
-
-    def _iter_columns(self, columns: list[str]) -> list[tuple]:
-        if self._catalog_table():
-            return [tuple(r) for r in self.spark.table(self.path).select(*columns).collect()]
-        import pyarrow.dataset as ds
-
-        tbl = ds.dataset(self.path, format="parquet").to_table(columns=columns)
-        return list(zip(*(tbl.column(c).to_pylist() for c in columns)))
-
-    def delete_run(self, run_id: str) -> None:
-        """Drop one run's metric rows. Catalog route: `DELETE WHERE run_id`
-        (snapshot-isolated). Parquet route: every append wrote one
-        `metrics-<batch>.parquet` file carrying exactly one run's rows, so
-        deletion is per-file — no table rewrite, O(files of that run)."""
-        if self._catalog_table():
-            from unify_spark.sources.iceberg import delete_run_sql
-
-            self.spark.sql(delete_run_sql(self.path, run_id))
-            return
-        if not os.path.exists(self.path):
-            return
-        import pyarrow.dataset as ds
-
-        dataset = ds.dataset(self.path, format="parquet")
-        for frag in dataset.get_fragments():
-            rids = frag.to_table(columns=["run_id"]).column("run_id").to_pylist()
-            if rids and all(r == run_id for r in rids):
-                os.remove(frag.path)
-            elif run_id in rids:  # defensive: mixed file (not written by us)
-                raise ValueError(
-                    f"{frag.path} mixes runs; refusing partial file delete"
-                )
+        """Append one run's profile rows — (table, part, column, stat, value)
+        tuples, the long-format output of ``profile_table`` — tagged with
+        ``run_id``."""
+        rows = [
+            {"run_id": run_id, "table": t, "part": p, "column": c, "stat": s,
+             "value": None if v is None else str(v)}
+            for t, p, c, s, v in stats
+        ]
+        super().append(rows, max_retries=max_retries, backoff_s=backoff_s)
 
     def prune(self, keep_last: int) -> list[str]:
         """Retention: drop every run except the newest ``keep_last``,
@@ -320,17 +174,24 @@ class MetricsRepository:
     ) -> dict[str, dict[tuple[str, str, str], float]]:
         """{run_id: {(table, column, stat): value}} for global (part='*')
         scalar rows — one scan serving every run's envelope input."""
-        out: dict[str, dict[tuple[str, str, str], float]] = {}
-        for rid, part, table, column, stat, value in self._iter_columns(
-            ["run_id", "part", "table", "column", "stat", "value"]
-        ):
-            if part != "*" or stat not in stats or value is None:
-                continue
-            try:
-                out.setdefault(rid, {})[(table, column, stat)] = float(value)
-            except ValueError:
-                continue  # sketch arrays and other non-scalar stats
-        return out
+        by_run: dict[str, list[tuple]] = {}
+        for rid, *row in self.rows(["run_id", *STAT_COLUMNS]):
+            by_run.setdefault(rid, []).append(row)
+        return {rid: _global_scalars(rows, stats) for rid, rows in by_run.items()}
+
+
+def write_profile_stats(
+    stats: DataFrame, path: str, metrics_repo: str | None, run_id: str
+) -> None:
+    """The one stats sink of ``profile`` and ``validate --profile``: collect
+    ``profile_table``'s rows once (aggregate state, not data), append them
+    to the metrics repository at ``metrics_repo`` when one is given, and
+    append the same rows to the parquet sidecar at ``path``."""
+    spark = stats.sparkSession
+    rows = stats.collect()
+    if metrics_repo is not None:
+        MetricsRepository(spark, metrics_repo).append(rows, run_id)
+    spark.createDataFrame(rows, stats.schema).coalesce(1).write.mode("append").parquet(path)
 
 
 def repo_anomalies(

@@ -239,7 +239,7 @@ def latest_run_id(spark: SparkSession, baseline_out_dir: str) -> str:
 
     audit = AuditLog(spark, os.path.join(baseline_out_dir, "audit"))
     best: tuple[float, str] | None = None
-    for run_id, status, ts in audit._read_columns(["run_id", "status", "ts"]):
+    for run_id, status, ts in audit.rows(["run_id", "status", "ts"]):
         if status == "done" and (best is None or ts > best[0]):
             best = (ts, run_id)
     if best is None:

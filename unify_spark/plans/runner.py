@@ -613,25 +613,16 @@ class ValidationRunner:
         MetricsRepository` (parquet dir or Iceberg table) so trailing-window
         anomaly checks scan ONE table instead of one sidecar per run."""
         from unify_spark.operators.profile import hll_sketches, profile_table
+        from unify_spark.plans.history import write_profile_stats
 
-        repo = None
-        if metrics_repo is not None:
-            from unify_spark.plans.history import MetricsRepository
-
-            repo = MetricsRepository(self.spark, metrics_repo)
         exclude = exclude or {}
         for name, df in tables.items():
             part = self.ctx.part_col if self.ctx.part_col in df.columns else None
             excl = exclude.get(name, ["bytes"])
             stats = profile_table(df, name, part_col=part, exclude=excl)
-            if repo is not None:
-                stats = stats.persist()
-                repo.append(stats, self.ctx.run_id)
-            stats.coalesce(1).write.mode("append").parquet(
-                os.path.join(self.out_dir, "profile")
+            write_profile_stats(
+                stats, os.path.join(self.out_dir, "profile"), metrics_repo, self.ctx.run_id
             )
-            if repo is not None:
-                stats.unpersist()
             if sketches:
                 cols = [
                     n

@@ -120,8 +120,11 @@ def is_table_identifier(path_or_name: str, catalogs: list[str] | None = None) ->
 def routes_to_catalog(spark: SparkSession, target: str) -> bool:
     """True when ``target`` should execute against an Iceberg catalog:
     shaped like an identifier AND its first component names a catalog
-    configured on this session."""
-    return is_table_identifier(target, catalogs=iceberg_catalogs(spark))
+    configured on this session. A path never routes to a catalog, so it
+    skips the session probe."""
+    return is_table_identifier(target) and is_table_identifier(
+        target, catalogs=iceberg_catalogs(spark)
+    )
 
 
 def _q_table(table: str) -> str:

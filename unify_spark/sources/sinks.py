@@ -1,9 +1,10 @@
 """Sinks: run retraction.
 
 Reference parity: retraction of a dataset by tx-log scan
-(import/retract.clj:84-153) → ``retract_run``: drop all audit/violation
-state for a run_id (Iceberg row-level delete in production; file rewrite on
-plain parquet).
+(import/retract.clj:84-153) → ``retract_run``: delete a run's audit rows
+(its audit files on the parquet route, ``AuditLog.delete_run``) and the
+violation evidence. The evidence is not yet keyed by run, so retract still
+removes every run's ``violations/`` and ``violating_keys/`` (ROADMAP D10).
 """
 
 from __future__ import annotations
@@ -11,24 +12,16 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def retract_run(spark: SparkSession, out_dir: str, run_id: str) -> int:
     """Undo a run: remove its audit rows, violation evidence and violating
-    keys. Returns the number of audit rows retracted. (Iceberg: DELETE
-    WHERE run_id = ...)"""
-    audit_path = os.path.join(out_dir, "audit")
-    removed = 0
-    if os.path.exists(audit_path):
-        audit = spark.read.parquet(audit_path)
-        removed = audit.filter(F.col("run_id") == run_id).count()
-        if removed:
-            kept = audit.filter(F.col("run_id") != run_id)
-            tmp = audit_path + ".tmp"
-            kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(audit_path)
-            os.rename(tmp, audit_path)
+    keys. Returns the number of audit rows retracted. Other runs' audit
+    files are left untouched and no Spark job starts."""
+    from unify_spark.plans.audit import AuditLog
+
+    removed = AuditLog(spark, os.path.join(out_dir, "audit")).delete_run(run_id)
     for sub in ("violations", "violating_keys"):
         p = os.path.join(out_dir, sub)
         if os.path.exists(p):

@@ -99,7 +99,7 @@ def validate_stream_foreach_batch(
             from unify_spark.plans.history import MetricsRepository
 
             repo = MetricsRepository(batch_df.sparkSession, metrics_repo)
-            if bctx.run_id not in repo.runs():
+            if not repo.rows(["run_id"], bctx.run_id):
                 runner.profile(
                     {stream_table_name: batch_df},
                     sketches=False,
